@@ -94,9 +94,8 @@ object Bench {
       // measured 135.8 s without the collect vs 123.3 s with it, and the
       // with-GC run lands the r12-common subset at exactly the r12 pace
       // (100.1 vs 99.8 s) — the ~8% "catalog-size churn smear" was
-      // precisely this accumulation. SPARK_GRAFT_GC=0 restores the old
-      // behavior for methodology A/Bs.
-      if (!sys.env.get("SPARK_GRAFT_GC").contains("0")) System.gc()
+      // precisely this accumulation.
+      System.gc()
       t
     }
 
@@ -238,11 +237,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     // `repeats` full round-robin passes; per-query median across passes
-    // (any failed run fails the query). SPARK_GRAFT_INTERLEAVE=0 switches
-    // to consecutive per-query repeats — the methodology CONTROL: run both
-    // on one build to attribute a drift to scheduling (warm page/fixture
-    // caches between back-to-back samples) vs the plan itself.
-    val interleave = sys.env.get("SPARK_GRAFT_INTERLEAVE").forall(_ != "0")
+    // (any failed run fails the query).
     // INTRA-PASS CALIB TRACK (r18 verdict task 2): one calib sample per
     // pass boundary cannot see a load window that opens and closes WITHIN
     // a pass (~80 s of queries at sf0.1) — r18 shipped 19 false
@@ -255,8 +250,7 @@ object Bench {
     // instead of needing a manual A/B/A. Probe cost (~0.65 s idle, ~10
     // probes per 169-query pass) is wall-clock only — it is never added
     // to any query's measured time.
-    val calibEvery = math.max(1,
-      sys.env.get("SPARK_GRAFT_CALIB_EVERY").map(_.trim.toInt).getOrElse(20))
+    val calibEvery = 20
     def bracketCtx(marks: Seq[(Int, Double)]): Map[String, Double] =
       names.zipWithIndex.map { case (n, i) =>
         val before = marks.filter(_._1 <= i).lastOption.map(_._2)
@@ -279,25 +273,7 @@ object Bench {
       (times.toMap, bracketCtx(marks.toSeq))
     }
     val passPairs: Seq[(Map[String, Double], Map[String, Double])] =
-      if (interleave) (1 to repeats).map(_ => runPass())
-      else {
-        // methodology control (consecutive repeats): one calib track over
-        // the whole sweep; a query's repeats share one bracketed context
-        val marks = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
-        def mark(i: Int): Unit =
-          try { val c = calibOnce(); calibSamples += c; marks += ((i, c)) }
-          catch { case _: Throwable => () }
-        mark(0)
-        val runs = names.zipWithIndex.map { case (n, i) =>
-          val rs = Seq.fill(repeats)(onceClean(n))
-          if ((i + 1) % calibEvery == 0 && i + 1 < names.size) mark(i + 1)
-          n -> rs
-        }
-        mark(names.size)
-        val ctx = bracketCtx(marks.toSeq)
-        (0 until repeats).map(i =>
-          (runs.map { case (n, rs) => n -> rs(i) }.toMap, ctx))
-      }
+      (1 to repeats).map(_ => runPass())
     val passes: Seq[Map[String, Double]] = passPairs.map(_._1)
     val results = names.map { n =>
       val runs = passes.map(_(n))
@@ -516,7 +492,7 @@ object Bench {
         ",\"ratio\":" + j(ratio) + ",\"suspect\":" + sus + "}"
     }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","nq":${results.size},"queries":$fullQs,"spread":$spreadJson,"spread_suspects":[${spreadSuspects.map("\"" + _ + "\"").mkString(",")}],"rows_per_sec":$tp,"rows_per_sec_floor_ok":$fv,"floor_status":$fs,"floor_retry":$floorRetryJson,"ceiling_ok":$cv,$loadJson,"repeats":$repeats,"interleaved":$interleave,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","nq":${results.size},"queries":$fullQs,"spread":$spreadJson,"spread_suspects":[${spreadSuspects.map("\"" + _ + "\"").mkString(",")}],"rows_per_sec":$tp,"rows_per_sec_floor_ok":$fv,"floor_status":$fs,"floor_retry":$floorRetryJson,"ceiling_ok":$cv,$loadJson,"repeats":$repeats,"interleaved":true,"sf":"$sfDir"}"""
     // a SPARK_GRAFT_ONLY dev loop must not clobber the committed full-run
     // record with a partial map
     val fullName = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_DEV.json"
@@ -527,7 +503,7 @@ object Bench {
     // few names); per-query min/max/ratio live in the full artifact
     val susHead = spreadSuspects.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${j(total)},"unit":"sec","queries":$qs,"rows_per_sec":$tp,"rows_per_sec_floor_ok":$fv,"floor_status":$fs,"floor_retry":$floorRetryJson,"load_suspect":$loadSuspect,"calib_median_s":${j(calibMedian)},"spread_suspect_n":${spreadSuspects.size},"spread_suspects_head":$susHead,"repeats":$repeats,"interleaved":$interleave,"nq":${results.size},"full":"$fullName","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${j(total)},"unit":"sec","queries":$qs,"rows_per_sec":$tp,"rows_per_sec_floor_ok":$fv,"floor_status":$fs,"floor_retry":$floorRetryJson,"load_suspect":$loadSuspect,"calib_median_s":${j(calibMedian)},"spread_suspect_n":${spreadSuspects.size},"spread_suspects_head":$susHead,"repeats":$repeats,"interleaved":true,"nq":${results.size},"full":"$fullName","sf":"$sfDir"}"""
     if (line.length > 1800)
       System.err.println(s"WARNING: bench summary line is ${line.length} chars; driver tail window is ~2000")
     println(line)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Dedup, Similarity, TextOps}
-import graft.core.Tables
+import graft.core.{Tables, Tmp}
 import graft.ops.{AsOfJoin, Sessionize}
 
 /** Relational + LLM-data-pipeline query catalog (dedup, similarity, text
@@ -593,7 +593,7 @@ object QueriesAnalytics {
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
     // pid-unique: concurrent sessions (Verify + Bench) must not race
     // one overwrite-vs-read index path
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${ProcessHandle.current().pid()}"
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     graft.analytics.Ivf.materialize(e.filter(col("vec_id") =!= 0), "vec_id",
       "embedding", model, path)
     graft.analytics.Ivf.probeMaterialized(s, path, "vec_id", "embedding",
@@ -628,7 +628,7 @@ object QueriesAnalytics {
     val model = graft.analytics.Ivf.Model.parse(
       graft.analytics.Ivf.train(old, "vec_id", "embedding", k = 8, iters = 5).serialize)
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfapp_" +
-      s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${ProcessHandle.current().pid()}"
+      s"${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     graft.analytics.Ivf.materialize(old, "vec_id", "embedding", model, path)
     graft.analytics.Ivf.assign(fresh, "vec_id", "embedding", model)
       .write.mode("append").partitionBy("cell").parquet(path)

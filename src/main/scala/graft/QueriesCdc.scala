@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{RowKey, Tables}
+import graft.core.{RowKey, SessionConf, Tables, Tmp}
 import graft.changelog.Changelog
 import graft.encode.{CommonFormatJson, SqlDml}
 import graft.filters.RowFilter
@@ -46,11 +46,8 @@ object QueriesCdc {
     * stores paying per-batch open/commit; a 100 TB deployment sets this
     * to its executor width at FIRST launch of the job, same knob.
     */
-  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", old)
-  }
+  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    SessionConf.scoped(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Run a stateful stream on the RocksDB state store provider — the
     * production backend for large state (changelog-file commits instead
@@ -68,32 +65,25 @@ object QueriesCdc {
     * 100 TB state the trade only widens toward RocksDB: snapshot-file
     * cost scales with state size, changelog commits with the delta.
     */
-  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val set = Seq(
+  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T =
+    SessionConf.scoped(s,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
       "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "512",
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
       // r20: commit = changelog delta upload instead of a full snapshot
-      // zip per store per batch. The r20 micro-batch phase profile
-      // (tools.R20StreamProf, OPTIMIZATION_r20.md) attributed the bulk
-      // of addBatch's non-compute cost to state commits — summed across
-      // instances q_stream_neardup paid 29.8 s of snapshot commits in
-      // one replay, 4.9 s with changelog commits. Snapshot construction
-      // moves to background maintenance, which a bounded replay never
-      // pays. This is the production setting for commit-latency-bound
-      // streams; checkpoint format changes, but every checkpoint here is
-      // per-run scratch (Tmp.scratchDir) so nothing persisted crosses a
-      // version boundary.
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val old = set.map { case (k, _) => k -> s.conf.getOption(k) }
-    set.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      // zip per store per batch. The r20 micro-batch phase profile (`git
+      // show 9f24135:src/main/scala/graft/tools/R20StreamProf.scala`)
+      // attributed the bulk of addBatch's non-compute cost to state
+      // commits — summed across instances q_stream_neardup paid 29.8 s
+      // of snapshot commits in one replay, 4.9 s with changelog commits.
+      // Snapshot construction moves to background maintenance, which a
+      // bounded replay never pays. This is the production setting for
+      // commit-latency-bound streams; checkpoint format changes, but
+      // every checkpoint here is per-run scratch (Tmp.scratchDir) so
+      // nothing persisted crosses a version boundary.
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(body)
 
   /** Fresh checkpoint dir for one bounded replay (the replay must start
     * from scratch each run), deleted once the stream terminates — bench
@@ -149,7 +139,7 @@ object QueriesCdc {
   // dir refreshed mid-process, land at distinct paths instead of the
   // stale memo entry serving the other dataset's fixture
   private[graft] def fixturePath(tag: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${graft.core.DatasetKey.hashOf(dir)}_${ProcessHandle.current().pid()}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${Tmp.dirKey(dir)}_${graft.core.DatasetKey.hashOf(dir)}_${ProcessHandle.current().pid()}"
 
   /** S1+F1: snapshot scan with pushed-down row filter + projection. */
   def snapshotScan(s: SparkSession, dir: String): DataFrame =
@@ -474,7 +464,7 @@ object QueriesCdc {
     // Encoded as 16 rotated segment files in parallel (see buildBinaryLog)
     // — sf1 measured the single-stream encode at 34 s; the rotated
     // encode is the same bytes per segment, same replay order, same hash.
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_binlog_binary_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${ProcessHandle.current().pid()}.binlog"
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_binlog_binary_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}.binlog"
     val nEvents = buildBinaryLog(s, dir, path, segments = 16)
     binlogReplayProjection(drainToParquet(s,
       s.readStream.format("graft-binlog")
@@ -557,7 +547,7 @@ object QueriesCdc {
     // per invocation into java.io.tmpdir (ambient /tmp pressure measurably
     // skewed multimodal rows in r11 — see BASELINE.md ImageIO addendum)
     val work = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-ddl-socket-${dir.replaceAll("[^a-zA-Z0-9]", "_")}-${ProcessHandle.current().pid()}")
+      s"graft-ddl-socket-${Tmp.dirKey(dir)}-${ProcessHandle.current().pid()}")
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(work.toString), true)
     java.nio.file.Files.createDirectories(work)
@@ -573,14 +563,9 @@ object QueriesCdc {
       // rows with seq < ddlSeq were governed by the pre-ALTER schema.
       var ddlSeq = Long.MaxValue
       var preCols = v1.columns.length
-      val prof = sys.props.contains("graft.ddl.prof")
-      val tStart = System.nanoTime()
-      def mark(what: String): Unit = if (prof)
-        System.err.println(f"[ddlprof] $what%-28s ${(System.nanoTime() - tStart) / 1e9}%.3f")
       val loop = new SchemaRestartLoop(repull =
         () => throw new IllegalStateException("ADD COLUMN applies locally; no repull"))
       val (_, restarts) = loop.run(v1, (schema, signal) => {
-        mark(s"launch cols=${schema.columns.length}")
         val struct = Schema.toStructType(schema)
         val launchCols = schema.columns.length
         def write(b: DataFrame, batchId: Long): Unit =
@@ -625,7 +610,6 @@ object QueriesCdc {
             // batch pays the extra rewrite and the wall time is a wash
             // here); in production DDL touches 1 batch in thousands and
             // every other batch keeps the single-job shape.
-            mark(s"batch $batchId begin")
             val obs = new org.apache.spark.sql.Observation(
               s"graft-ddl-$batchId-${System.nanoTime()}")
             val observed = batch0.observe(obs,
@@ -652,17 +636,14 @@ object QueriesCdc {
                 case SchemaFlow.NotSchemaRelated => ()
               }
             }
-            mark(s"batch $batchId end")
           }.start()
       })
-      mark("loop done")
       require(restarts == 1, s"expected exactly one schema restart, got $restarts")
       // explicit per-batch dirs, not a glob: FileStreamSink.hasMetadata
       // stats the literal glob string first and logs a noisy (harmless)
       // FileNotFoundException stack on every run
       val batchDirs = new java.io.File(dataDir).listFiles()
         .filter(_.getName.startsWith("batch=")).map(_.getPath).sorted
-      mark("read back")
       // explicit schema: every batch dir writes these 8 columns, so the
       // footer-merge inference pass (a listing + footer-read job over all
       // batch dirs before the real scan) is pure overhead
@@ -767,7 +748,7 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_topic_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_topic_${Tmp.dirKey(dir)}"
     // fresh topic per run (produce appends by contract)
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(topicDir), true)
@@ -804,7 +785,7 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_rate_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_rate_${Tmp.dirKey(dir)}"
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(topicDir), true)
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
@@ -974,7 +955,7 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_group_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_group_${Tmp.dirKey(dir)}"
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(topicDir), true)
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
@@ -1051,7 +1032,7 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_gstream_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_gstream_${Tmp.dirKey(dir)}"
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(topicDir), true)
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
@@ -1277,10 +1258,11 @@ object QueriesCdc {
     * keyToNumValues/keyWithIndexToValue), so width is a real trade: at
     * fixture scale 4 beat 8 (16 store open/commit cycles per batch
     * already; 3.25 -> 2.97 s measured r13), but the r14 sf10 probe
-    * (tools.StreamProf) showed the flip side — 10M-row batches through 4
-    * partitions serialize the probe side: 170 s of batch time at width 4
-    * vs 52 s at width 32, while width-matched scaling is SUB-linear per
-    * decade (9.4 s -> 52 s for 10x). So size from the staged source like
+    * (`git show 9f24135:src/main/scala/graft/tools/StreamProf.scala`)
+    * showed the flip side — 10M-row batches through 4 partitions
+    * serialize the probe side: 170 s of batch time at width 4 vs 52 s
+    * at width 32, while width-matched scaling is SUB-linear per decade
+    * (9.4 s -> 52 s for 10x). So size from the staged source like
     * a launcher would from expected throughput: ~1 state partition per
     * MiB of source, clamped to [4, 32] (local fixture scale .. local[32]
     * width). Result rows are partitioning-invariant — the sf1 hash gate
@@ -1309,16 +1291,12 @@ object QueriesCdc {
     // with it off for an inner join (oracle + stream≡batch spec gate
     // this); an OUTER stream-stream join would need it (null-extended
     // rows emit at eviction) and must not copy this setting.
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try withStatePartitions(s, joinStateWidth(src)) {
-      withRocksDbState(s) {
-        drainToParquet(s, joined, "sjoin_out", dir, "graft-sjoin-ckpt")
+    SessionConf.scoped(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      withStatePartitions(s, joinStateWidth(src)) {
+        withRocksDbState(s) {
+          drainToParquet(s, joined, "sjoin_out", dir, "graft-sjoin-ckpt")
+        }
       }
-    } finally old match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Dedup, Similarity}
-import graft.core.{Spread, Tables}
+import graft.core.{Spread, Tables, Tmp}
 
 /** Third query batch: embedding near-dup, term statistics, pivots,
   * percentiles. Same determinism conventions as [[QueriesCdc]].
@@ -193,7 +193,7 @@ object QueriesExtra {
     val src = streamFixtures.computeIfAbsent(
       s"shh_$dk", _ => {
         val p = s"${System.getProperty("java.io.tmpdir")}/graft_shh_" +
-          s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${dk.takeRight(16)}_${ProcessHandle.current().pid()}"
+          s"${Tmp.dirKey(dir)}_${dk.takeRight(16)}_${ProcessHandle.current().pid()}"
         docs(s, dir).select(col("doc_id"), col("text"))
           .repartition(3).write.mode("overwrite").parquet(p)
         p

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Ivf, Similarity}
-import graft.core.Tables
+import graft.core.{SessionConf, Tables}
 
 /** Graph / evaluation-layer operators for the training-data pipeline:
   * iterative PageRank over an entity graph, k-NN auto-labeling of a
@@ -48,7 +48,7 @@ object QueriesGraph {
 
   /** Shuffle width for the graph loops, derived from the measured edge
     * volume instead of a hand-set knob (r17 verdict task 4 — the sf100
-    * probe needed SPARK_GRAFT_SHUFFLE=256 rediscovered by hand; the same
+    * probe needed a width of 256 rediscovered by hand; the same
     * launch-time-sizing stance as the r14 stream_join width fix).
     *
     * Anchor: the completing r17 sf100 run sustained 1.17B directed edges
@@ -67,6 +67,12 @@ object QueriesGraph {
     math.min(1024L, math.max(session, rounded)).toInt
   }
 
+  /** Directed-edge count up to which PageRank runs as the driver
+    * fixed-point loop ([[driverPagerank]]) instead of distributed
+    * rounds, if the graph also passes the DriverBudget bytes gate.
+    */
+  private val PagerankDriverEdgeThreshold = 2500000L
+
   private def pagerankBody(s: SparkSession, dir: String): DataFrame = {
     // AUTO-SHAPE: size the loop's shuffle width BEFORE the expensive
     // adjacency build from a cheap upper bound on the directed-edge count
@@ -81,16 +87,13 @@ object QueriesGraph {
     // the correct carrier. SINGLE-CALLER ASSUMPTION (r18 ADVICE item 4):
     // the mutation is visible to any concurrent query on the same
     // SparkSession for the duration of this body — the catalog harnesses
-    // (Verify/Bench/OneRun) run queries strictly sequentially, so this is
+    // (Verify/Bench) run queries strictly sequentially, so this is
     // latent only; a caller that shares a session across threads must
     // hand this body an isolated `s.newSession()` (same SparkContext,
     // cloned conf) so the graph-sized width never leaks to its peers.
     val estDirected = 2L * Tables.lineitem(s, dir).count()
-    val widthKey = "spark.sql.shuffle.partitions"
-    val prevWidth = s.conf.get(widthKey)
-    s.conf.set(widthKey, graphShuffleWidth(s, estDirected).toString)
-    try pagerankShaped(s, dir)
-    finally s.conf.set(widthKey, prevWidth)
+    val width = graphShuffleWidth(s, estDirected).toString
+    SessionConf.scoped(s, "spark.sql.shuffle.partitions" -> width)(pagerankShaped(s, dir))
   }
 
   private def pagerankShaped(s: SparkSession, dir: String): DataFrame = {
@@ -117,15 +120,11 @@ object QueriesGraph {
     // by src) — the round's only shuffle is the node aggregation.
     // AQE's in-round value here is marginal (fixed-width long keys, no
     // skew-join rewrite for aggs), so the trade is one-sided.
-    def trunc(df: DataFrame): DataFrame = {
-      val k = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(k)
-      s.conf.set(k, "false")
-      try {
+    def trunc(df: DataFrame): DataFrame =
+      SessionConf.scoped(s, "spark.sql.adaptive.enabled" -> "false") {
         if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
         else df.localCheckpoint()
-      } finally s.conf.set(k, prev)
-    }
+      }
     // BULK variant (r17 cliff 6): the edge and adjacency tables are
     // corpus-proportional (sf100: ~1.17B directed edges ≈ 19 GB
     // deserialized), and the default localCheckpoint storage
@@ -136,16 +135,12 @@ object QueriesGraph {
     // DISK_ONLY (serialized, incrementally written — no unroll pinning):
     // 10 sequential re-reads cost far less than the contention, and the
     // node-count-sized rank state keeps the fast in-memory default.
-    def truncBulk(df: DataFrame): DataFrame = {
-      val k = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(k)
-      s.conf.set(k, "false")
-      try {
+    def truncBulk(df: DataFrame): DataFrame =
+      SessionConf.scoped(s, "spark.sql.adaptive.enabled" -> "false") {
         if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
         else df.localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      } finally s.conf.set(k, prev)
-    }
+      }
     // NO .distinct() here (r17 cliff 6, third lesson): a global distinct
     // plans a map-side partial hash aggregation whose per-task maps +
     // spill sorters, 32 concurrent, exhausted the heap at sf100's 600M
@@ -258,8 +253,6 @@ object QueriesGraph {
     val deg = adj.groupBy(col("src"))
       .agg(sum(size(col("dsts"))).cast("long").as("deg"))
     val nDirected = deg.agg(sum(col("deg"))).head().getLong(0)
-    val driverCap = sys.props.get("graft.pagerank.driverEdgeThreshold")
-      .map(_.toLong).getOrElse(2500000L)
     val integralKeys = adj.schema("src").dataType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
       case _ => false
@@ -270,7 +263,7 @@ object QueriesGraph {
     // path re-derives its edge list from the adjacency checkpoint (a
     // narrow explode — the join is never recomputed).
     lazy val edgesFromAdj = adj.select(col("src"), explode(col("dsts")).as("dst"))
-    if (nDirected <= driverCap && integralKeys &&
+    if (nDirected <= PagerankDriverEdgeThreshold && integralKeys &&
         graft.core.DriverBudget.fitsDriver(edgesFromAdj, nDirected))
       return driverPagerank(s, edgesFromAdj, iters)
     val nTotal = deg.agg(count(lit(1)).as("cnt"))

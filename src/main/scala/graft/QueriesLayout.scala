@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SessionConf, Tables, Tmp}
 
 /** Physical-layout operators: the data-ORGANIZATION layer that decides
   * whether a 100 TB table is scannable — bucketed co-located joins (the
@@ -24,8 +24,6 @@ import graft.core.Tables
   * READ side, the way a production job reads a layout written once.
   */
 object QueriesLayout {
-
-  private def dirKey(dir: String) = dir.replaceAll("[^a-zA-Z0-9]", "_")
 
   // Memo key = fixture path + the SOURCE dataset's content key (file
   // sizes + mtimes): a dataset refreshed under the same dir re-runs the
@@ -52,11 +50,11 @@ object QueriesLayout {
     */
   def bucketJoin(s: SparkSession, dir: String): DataFrame = {
     val pid = ProcessHandle.current().pid()
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_bkt_${dirKey(dir)}_$pid"
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_bkt_${Tmp.dirKey(dir)}_$pid"
     def ensureTable(name: String, df: DataFrame, keyCol: String): String = {
       // content-hash suffix: a refreshed dataset re-lands the bucketed
       // table instead of reusing the stale catalog entry
-      val table = s"graft_bkt_${name}_${dirKey(dir)}_${graft.core.DatasetKey.hashOf(dir)}"
+      val table = s"graft_bkt_${name}_${Tmp.dirKey(dir)}_${graft.core.DatasetKey.hashOf(dir)}"
       if (!s.catalog.tableExists(table)) {
         df.write.mode("overwrite")
           .bucketBy(8, keyCol).sortBy(keyCol)
@@ -90,7 +88,7 @@ object QueriesLayout {
     * the predicate lands in PartitionFilters, not in post-scan Filter.
     */
   def partitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_partev_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_partev_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     ensureWritten(path, dir) {
       Tables.events(s, dir)
         .write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -186,10 +184,9 @@ object QueriesLayout {
     val sketch = {
       val items = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
       val bits = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-      val (prevI, prevB) = (s.conf.get(items), s.conf.get(bits))
-      s.conf.set(items, math.max(prevI.toLong, evalCount).toString)
-      s.conf.set(bits, math.max(prevB.toLong, numBits).toString)
-      try {
+      SessionConf.scoped(s,
+          items -> math.max(s.conf.get(items).toLong, evalCount).toString,
+          bits -> math.max(s.conf.get(bits).toLong, numBits).toString) {
         val registry = s.sessionState.functionRegistry
         registry.createOrReplaceTempFunction("graft_bloom_agg",
           exprs => new BloomFilterAggregate(exprs.head,
@@ -200,7 +197,7 @@ object QueriesLayout {
         evalGrams
           .agg(call_function("graft_bloom_agg", xxhash64(col("gram"))).as("bf"))
           .head.getAs[Array[Byte]](0)
-      } finally { s.conf.set(items, prevI); s.conf.set(bits, prevB) }
+      }
     }
     // BROADCAST→SHUFFLE SWITCH for the exact verify: the survivors of the
     // bloom pre-prune are hits + ~1% false positives — small — but the
@@ -210,8 +207,9 @@ object QueriesLayout {
     // gram above it — the pruned stream's shuffle is survivor-sized, not
     // corpus-sized); this call site has the EXACT eval count in hand
     // (paid for sketch sizing), so no estimate is involved. Results are
-    // bit-identical either way — DecontScaleProbe proves both paths at
-    // 258M grams.
+    // bit-identical either way — a one-off probe (`git show
+    // 9f24135:src/main/scala/graft/tools/DecontScaleProbe.scala`) proved
+    // both paths at 258M grams.
     val verifySide = QueriesTraining.evalVerifySide(evalGrams, evalCount)
     grams.filter(col("doc_id") % 17 =!= 0)
       // sketch pre-prune (false positives possible), codegen'd bit probe
@@ -275,7 +273,7 @@ object QueriesLayout {
     * with a manifest version; `ensureWritten` is that fence here).
     */
   def cowUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_cow_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_cow_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     val v0 = s"$base/v0"
     val v1 = s"$base/v1"
     ensureWritten(base, dir) {
@@ -333,7 +331,7 @@ object QueriesLayout {
     * union schema.
     */
   def schemaMerge(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_schmerge_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_schmerge_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     ensureWritten(path, dir) {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"), col("event_type"))
@@ -365,7 +363,7 @@ object QueriesLayout {
     */
   def incrIndex(s: SparkSession, dir: String): DataFrame = {
     import graft.analytics.Dedup
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sigstore_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sigstore_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     ensureWritten(path, dir) {
       Dedup.minhashWideNative(
           Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0),
@@ -399,7 +397,7 @@ object QueriesLayout {
     * property (file counts shrink to ~slot count, cap honored).
     */
   private[graft] def compactionBase(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_compact_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_compact_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
 
   def compaction(s: SparkSession, dir: String): DataFrame = {
     val base = compactionBase(dir)
@@ -481,7 +479,7 @@ object QueriesLayout {
     * path — staged-but-never-published — is LayoutSpec's.
     */
   def wapPublish(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_wap_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_wap_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     ensureWritten(base, dir) {
       new java.io.File(base).mkdirs()
       val rollup = Tables.events(s, dir)
@@ -568,7 +566,7 @@ object QueriesLayout {
     * compaction ([[compaction]]) downstream.
     */
   def streamWap(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_swap_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_swap_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
     ensureWritten(base, dir) {
       val srcPath = s"$base/src"
       Tables.events(s, dir)
@@ -632,7 +630,7 @@ object QueriesLayout {
     * byte-identical → fingerprint-skipped.
     */
   private[graft] def versionDiffBase(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_vdiff_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_vdiff_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
 
   /** The diff kernel: changed-bucket detection off per-bucket fingerprints,
     * then a bucket-pruned full-outer key diff. Returns (changedBuckets,
@@ -709,7 +707,7 @@ object QueriesLayout {
   }
 
   private[graft] def vacuumBase(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_vac_${dirKey(dir)}_${ProcessHandle.current().pid()}"
+    s"${System.getProperty("java.io.tmpdir")}/graft_vac_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
 
   /** Snapshot expiry end-to-end: four growing versions of a rollup
     * table, vacuum retaining the latest two, then serve the CURRENT

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Tables, Tmp}
 import graft.encode.{AvroCodec, CfDecode, CommonFormatJson, MsgPackCodec}
 import graft.pipes.{CryptoStage, FileSink, Framing}
 
@@ -64,7 +64,7 @@ object QueriesPipes {
       MsgPackCodec.encodeEvent("insert", Seq(r.getLong(0)), r.getLong(0), 0L,
         Some(Seq("user_id" -> r.getLong(1), "value_cents" -> r.getLong(2))))
     }.toDF("value")
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_framed_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft_framed_${Tmp.dirKey(dir)}"
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(out), true)
     Framing.write(encoded, out, "value", gzip = true)
@@ -114,7 +114,7 @@ object QueriesPipes {
   def cryptoRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val producer = CryptoStage.generateKeyPair()
     val consumer = CryptoStage.generateKeyPair()
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_crypto_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft_crypto_${Tmp.dirKey(dir)}"
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(out), true)
     docs(s, dir)
@@ -135,7 +135,7 @@ object QueriesPipes {
     * GnuPG interop), decrypted task-side, read back and parsed.
     */
   def pgpRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_pgp_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft_pgp_${Tmp.dirKey(dir)}"
     org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(out), true)
     docs(s, dir)

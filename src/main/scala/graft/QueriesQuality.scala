@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, Tmp}
 
 /** Data-quality / audit query batch: the checks a production ingestion
   * pipeline runs continuously (SURVEY §2.5 O12 liveness is process-level;
@@ -179,7 +179,7 @@ object QueriesQuality {
     val src = streamFixtures.computeIfAbsent(
       s"sks_$dk", _ => {
         val p = s"${System.getProperty("java.io.tmpdir")}/graft_sks_" +
-          s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${dk.takeRight(16)}_${ProcessHandle.current().pid()}"
+          s"${Tmp.dirKey(dir)}_${dk.takeRight(16)}_${ProcessHandle.current().pid()}"
         events(s, dir).filter(col("user_id").isNotNull)
           .select(col("event_type"), col("user_id"), col("value"))
           .repartition(3).write.mode("overwrite").parquet(p)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, Tmp}
 
 /** Training-data curation batch: the corpus-hygiene operators an LLM data
   * pipeline runs between raw ingestion and tokenization — benchmark
@@ -36,18 +36,18 @@ object QueriesTraining {
     * pass only dominates once the corpus dwarfs the constant — the same
     * size-from-the-source decision as [[evalVerifySide]]'s
     * broadcast→shuffle switch and streamJoin's state width. Threshold
-    * overridable for probes via -Dgraft.pin.corpusMinBytes (default
-    * 2 MiB of documents parquet ≈ sf0.3; at sf1 the pin wins — the sf1
-    * A/B in OPTIMIZATION_r20.md carries the crossover numbers).
+    * [[PinCorpusMinBytes]] = 2 MiB of documents parquet ≈ sf0.3; an r20
+    * sf1 A/B reported the pin winning at sf1, but its numbers were never
+    * committed, so the crossover is not yet measured in-tree.
     */
+  private val PinCorpusMinBytes = 2L << 20
+
   private def pinModelIfCorpusLarge(df: DataFrame, dir: String): DataFrame = {
-    val minBytes = sys.props.get("graft.pin.corpusMinBytes")
-      .map(_.toLong).getOrElse(2L << 20)
     def size(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(size).sum
       else f.length()
     val corpusBytes = size(new java.io.File(s"$dir/documents.parquet"))
-    if (corpusBytes >= minBytes)
+    if (corpusBytes >= PinCorpusMinBytes)
       graft.core.CacheRegistry.register(
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else df
@@ -71,12 +71,14 @@ object QueriesTraining {
       .otherwise(array().cast("array<string>"))
 
   /** Physical-plan choice for an eval-gram verify join — NEVER semantics
-    * (both sides produce bit-identical output; DecontScaleProbe proves it
-    * at 258M grams): broadcast the eval side below the cap (default 50M
-    * grams ≈ a few GB of hash relation, under Spark's 8 GB ceiling),
-    * SHUFFLE_HASH above it. `estGrams` may be an exact count (bloomPrune
-    * already pays one for sketch sizing) or the memoized sampled estimate
-    * from [[estEvalGrams]], so callers without a count in hand pay two
+    * (both sides produce bit-identical output; a one-off probe proved it
+    * at 258M grams, `git show
+    * 9f24135:src/main/scala/graft/tools/DecontScaleProbe.scala`):
+    * broadcast the eval side below the cap (default 50M grams ≈ a few GB
+    * of hash relation, under Spark's 8 GB ceiling), SHUFFLE_HASH above
+    * it. `estGrams` may be an exact count (bloomPrune already pays one
+    * for sketch sizing) or the memoized sampled estimate from
+    * [[estEvalGrams]], so callers without a count in hand pay two
     * bounded jobs ONCE per (dataset, predicate), not a gram enumeration,
     * to pick a join strategy. Overridable for scale probes via
     * -Dgraft.decontaminate.broadcastMaxGrams.
@@ -106,7 +108,7 @@ object QueriesTraining {
     * limit stops the text scan after a few partitions — never a full-text
     * corpus read). The margin keeps the estimate deliberately HIGH: an
     * over-estimate flips to SHUFFLE_HASH early (proven bit-identical and
-    * faster at 258M grams — DecontScaleProbe); an under-estimate risks the
+    * faster at 258M grams, see [[evalVerifySide]]); an under-estimate risks the
     * broadcast ceiling.
     */
   private val evalGramEstCache =
@@ -1167,7 +1169,8 @@ object QueriesTraining {
         // r20: re-materialize the vocab every few merges. Round r's plan
         // otherwise stacks r replace-pairs over the checkpointed base, so
         // every round re-analyzes and re-compiles a linearly growing
-        // expression chain — the r20 trainer profile (tools.R20TrainerProf)
+        // expression chain — the r20 trainer profile
+        // (`git show 9f24135:src/main/scala/graft/tools/R20TrainerProf.scala`)
         // measured the per-round executor jobs at ~0.1 s (1 near-empty
         // task) while wall-minus-jobs driver time was ~0.5 s/round and
         // growing. The checkpoint is one ~50 ms job over the
@@ -1590,7 +1593,7 @@ object QueriesTraining {
     val src = streamFixtures.computeIfAbsent(
       s"sdsir_$sdk", _ => {
         val p = s"${System.getProperty("java.io.tmpdir")}/graft_sdsir_" +
-          s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${sdk.takeRight(16)}_${ProcessHandle.current().pid()}"
+          s"${Tmp.dirKey(dir)}_${sdk.takeRight(16)}_${ProcessHandle.current().pid()}"
         docs(s, dir).select(col("doc_id"), col("text"))
           .repartition(3).write.mode("overwrite").parquet(p)
         p

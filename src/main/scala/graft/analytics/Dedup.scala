@@ -387,8 +387,8 @@ object Dedup {
       // ordering, so each round's merge join skips re-sorting the edge
       // side (the labels side, node-count-sized, still sorts). The join
       // itself is already exchange-free — cached hash(src) edges against
-      // hash(src)-partitioned label aggs (probe: tools.CcPlanProbe, one
-      // live exchange per round = the doc_id aggregation).
+      // hash(src)-partitioned label aggs (one live exchange per round =
+      // the doc_id aggregation).
       .sortWithinPartitions(col("src"))
       .persist()
     // HYBRID: a small edge set is a driver-trivial union-find — the same

@@ -27,9 +27,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * call site in the session inherits it — raising
   * spark.sql.shuffle.partitions for one large query also widens tiny
   * fan-outs built while it is set. Scope large shuffle-width settings to
-  * the scale run (as OneRun's SPARK_GRAFT_SHUFFLE knob does) rather than
-  * setting them session-globally; the cost is only extra small tasks,
-  * never correctness.
+  * the scale run rather than setting them session-globally; the cost is
+  * only extra small tasks, never correctness.
   */
 object Spread {
   def byKey(df: DataFrame, key: Column): DataFrame = {

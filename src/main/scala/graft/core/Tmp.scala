@@ -30,6 +30,11 @@ object Tmp {
     } else System.getProperty("java.io.tmpdir")
   }
 
+  /** A source dir as one path-safe token for fixture paths: every
+    * character outside `[a-zA-Z0-9]` becomes `_`.
+    */
+  def dirKey(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
+
   /** Fresh scratch dir under [[scratchRoot]] (same contract as
     * `Files.createTempDirectory`, caller deletes).
     */

@@ -33,8 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * duplicated input the merge silently undercounts — so a debug-only
   * per-row assertion (strictly-ascending check on both sides, throwing
   * with the offending position) can be enabled for new call-site
-  * development via `-Dgraft.sortedIntersect.assert=true` or
-  * `GRAFT_SORTED_ASSERT=1`. The flag is captured at expression
+  * development via `-Dgraft.sortedIntersect.assert=true`. The flag is captured at expression
   * construction (plan time) so the hot path carries zero per-row branch
   * when off; production call sites never enable it.
   */
@@ -130,8 +129,7 @@ object SortedIntersectCount {
     * throws with the offending position instead of silently
     * undercounting. Read once per expression CONSTRUCTION (plan time). */
   def assertEnabled: Boolean =
-    sys.props.get("graft.sortedIntersect.assert").contains("true") ||
-      sys.env.get("GRAFT_SORTED_ASSERT").contains("1")
+    sys.props.get("graft.sortedIntersect.assert").contains("true")
 
   /** Strictly-ascending check; called from interpreted eval and from the
     * generated code's debug guard (hence public + ArrayData-typed). */
