@@ -571,7 +571,7 @@ object QueriesAnalytics {
     implicit val ss: SparkSession = s
     val e = emb(s, dir)
     val model = graft.analytics.Pca.train(e, col("embedding"), d = 64)
-    graft.analytics.PcaModels.stash(dir, model)
+    graft.analytics.PcaModels.stash.put(dir, model)
     graft.analytics.Pca.project(e, col("embedding"), model, k = 4)
       .select(col("vec_id"), col("pc0"), col("pc1"), col("pc2"), col("pc3"))
   }
@@ -591,9 +591,7 @@ object QueriesAnalytics {
     val model = graft.analytics.Ivf.Model.parse(trained.serialize) // persist/restore path
     val queryVec = e.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-    // pid-unique: concurrent sessions (Verify + Bench) must not race
-    // one overwrite-vs-read index path
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val path = Tmp.staged("ivf", dir)
     graft.analytics.Ivf.materialize(e.filter(col("vec_id") =!= 0), "vec_id",
       "embedding", model, path)
     graft.analytics.Ivf.probeMaterialized(s, path, "vec_id", "embedding",
@@ -627,8 +625,7 @@ object QueriesAnalytics {
     // must not move existing vectors' cells
     val model = graft.analytics.Ivf.Model.parse(
       graft.analytics.Ivf.train(old, "vec_id", "embedding", k = 8, iters = 5).serialize)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfapp_" +
-      s"${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
+    val path = Tmp.staged("ivfapp", dir)
     graft.analytics.Ivf.materialize(old, "vec_id", "embedding", model, path)
     graft.analytics.Ivf.assign(fresh, "vec_id", "embedding", model)
       .write.mode("append").partitionBy("cell").parquet(path)
@@ -671,10 +668,10 @@ object QueriesAnalytics {
         col("vec_id"), col("embedding"), k = 32, iters = 8)
       (iv, pqm)
     })
-    val path = QueriesCdc.fixturePath("ivfpq", dir)
-    QueriesLayout.ensureWritten(path, dir) {
+    val path = Tmp.stagedOnce("ivfpq", dir) { p =>
       graft.analytics.Pq.materializeIvfPq(corpus, col("vec_id"), col("embedding"),
-        ivf, pq, path)
+        ivf, pq, p)
+      p
     }
     val query = e.filter(col("vec_id") === 2)
       .select(Similarity.quantize(col("embedding")).as("q"))

@@ -31,8 +31,8 @@ object QueriesCdc {
     * queries replay are deterministic functions of the sf dir, and the
     * fixture write is test scaffolding, not the measured operator (a
     * production stream reads a source that already exists) — so each is
-    * built once per JVM and repeats measure only the replay. Paths are
-    * pid-unique so concurrent Verify/Bench JVMs never race one write.
+    * built once per JVM ([[Tmp.stagedOnce]]) and repeats measure only
+    * the replay.
     * Deliberately NOT memoized: kafka produce (the roundtrip metric IS
     * produce+consume) and the binlog binary encode (the wire-format
     * encode is the operator under test).
@@ -81,21 +81,9 @@ object QueriesCdc {
       // Snapshot construction moves to background maintenance, which a
       // bounded replay never pays. This is the production setting for
       // commit-latency-bound streams; checkpoint format changes, but
-      // every checkpoint here is per-run scratch (Tmp.scratchDir) so
+      // every checkpoint here is per-run scratch (Tmp.replay) so
       // nothing persisted crosses a version boundary.
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(body)
-
-  /** Fresh checkpoint dir for one bounded replay (the replay must start
-    * from scratch each run), deleted once the stream terminates — bench
-    * x3 repeats and catalog sweeps would otherwise orphan one
-    * state-store tree in tmp per run per stream query.
-    */
-  private def runWithTempCkpt(prefix: String)(
-      start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val p = graft.core.Tmp.scratchDir(prefix)
-    try start(p.toString).awaitTermination()
-    finally graft.core.Tmp.deleteRecursively(p)
-  }
 
   /** Drain an append-mode stream through the parquet FILE sink and read
     * the committed result back — the scalable replacement for the memory
@@ -115,10 +103,9 @@ object QueriesCdc {
     */
   private def drainToParquet(s: SparkSession, df: DataFrame, tag: String,
       dir: String, ckptPrefix: String): DataFrame = {
-    val outDir = fixturePath(tag, dir)
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(outDir), true)
-    runWithTempCkpt(ckptPrefix) { ckpt =>
+    val outDir = Tmp.staged(tag, dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(outDir))
+    Tmp.replay(ckptPrefix) { ckpt =>
       df.writeStream.format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt)
@@ -127,19 +114,6 @@ object QueriesCdc {
     }
     s.read.parquet(outDir)
   }
-
-  // Keys embed the source dataset's CONTENT key (DatasetKey: file sizes +
-  // mtimes), so a dataset refreshed under the same path rebuilds the
-  // fixture instead of serving the stale one.
-  private val fixtureMemo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def memoFixture[T <: AnyRef](key: String)(build: => T): T =
-    fixtureMemo.computeIfAbsent(key, _ => build).asInstanceOf[T]
-  // content-hash in the PATH too, so path identity matches the
-  // DatasetKey-keyed memo identity: two dirs that sanitize alike, or one
-  // dir refreshed mid-process, land at distinct paths instead of the
-  // stale memo entry serving the other dataset's fixture
-  private[graft] def fixturePath(tag: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${Tmp.dirKey(dir)}_${graft.core.DatasetKey.hashOf(dir)}_${ProcessHandle.current().pid()}"
 
   /** S1+F1: snapshot scan with pushed-down row filter + projection. */
   def snapshotScan(s: SparkSession, dir: String): DataFrame =
@@ -321,8 +295,7 @@ object QueriesCdc {
           col("event_id"),
           col("user_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("payload"))
-    val (part, nEvents) = memoFixture(s"binlog_native_${graft.core.DatasetKey.of(dir)}") {
-      val fixtureDir = fixturePath("binlog_native", dir)
+    val (part, nEvents) = Tmp.stagedOnce("binlog_native", dir) { fixtureDir =>
       base
         .select(to_json(struct(col("seq"), col("uuid"), col("gno"), col("op"),
           col("db"), col("tbl"), col("ts"), col("payload"))).as("value"))
@@ -331,7 +304,7 @@ object QueriesCdc {
       val p = new java.io.File(fixtureDir).listFiles()
         .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
         .map(_.getAbsolutePath).min
-      (p, java.lang.Long.valueOf(base.count()))
+      (p, base.count())
     }
     // ~4 micro-batches at ANY scale factor: still exercises GTID offset
     // advancement across batches without paying per-batch planning
@@ -458,13 +431,11 @@ object QueriesCdc {
   }
 
   def binlogBinary(s: SparkSession, dir: String): DataFrame = {
-    // pid-unique like every other fixture path: concurrent Verify/Bench
-    // JVMs must never overwrite a log the other is mid-replay on.
     // NOT memoized: the wire-format encode IS the operator under test.
     // Encoded as 16 rotated segment files in parallel (see buildBinaryLog)
     // — sf1 measured the single-stream encode at 34 s; the rotated
     // encode is the same bytes per segment, same replay order, same hash.
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_binlog_binary_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}.binlog"
+    val path = Tmp.staged("binlog_binary", dir)
     val nEvents = buildBinaryLog(s, dir, path, segments = 16)
     binlogReplayProjection(drainToParquet(s,
       s.readStream.format("graft-binlog")
@@ -488,10 +459,9 @@ object QueriesCdc {
     * operator under test here is the socket, not the encoder).
     */
   def changelogSocket(s: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath("binlogsock", dir) + ".binlog"
-    val nEvents = memoFixture(s"binlog_socket_${graft.core.DatasetKey.of(dir)}") {
-      java.lang.Long.valueOf(buildBinaryLog(s, dir, path))
-    }.longValue()
+    val (path, nEvents) = Tmp.stagedOnce("binlogsock", dir) { p =>
+      (p, buildBinaryLog(s, dir, p))
+    }
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val srv = new graft.changelog.MysqlRepl.Server(bytes)
     val drained = try {
@@ -535,21 +505,18 @@ object QueriesCdc {
     import graft.core.Schema.{ColumnSchema, TableSchema}
     import graft.stream.{SchemaFlow, SchemaRestartLoop}
 
-    val path = fixturePath("ddlsock", dir) + ".binlog"
-    val built = memoFixture(s"ddl_socket_${graft.core.DatasetKey.of(dir)}") {
-      java.lang.Long.valueOf(buildDdlLog(s, dir, path))
-    }.longValue()
+    val (path, built) = Tmp.stagedOnce("ddlsock", dir) { p =>
+      (p, buildDdlLog(s, dir, p))
+    }
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val srv = new graft.changelog.MysqlRepl.Server(bytes)
-    // pid-scoped work dir, WIPED at entry: the batch parquet must outlive
-    // this call (the returned DataFrame reads it lazily), so each run
-    // reclaims the previous run's ~tens of MB instead of leaking one dir
-    // per invocation into java.io.tmpdir (ambient /tmp pressure measurably
-    // skewed multimodal rows in r11 — see BASELINE.md ImageIO addendum)
-    val work = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-ddl-socket-${Tmp.dirKey(dir)}-${ProcessHandle.current().pid()}")
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(work.toString), true)
+    // work dir WIPED at entry: the batch parquet must outlive this call
+    // (the returned DataFrame reads it lazily), so each run reclaims the
+    // previous run's ~tens of MB instead of leaking one dir per
+    // invocation (ambient /tmp pressure measurably skewed multimodal rows
+    // in r11 — see BASELINE.md ImageIO addendum)
+    val work = java.nio.file.Paths.get(Tmp.staged("ddlsock_work", dir))
+    Tmp.deleteRecursively(work)
     java.nio.file.Files.createDirectories(work)
     val dataDir = s"$work/data"
     try {
@@ -748,10 +715,9 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_topic_${Tmp.dirKey(dir)}"
+    val topicDir = Tmp.staged("kafka_topic", dir)
     // fresh topic per run (produce appends by contract)
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(topicDir), true)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(topicDir))
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
       partitionCol = Some(pmod(col("user_id"), lit(nParts))))
     // ~4 micro-batches at any SF (see changelogNative)
@@ -785,9 +751,8 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_rate_${Tmp.dirKey(dir)}"
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(topicDir), true)
+    val topicDir = Tmp.staged("kafka_rate", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(topicDir))
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
       partitionCol = Some(pmod(col("user_id"), lit(nParts))))
     // target ~1/8 of the backlog per trigger: the drain needs >= 8
@@ -886,15 +851,14 @@ object QueriesCdc {
       // recovery, and the file sink's _spark_metadata log is the
       // exactly-once mechanism a restarted production consumer actually
       // relies on — the read-back below sees each batch exactly once
-      val outDir = fixturePath("kafka_sock_out", dir)
-      org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(outDir), true)
+      val outDir = Tmp.staged("kafka_sock_out", dir)
+      Tmp.deleteRecursively(java.nio.file.Paths.get(outDir))
       // total/4 per trigger: each drain still runs MULTIPLE admission-
       // bounded micro-batches (2 full + tail), which is what the
       // admission-control contract needs — total/8 bought 5 batches per
       // drain and each micro-batch carries ~250 ms of fixed engine cost
       // (WAL commit + sink commit + planning), pure overhead at this SF
-      def consume(ckpt: String): Unit =
+      def consume(ckpt: String) =
         s.readStream.format("graft-kafka")
           .option("path", s"$url/$topic")
           .option("maxOffsetsPerTrigger", math.max(4096L, total / 4 + 512))
@@ -904,14 +868,14 @@ object QueriesCdc {
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-          .awaitTermination()
-      val ckptDir = graft.core.Tmp.scratchDir("graft-kafka-sock-ckpt")
-      try {
+      // both drains resume from the ONE checkpoint: the second consumes
+      // only what the second produce appended
+      Tmp.replay("graft-kafka-sock-ckpt") { ckpt =>
         produceWire(base.filter(col("ord") <= mid))
-        consume(ckptDir.toString)
+        consume(ckpt).awaitTermination()
         produceWire(base.filter(col("ord") > mid))
-        consume(ckptDir.toString)
-      } finally graft.core.Tmp.deleteRecursively(ckptDir)
+        consume(ckpt)
+      }
       s.read.parquet(outDir)
         .select(col("partition").cast("long").as("partition"), col("offset"),
           col("key").cast("long").as("user_id"),
@@ -955,9 +919,8 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_group_${Tmp.dirKey(dir)}"
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(topicDir), true)
+    val topicDir = Tmp.staged("kafka_group", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(topicDir))
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
       partitionCol = Some(pmod(col("user_id"), lit(nParts))))
     val conf = s.sparkContext.hadoopConfiguration
@@ -1032,26 +995,22 @@ object QueriesCdc {
         col("user_id"),
         to_json(struct(col("event_id"),
           round(col("value") * 100).cast("long").as("value_cents"))).as("value"))
-    val topicDir = s"${System.getProperty("java.io.tmpdir")}/graft_kafka_gstream_${Tmp.dirKey(dir)}"
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(topicDir), true)
+    val topicDir = Tmp.staged("kafka_gstream", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(topicDir))
     val produced = graft.pipes.LoopbackPipe.produce(base, topicDir, nParts, col("ord"),
       partitionCol = Some(pmod(col("user_id"), lit(nParts))))
     // the join/leave schedule, one line per trigger: 4 triggers (cap at
     // produced/4) walk 2 → 3 (join) → 2 (leave) → 3 (rejoin)
-    val memberLog = java.nio.file.Files.createTempFile("graft-group-members", ".log")
-    java.nio.file.Files.write(memberLog,
+    val memberLog = Tmp.staged("kafka_gstream_members", dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(memberLog),
       "2\n3\n2\n3\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val drained = try {
-      drainToParquet(s,
-        s.readStream.format("graft-kafka")
-          .option("path", topicDir)
-          .option("maxOffsetsPerTrigger", math.max(4096L, produced / 4 + 1))
-          .option("groupMembersLog", memberLog.toString)
-          .load(),
-        "kgrp_out", dir, "graft-kafka-gstream-ckpt")
-    } finally java.nio.file.Files.deleteIfExists(memberLog)
-    drained
+    drainToParquet(s,
+      s.readStream.format("graft-kafka")
+        .option("path", topicDir)
+        .option("maxOffsetsPerTrigger", math.max(4096L, produced / 4 + 1))
+        .option("groupMembersLog", memberLog)
+        .load(),
+      "kgrp_out", dir, "graft-kafka-gstream-ckpt")
       .select(col("partition").cast("long").as("partition"), col("offset"),
         col("key").cast("long").as("user_id"),
         get_json_object(col("value"), "$.event_id").cast("long").as("event_id"),
@@ -1072,8 +1031,7 @@ object QueriesCdc {
     // 2 files -> 2 micro-batches: complete mode re-emits the FULL window
     // state every batch, so batch count multiplies the aggregation work —
     // two batches prove cross-batch accumulation at minimal re-agg cost
-    val src = memoFixture(s"swindow_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("stream_src", dir)
+    val src = Tmp.stagedOnce("stream_src", dir) { p =>
       events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .repartition(2)
@@ -1086,7 +1044,7 @@ object QueriesCdc {
       .parquet(src)
     withStatePartitions(s, 8) {
       withRocksDbState(s) {
-      runWithTempCkpt("graft-stream-window-ckpt") { ckpt =>
+      Tmp.replay("graft-stream-window-ckpt") { ckpt =>
         graft.stream.StreamOps
           .windowedCounts(stream, "ts", "1 hour", "10 minutes", Seq("event_type"))
           .writeStream.format("memory").queryName("graft_stream_window")
@@ -1115,8 +1073,7 @@ object QueriesCdc {
     * not history; the shuffle is the normal group-by-key exchange.
     */
   def streamSession(s: SparkSession, dir: String): DataFrame = {
-    val src = memoFixture(s"ssession_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("ssession_src", dir)
+    val src = Tmp.stagedOnce("ssession_src", dir) { p =>
       val base = events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           round(col("value") * 100).cast("long").as("value_cents"))
@@ -1183,8 +1140,7 @@ object QueriesCdc {
   }
 
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val src = memoFixture(s"sdedup_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("sdedup_src", dir)
+    val src = Tmp.stagedOnce("sdedup_src", dir) { p =>
       events(s, dir)
         .select(col("event_id"), col("user_id"),
           round(col("value") * 100).cast("long").as("value_cents"))
@@ -1242,8 +1198,7 @@ object QueriesCdc {
 
   /** Stage the range-split join source for `dir`; shared with the spec. */
   private[graft] def streamJoinSource(s: SparkSession, dir: String): String =
-    memoFixture(s"sjoin_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("sjoin_src", dir)
+    Tmp.stagedOnce("sjoin_src", dir) { p =>
       events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
         .repartitionByRange(2, col("ts"))
@@ -1268,11 +1223,8 @@ object QueriesCdc {
     * width). Result rows are partitioning-invariant — the sf1 hash gate
     * proves it.
     */
-  private def joinStateWidth(src: String): Int = {
-    def size(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(size).sum
-      else f.length()
-    val mib = size(new java.io.File(src)) >> 20
+  private def joinStateWidth(s: SparkSession, src: String): Int = {
+    val mib = Tables.bytesOf(s, src) >> 20
     math.max(4, math.min(32, mib.toInt))
   }
 
@@ -1292,7 +1244,7 @@ object QueriesCdc {
     // this); an OUTER stream-stream join would need it (null-extended
     // rows emit at eviction) and must not copy this setting.
     SessionConf.scoped(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      withStatePartitions(s, joinStateWidth(src)) {
+      withStatePartitions(s, joinStateWidth(s, src)) {
         withRocksDbState(s) {
           drainToParquet(s, joined, "sjoin_out", dir, "graft-sjoin-ckpt")
         }
@@ -1318,8 +1270,7 @@ object QueriesCdc {
     * keeps the integral.
     */
   def streamRetract(s: SparkSession, dir: String): DataFrame = {
-    val src = memoFixture(s"sretract_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("sretract_src", dir)
+    val src = Tmp.stagedOnce("sretract_src", dir) { p =>
       events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -1342,7 +1293,7 @@ object QueriesCdc {
     val mv = deltas.groupBy(col("user_id"))
       .agg(sum(col("d_rows")).as("n_live"), sum(col("d_cents")).as("net_cents"))
     withStatePartitions(s, 8) {
-      runWithTempCkpt("graft-sretract-ckpt") { ckpt =>
+      Tmp.replay("graft-sretract-ckpt") { ckpt =>
         mv.writeStream.format("memory").queryName("graft_stream_retract")
           .outputMode("complete")
           .option("checkpointLocation", ckpt)
@@ -1368,8 +1319,7 @@ object QueriesCdc {
     * zero.
     */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val src = memoFixture(s"senrich_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("senrich_src", dir)
+    val src = Tmp.stagedOnce("senrich_src", dir) { p =>
       events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -1422,8 +1372,7 @@ object QueriesCdc {
   def streamNeardup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sp: SparkSession = s
-    val src = memoFixture(s"sneardup_${graft.core.DatasetKey.of(dir)}") {
-      val p = fixturePath("sneardup_src", dir)
+    val src = Tmp.stagedOnce("sneardup_src", dir) { p =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       // The file source orders batches by file MODIFICATION TIME, so a
       // single repartitionByRange write can replay the halves in either

@@ -167,10 +167,6 @@ object QueriesExtra {
       .orderBy(col("exact_n").desc, col("term"))
   }
 
-  // process-lifetime staged stream fixture paths (pid-unique, content-keyed)
-  private val streamFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Streaming heavy hitters — [[heavyHitters]] on the ingest path: each
     * micro-batch reduces to its CMS cell DELTA (d·w = 2048 rows — the
     * bounded sketch state a 100 TB monitor actually keeps) plus its
@@ -187,20 +183,15 @@ object QueriesExtra {
     * multiply the per-batch machinery constant without adding coverage.
     */
   def streamHitters(s: SparkSession, dir: String): DataFrame = {
-    // path carries the content-key hash so path identity matches memo
-    // identity (see QueriesQuality.streamKs)
-    val dk = graft.core.DatasetKey.of(dir)
-    val src = streamFixtures.computeIfAbsent(
-      s"shh_$dk", _ => {
-        val p = s"${System.getProperty("java.io.tmpdir")}/graft_shh_" +
-          s"${Tmp.dirKey(dir)}_${dk.takeRight(16)}_${ProcessHandle.current().pid()}"
-        docs(s, dir).select(col("doc_id"), col("text"))
-          .repartition(3).write.mode("overwrite").parquet(p)
-        p
-      })
-    val out = graft.core.Tmp.scratchDir("graft-shh-out").toString
-    val ckpt = graft.core.Tmp.scratchDir("graft-shh-ckpt")
-    try {
+    val src = Tmp.stagedOnce("shh", dir) { p =>
+      docs(s, dir).select(col("doc_id"), col("text"))
+        .repartition(3).write.mode("overwrite").parquet(p)
+      p
+    }
+    // wiped at entry: the returned DataFrame reads the deltas lazily
+    val out = Tmp.staged("shh_out", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(out))
+    Tmp.replay("graft-shh-ckpt") { ckpt =>
       s.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
@@ -220,10 +211,10 @@ object QueriesExtra {
             .write.mode("overwrite").parquet(s"$out/cells/b$batchId")
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-    } finally graft.core.Tmp.deleteRecursively(ckpt)
+        .start()
+    }
     hittersMergeDeltas(s, out)
   }
 

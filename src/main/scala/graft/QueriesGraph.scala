@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Ivf, Similarity}
-import graft.core.{SessionConf, Tables}
+import graft.core.{SessionConf, Tables, Tmp}
 
 /** Graph / evaluation-layer operators for the training-data pipeline:
   * iterative PageRank over an entity graph, k-NN auto-labeling of a
@@ -463,9 +463,9 @@ object QueriesGraph {
     val train = e.filter(col("vec_id") % 4 =!= 0)
     val ivf = Ivf.Model.parse( // persist/restore path, same as ivfProbe
       Ivf.train(train, "vec_id", "embedding", k = 8, iters = 5).serialize)
-    val path = QueriesCdc.fixturePath("knnivf", dir)
-    QueriesLayout.ensureWritten(path, dir) {
-      Ivf.materialize(train, "vec_id", "embedding", ivf, path)
+    val path = Tmp.stagedOnce("knnivf", dir) { p =>
+      Ivf.materialize(train, "vec_id", "embedding", ivf, p)
+      p
     }
     val evalPts = Ivf.assignProbes(e.filter(evalPred),
         "embedding", ivf, nprobe = nprobe)

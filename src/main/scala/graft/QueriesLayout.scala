@@ -18,23 +18,13 @@ import graft.core.{SessionConf, Tables, Tmp}
   * /root/reference/pipe/file.go) but leaves layout to the reader; these
   * operators are that missing half, Spark-first.
   *
-  * Fixture writes (bucketed tables, partitioned dirs) go to pid-unique
-  * tmpdir paths — concurrent Verify/Bench JVMs never race one another —
-  * and are memoized per (path) inside a JVM so bench repeats measure the
-  * READ side, the way a production job reads a layout written once.
+  * Fixture writes (bucketed tables, partitioned dirs) are staged through
+  * [[graft.core.Tmp.stagedOnce]] — per-process, content-keyed paths, so
+  * concurrent Verify/Bench JVMs never race one another — and built once
+  * per JVM so bench repeats measure the READ side, the way a production
+  * job reads a layout written once.
   */
 object QueriesLayout {
-
-  // Memo key = fixture path + the SOURCE dataset's content key (file
-  // sizes + mtimes): a dataset refreshed under the same dir re-runs the
-  // overwrite-mode write instead of serving the stale fixture.
-  private val writtenPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def ensureWritten(path: String, srcDir: String)(write: => Unit): Unit = {
-    val key = path + "@" + graft.core.DatasetKey.of(srcDir)
-    if (!writtenPaths.contains(key)) synchronized {
-      if (!writtenPaths.contains(key)) { write; writtenPaths.add(key) }
-    }
-  }
 
   // ------------------------------------------------------------- bucketing
 
@@ -49,12 +39,11 @@ object QueriesLayout {
     * Exchange anywhere under the SortMergeJoin.
     */
   def bucketJoin(s: SparkSession, dir: String): DataFrame = {
-    val pid = ProcessHandle.current().pid()
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_bkt_${Tmp.dirKey(dir)}_$pid"
+    val base = Tmp.staged("bkt", dir)
     def ensureTable(name: String, df: DataFrame, keyCol: String): String = {
-      // content-hash suffix: a refreshed dataset re-lands the bucketed
-      // table instead of reusing the stale catalog entry
-      val table = s"graft_bkt_${name}_${Tmp.dirKey(dir)}_${graft.core.DatasetKey.hashOf(dir)}"
+      // the staged dir name carries the content hash: a refreshed dataset
+      // re-lands the bucketed table instead of reusing the stale catalog entry
+      val table = s"graft_${java.nio.file.Paths.get(base).getFileName}_$name"
       if (!s.catalog.tableExists(table)) {
         df.write.mode("overwrite")
           .bucketBy(8, keyCol).sortBy(keyCol)
@@ -88,10 +77,10 @@ object QueriesLayout {
     * the predicate lands in PartitionFilters, not in post-scan Filter.
     */
   def partitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_partev_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-    ensureWritten(path, dir) {
+    val path = Tmp.stagedOnce("partev", dir) { p =>
       Tables.events(s, dir)
-        .write.mode("overwrite").partitionBy("event_type").parquet(path)
+        .write.mode("overwrite").partitionBy("event_type").parquet(p)
+      p
     }
     s.read.parquet(path)
       .filter(col("event_type") === "purchase")
@@ -270,13 +259,12 @@ object QueriesLayout {
     * Fixture writes are memoized per JVM like the other layout queries
     * (the merge is NOT idempotent — re-merging the same delta would
     * double-count — which is exactly why real COW tables fence commits
-    * with a manifest version; `ensureWritten` is that fence here).
+    * with a manifest version; `Tmp.stagedOnce` is that fence here).
     */
   def cowUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_cow_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-    val v0 = s"$base/v0"
-    val v1 = s"$base/v1"
-    ensureWritten(base, dir) {
+    val base = Tmp.stagedOnce("cow", dir) { base =>
+      val v0 = s"$base/v0"
+      val v1 = s"$base/v1"
       val ev = Tables.events(s, dir).select(col("user_id"),
         (col("user_id") % 16).cast("int").as("bucket"),
         round(col("value") * 100).cast("long").as("cents"),
@@ -300,7 +288,10 @@ object QueriesLayout {
           .agg(sum(col("n_events")).as("n_events"), sum(col("cents")).as("cents"))
           .write.mode("overwrite").partitionBy("bucket").parquet(v1)
       }
+      base
     }
+    val v0 = s"$base/v0"
+    val v1 = s"$base/v1"
     // reader: v1 partitions shadow v0 (latest-version-per-partition); when
     // the delta was empty there is no v1 and the base version serves alone
     val merged =
@@ -331,15 +322,15 @@ object QueriesLayout {
     * union schema.
     */
   def schemaMerge(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_schmerge_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-    ensureWritten(path, dir) {
+    val path = Tmp.stagedOnce("schmerge", dir) { p =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         round(col("value") * 100).cast("long").as("cents"), col("event_type"))
       ev.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("cents")) // pre-ALTER schema
-        .write.mode("overwrite").parquet(s"$path/old")
+        .write.mode("overwrite").parquet(s"$p/old")
       ev.filter(col("event_id") % 2 === 1) // post-ALTER: + event_type
-        .write.mode("overwrite").parquet(s"$path/new")
+        .write.mode("overwrite").parquet(s"$p/new")
+      p
     }
     s.read.option("mergeSchema", "true").parquet(s"$path/old", s"$path/new")
       .groupBy(col("user_id"))
@@ -363,12 +354,12 @@ object QueriesLayout {
     */
   def incrIndex(s: SparkSession, dir: String): DataFrame = {
     import graft.analytics.Dedup
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sigstore_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-    ensureWritten(path, dir) {
+    val path = Tmp.stagedOnce("sigstore", dir) { p =>
       Dedup.minhashWideNative(
           Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0),
           "doc_id", col("text"), k = 8, numHashes = 8)
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(p)
+      p
     }
     val stored = s.read.parquet(path)
     val delta = Dedup.minhashWideNative(
@@ -396,15 +387,11 @@ object QueriesLayout {
     * source, via the DuckDB aggregate); LayoutSpec proves the layout
     * property (file counts shrink to ~slot count, cap honored).
     */
-  private[graft] def compactionBase(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_compact_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-
   def compaction(s: SparkSession, dir: String): DataFrame = {
-    val base = compactionBase(dir)
-    val v0 = s"$base/v0"
-    val v1 = s"$base/v1"
     val cap = 2500L
-    ensureWritten(base, dir) {
+    val v1 = Tmp.stagedOnce("compact", dir) { base =>
+      val v0 = s"$base/v0"
+      val v1 = s"$base/v1"
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         col("event_type"), round(col("value") * 100).cast("long").as("cents"))
       // fragmented state: many tiny files per partition dir
@@ -423,6 +410,7 @@ object QueriesLayout {
         .write.mode("overwrite")
         .option("maxRecordsPerFile", cap)
         .partitionBy("event_type").parquet(v1)
+      v1
     }
     s.read.parquet(v1)
       .groupBy(col("event_type"))
@@ -479,14 +467,14 @@ object QueriesLayout {
     * path — staged-but-never-published — is LayoutSpec's.
     */
   def wapPublish(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_wap_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-    ensureWritten(base, dir) {
+    val base = Tmp.stagedOnce("wap", dir) { base =>
       new java.io.File(base).mkdirs()
       val rollup = Tables.events(s, dir)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("cents"))
       wapStageAuditPublish(s, rollup, "user_id", "cents", base)
+      base
     }
     // the reader side of the contract: no marker, no data
     require(new java.io.File(base, "_PUBLISHED").isFile,
@@ -566,29 +554,28 @@ object QueriesLayout {
     * compaction ([[compaction]]) downstream.
     */
   def streamWap(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_swap_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-    ensureWritten(base, dir) {
+    val base = Tmp.stagedOnce("swap", dir) { base =>
       val srcPath = s"$base/src"
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           round(col("value") * 100).cast("long").as("cents"))
         .repartition(4).write.mode("overwrite").parquet(srcPath)
-      val ckpt = graft.core.Tmp.scratchDir("graft-swap-ckpt")
-      try {
+      Tmp.replay("graft-swap-ckpt") { ckpt =>
         s.readStream.schema("event_id bigint, user_id bigint, cents bigint")
           .option("maxFilesPerTrigger", "1").parquet(srcPath)
           .writeStream
           .foreachBatch { (b: DataFrame, id: Long) =>
             wapBatchOrFail(s, b, id, base, "event_id", "cents")
           }
-          .option("checkpointLocation", ckpt.toString)
+          .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
-      } finally graft.core.Tmp.deleteRecursively(ckpt)
+          .start()
+      }
       // deliberate batch-0 redelivery: the fence must skip it
       val replay = s.read.parquet(s"$base/v0/staged")
       require(!wapBatch(s, replay, 0L, base, "event_id", "cents"),
         "redelivered batch must hit the publish fence")
+      base
     }
     s.read.parquet(publishedVersions(base): _*)
       .groupBy(col("user_id"))
@@ -629,9 +616,6 @@ object QueriesLayout {
     * user class inside bucket 9 (deletes) — buckets 6-8, 10-15 are
     * byte-identical → fingerprint-skipped.
     */
-  private[graft] def versionDiffBase(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_vdiff_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-
   /** The diff kernel: changed-bucket detection off per-bucket fingerprints,
     * then a bucket-pruned full-outer key diff. Returns (changedBuckets,
     * changelog); exposed for LayoutSpec.
@@ -706,9 +690,6 @@ object QueriesLayout {
     (expired.length, files, bytes)
   }
 
-  private[graft] def vacuumBase(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_vac_${Tmp.dirKey(dir)}_${ProcessHandle.current().pid()}"
-
   /** Snapshot expiry end-to-end: four growing versions of a rollup
     * table, vacuum retaining the latest two, then serve the CURRENT
     * version — whose content the oracle recomputes independently from
@@ -717,8 +698,7 @@ object QueriesLayout {
     * keep ≥ 1 guard are LayoutSpec's ([[vacuumVersions]]).
     */
   def vacuum(s: SparkSession, dir: String): DataFrame = {
-    val base = vacuumBase(dir)
-    ensureWritten(base, dir) {
+    val base = Tmp.stagedOnce("vac", dir) { base =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       def rollup(df: DataFrame) = df.groupBy(col("event_type"))
@@ -729,14 +709,14 @@ object QueriesLayout {
       }
       val (nv, nf, nb) = vacuumVersions(base, keep = 2)
       require(nv == 2 && nf > 0 && nb > 0, s"expected 2 expired versions, got $nv")
+      base
     }
     s.read.parquet(s"$base/v3")
       .select(col("event_type"), col("n_events"), col("cents"))
   }
 
   def versionDiff(s: SparkSession, dir: String): DataFrame = {
-    val base = versionDiffBase(dir)
-    ensureWritten(base, dir) {
+    val base = Tmp.stagedOnce("vdiff", dir) { base =>
       val ev = Tables.events(s, dir).select(col("user_id"),
         (col("user_id") % 16).cast("int").as("bucket"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -750,6 +730,7 @@ object QueriesLayout {
       rollup(ev.filter(col("event_id") % 7 =!= 0 || col("user_id") % 16 < 6))
         .filter(!(col("user_id") % 16 === 9 && col("user_id") % 6 === 1)) // erasure
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$base/v1")
+      base
     }
     diffVersions(s, s"$base/v0", s"$base/v1")._2
   }

@@ -64,9 +64,8 @@ object QueriesPipes {
       MsgPackCodec.encodeEvent("insert", Seq(r.getLong(0)), r.getLong(0), 0L,
         Some(Seq("user_id" -> r.getLong(1), "value_cents" -> r.getLong(2))))
     }.toDF("value")
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_framed_${Tmp.dirKey(dir)}"
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(out), true)
+    val out = Tmp.staged("framed", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(out))
     Framing.write(encoded, out, "value", gzip = true)
     Framing.read(s, out).select("value").map { r =>
       val m = MsgPackCodec.decode(r.getAs[Array[Byte]](0))._1.asInstanceOf[Map[Any, Any]]
@@ -114,9 +113,8 @@ object QueriesPipes {
   def cryptoRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val producer = CryptoStage.generateKeyPair()
     val consumer = CryptoStage.generateKeyPair()
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_crypto_${Tmp.dirKey(dir)}"
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(out), true)
+    val out = Tmp.staged("crypto", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(out))
     docs(s, dir)
       .select(to_json(struct(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("len_chars"))).as("value"))
@@ -135,9 +133,8 @@ object QueriesPipes {
     * GnuPG interop), decrypted task-side, read back and parsed.
     */
   def pgpRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_pgp_${Tmp.dirKey(dir)}"
-    org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(out), true)
+    val out = Tmp.staged("pgp", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(out))
     docs(s, dir)
       .select(to_json(struct(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("len_chars"))).as("value"))
@@ -150,15 +147,6 @@ object QueriesPipes {
       get_json_object(col("value"), "$.len_chars").cast("long").as("len_chars"))
   }
 
-  /** One loopback WebHDFS endpoint per dataset content, process-lifetime:
-    * the server must outlive the returned (lazy) DataFrame, and bench
-    * repeats then measure the over-the-wire READ path against an already
-    * written sink (the write itself runs once per JVM — the
-    * q_changelog_socket memoized-fixture precedent).
-    */
-  private val webhdfsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** K3 over the REAL socket: [[graft.pipes.FileSink]] (rotation by
     * record count + task-side SHA-256 `_DONE` manifest) writing through
     * Hadoop's own `WebHdfsFileSystem` client to a loopback
@@ -167,28 +155,31 @@ object QueriesPipes {
     * hadoop-client machinery a production `hdfs://` sink exercises
     * (reference: pipe/hdfs.go:37-180 reusing the file producer over an
     * HDFS FileSystem). The read-back also crosses the wire, executor-side.
+    *
+    * One loopback endpoint per dataset content, process-lifetime: the
+    * server must outlive the returned (lazy) DataFrame, and bench repeats
+    * then measure the over-the-wire READ path against an already written
+    * sink (the write itself runs once per JVM — the q_changelog_socket
+    * staged-fixture precedent).
     */
   def webhdfsSink(s: SparkSession, dir: String): DataFrame = {
-    val out = webhdfsMemo.computeIfAbsent(
-      s"webhdfs_${graft.core.DatasetKey.of(dir)}", _ => {
-        val backing = java.nio.file.Files.createTempDirectory("graft-webhdfs-sink").toFile
-        val srv = new graft.pipes.WebHdfsServer(backing) // lives with the JVM
-        // ephemeral ports: a cached FS instance would outlive its server
-        s.sparkContext.hadoopConfiguration.set("fs.webhdfs.impl.disable.cache", "true")
-        val path = s"${srv.uri}/docs"
-        val manifest = FileSink.write(
-          docs(s, dir).select(col("doc_id"), col("source"),
-            length(col("text")).cast("long").as("len_chars")),
-          path, format = "json", maxRecordsPerFile = 5000)
-        require(manifest.nonEmpty && manifest.forall(_.numRecs > 0), "empty webhdfs sink")
-        path
-      })
+    val out = Tmp.stagedOnce("webhdfs", dir) { staged =>
+      val backing = new java.io.File(staged)
+      backing.mkdirs()
+      val srv = new graft.pipes.WebHdfsServer(backing) // lives with the JVM
+      // ephemeral ports: a cached FS instance would outlive its server
+      s.sparkContext.hadoopConfiguration.set("fs.webhdfs.impl.disable.cache", "true")
+      val path = s"${srv.uri}/docs"
+      val manifest = FileSink.write(
+        docs(s, dir).select(col("doc_id"), col("source"),
+          length(col("text")).cast("long").as("len_chars")),
+        path, format = "json", maxRecordsPerFile = 5000)
+      require(manifest.nonEmpty && manifest.forall(_.numRecs > 0), "empty webhdfs sink")
+      path
+    }
     s.read.schema("doc_id bigint, source string, len_chars bigint").json(out)
       .select(col("doc_id"), col("source"), col("len_chars"))
   }
-
-  private val s3Memo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** K4 over the REAL wire: [[graft.pipes.FileSink]] writing through the
     * thin [[graft.pipes.S3FileSystem]] client to a loopback
@@ -200,25 +191,25 @@ object QueriesPipes {
     * boundaries on the wire; the require proves the multipart path ran.
     */
   def s3Sink(s: SparkSession, dir: String): DataFrame = {
-    val out = s3Memo.computeIfAbsent(
-      s"s3_${graft.core.DatasetKey.of(dir)}", _ => {
-        val backing = java.nio.file.Files.createTempDirectory("graft-s3-sink").toFile
-        val srv = new graft.pipes.S3Server(backing) // lives with the JVM
-        val conf = s.sparkContext.hadoopConfiguration
-        conf.set("fs.gs3.impl", "graft.pipes.S3FileSystem")
-        conf.setInt("fs.gs3.multipart.size", 256 * 1024)
-        // ephemeral ports: a cached FS instance would outlive its server
-        conf.setBoolean("fs.gs3.impl.disable.cache", true)
-        val path = s"gs3://127.0.0.1:${srv.port}/graft/docs"
-        val manifest = FileSink.write(
-          docs(s, dir).select(col("doc_id"), col("lang"),
-            length(col("text")).cast("long").as("len_chars")),
-          path, format = "json", maxRecordsPerFile = 5000)
-        require(manifest.nonEmpty && manifest.forall(_.numRecs > 0), "empty s3 sink")
-        require(srv.multipartCompletes.get > 0 || srv.singlePuts.get > 0,
-          "no object reached the s3 wire")
-        path
-      })
+    val out = Tmp.stagedOnce("s3", dir) { staged =>
+      val backing = new java.io.File(staged)
+      backing.mkdirs()
+      val srv = new graft.pipes.S3Server(backing) // lives with the JVM
+      val conf = s.sparkContext.hadoopConfiguration
+      conf.set("fs.gs3.impl", "graft.pipes.S3FileSystem")
+      conf.setInt("fs.gs3.multipart.size", 256 * 1024)
+      // ephemeral ports: a cached FS instance would outlive its server
+      conf.setBoolean("fs.gs3.impl.disable.cache", true)
+      val path = s"gs3://127.0.0.1:${srv.port}/graft/docs"
+      val manifest = FileSink.write(
+        docs(s, dir).select(col("doc_id"), col("lang"),
+          length(col("text")).cast("long").as("len_chars")),
+        path, format = "json", maxRecordsPerFile = 5000)
+      require(manifest.nonEmpty && manifest.forall(_.numRecs > 0), "empty s3 sink")
+      require(srv.multipartCompletes.get > 0 || srv.singlePuts.get > 0,
+        "no object reached the s3 wire")
+      path
+    }
     s.read.schema("doc_id bigint, lang string, len_chars bigint").json(out)
       .select(col("doc_id"), col("lang"), col("len_chars"))
   }

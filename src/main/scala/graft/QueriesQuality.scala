@@ -151,10 +151,6 @@ object QueriesQuality {
           .as("ks_mills"))
   }
 
-  // process-lifetime staged stream fixture paths (pid-unique, content-keyed)
-  private val streamFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Streaming drift monitor — [[ksDrift]] on the ingest path: each
     * micro-batch reduces to its cohort-histogram DELTA (per-cell counts,
     * the mergeable statistic), written idempotently per batchId
@@ -172,22 +168,16 @@ object QueriesQuality {
     * semantic coverage.
     */
   def streamKs(s: SparkSession, dir: String): DataFrame = {
-    // the on-disk path carries the content-key hash too, so path identity
-    // matches memo identity (two dirs that sanitize alike, or one dir
-    // refreshed mid-process, land at distinct paths instead of colliding)
-    val dk = graft.core.DatasetKey.of(dir)
-    val src = streamFixtures.computeIfAbsent(
-      s"sks_$dk", _ => {
-        val p = s"${System.getProperty("java.io.tmpdir")}/graft_sks_" +
-          s"${Tmp.dirKey(dir)}_${dk.takeRight(16)}_${ProcessHandle.current().pid()}"
-        events(s, dir).filter(col("user_id").isNotNull)
-          .select(col("event_type"), col("user_id"), col("value"))
-          .repartition(3).write.mode("overwrite").parquet(p)
-        p
-      })
-    val out = graft.core.Tmp.scratchDir("graft-sks-out").toString
-    val ckpt = graft.core.Tmp.scratchDir("graft-sks-ckpt")
-    try {
+    val src = Tmp.stagedOnce("sks", dir) { p =>
+      events(s, dir).filter(col("user_id").isNotNull)
+        .select(col("event_type"), col("user_id"), col("value"))
+        .repartition(3).write.mode("overwrite").parquet(p)
+      p
+    }
+    // wiped at entry: the returned DataFrame reads the deltas lazily
+    val out = Tmp.staged("sks_out", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(out))
+    Tmp.replay("graft-sks-ckpt") { ckpt =>
       s.readStream.schema("event_type string, user_id bigint, value double")
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
@@ -196,10 +186,10 @@ object QueriesQuality {
             .write.mode("overwrite").parquet(s"$out/b$batchId")
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-    } finally graft.core.Tmp.deleteRecursively(ckpt)
+        .start()
+    }
     ksMergeDeltas(s, out)
   }
 
@@ -302,7 +292,7 @@ object QueriesQuality {
     val n = feats.count()
     val model = graft.analytics.LogReg.train(
       graft.analytics.LogReg.trainingSample(feats, "doc_id", n, cap = 1000000L))
-    graft.analytics.LogRegModels.stash(dir, model)
+    graft.analytics.LogRegModels.stash.put(dir, model)
     graft.analytics.LogReg.score(feats, "doc_id", model)
   }
 

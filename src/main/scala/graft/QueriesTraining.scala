@@ -43,11 +43,7 @@ object QueriesTraining {
   private val PinCorpusMinBytes = 2L << 20
 
   private def pinModelIfCorpusLarge(df: DataFrame, dir: String): DataFrame = {
-    def size(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(size).sum
-      else f.length()
-    val corpusBytes = size(new java.io.File(s"$dir/documents.parquet"))
-    if (corpusBytes >= PinCorpusMinBytes)
+    if (Tables.bytesOf(df.sparkSession, s"$dir/documents.parquet") >= PinCorpusMinBytes)
       graft.core.CacheRegistry.register(
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else df
@@ -782,7 +778,7 @@ object QueriesTraining {
     val ivf = graft.analytics.Ivf.train(eRaw, "vec_id", "embedding", k = 8, iters = 5)
     val qcents: IndexedSeq[IndexedSeq[Long]] = ivf.centroids.toIndexedSeq
       .map(_.toIndexedSeq.map(x => math.round(x * 1000)))
-    ContrastiveIvfOracle.stash(dir, qcents)
+    ContrastiveIvfOracle.stash.put(dir, qcents)
     val centsLit = typedLit(qcents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
     def d2(qCol: Column, cent: Column): Column =
       aggregate(zip_with(qCol, cent, (a, b) => (a - b) * (a - b)), lit(0L), _ + _)
@@ -1181,7 +1177,7 @@ object QueriesTraining {
         if (merges.size % 4 == 0) vocab = vocab.localCheckpoint()
       }
     }
-    BpeOracle.stash(dir, merges.toList)
+    BpeOracle.stash.put(dir, merges.toList)
     (tok, vocab)
   }
 
@@ -1553,11 +1549,6 @@ object QueriesTraining {
       .limit(((nDocs + 7) / 8).toInt)
   }
 
-  // staged stream-source memo: content-keyed so a refreshed dataset
-  // under the same path rebuilds instead of serving the stale fixture
-  private val streamFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** STREAMING DSIR gate — the other half of [[dsirSelect]]'s contract
     * and the shape a 100 TB ingest actually runs: the importance model
     * is trained ONCE offline (same hashed-ngram bucket ratios, same
@@ -1587,20 +1578,15 @@ object QueriesTraining {
         .agg(count(lit(1)).as("raw_n"),
           sum(when(col("tgt"), 1L).otherwise(0L)).as("tgt_n")))
       .localCheckpoint()
-    // path carries the content-key hash so path identity matches memo
-    // identity (see QueriesQuality.streamKs)
-    val sdk = graft.core.DatasetKey.of(dir)
-    val src = streamFixtures.computeIfAbsent(
-      s"sdsir_$sdk", _ => {
-        val p = s"${System.getProperty("java.io.tmpdir")}/graft_sdsir_" +
-          s"${Tmp.dirKey(dir)}_${sdk.takeRight(16)}_${ProcessHandle.current().pid()}"
-        docs(s, dir).select(col("doc_id"), col("text"))
-          .repartition(3).write.mode("overwrite").parquet(p)
-        p
-      })
-    val out = graft.core.Tmp.scratchDir("graft-sdsir-out").toString
-    val ckpt = graft.core.Tmp.scratchDir("graft-sdsir-ckpt")
-    try {
+    val src = Tmp.stagedOnce("sdsir", dir) { p =>
+      docs(s, dir).select(col("doc_id"), col("text"))
+        .repartition(3).write.mode("overwrite").parquet(p)
+      p
+    }
+    // wiped at entry: the returned DataFrame reads the scores lazily
+    val out = Tmp.staged("sdsir_out", dir)
+    Tmp.deleteRecursively(java.nio.file.Paths.get(out))
+    Tmp.replay("graft-sdsir-ckpt") { ckpt =>
       s.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
@@ -1619,10 +1605,10 @@ object QueriesTraining {
             .write.mode("overwrite").parquet(s"$out/b$batchId")
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-    } finally graft.core.Tmp.deleteRecursively(ckpt)
+        .start()
+    }
     s.read.option("recursiveFileLookup", "true").parquet(out)
   }
 
@@ -2219,19 +2205,9 @@ object ContrastiveIvfOracle {
     */
   val FloorMills: Long = 750L
 
-  private val byDir = new java.util.concurrent.ConcurrentHashMap[
-    String, IndexedSeq[IndexedSeq[Long]]]()
+  val stash = new graft.core.VerifyTarget.Stash[IndexedSeq[IndexedSeq[Long]]]
 
-  def stash(dir: String, qcents: IndexedSeq[IndexedSeq[Long]]): Unit = {
-    byDir.put(dir, qcents); ()
-  }
-
-  private def current(): Option[IndexedSeq[IndexedSeq[Long]]] = {
-    import scala.jdk.CollectionConverters._
-    graft.core.VerifyTarget.pick(byDir.asScala)
-  }
-
-  def oracleEntries: Map[String, String] = current() match {
+  def oracleEntries: Map[String, String] = stash.current match {
     case None => Map.empty
     case Some(cents) =>
       val values = cents.zipWithIndex
@@ -2302,19 +2278,9 @@ object ContrastiveIvfOracle {
   * the same deterministic apply contract as the Spark side).
   */
 object BpeOracle {
-  private val byDir = new java.util.concurrent.ConcurrentHashMap[
-    String, List[(String, String)]]()
+  val stash = new graft.core.VerifyTarget.Stash[List[(String, String)]]
 
-  def stash(dir: String, merges: List[(String, String)]): Unit = {
-    byDir.put(dir, merges); ()
-  }
-
-  private def current(): Option[List[(String, String)]] = {
-    import scala.jdk.CollectionConverters._
-    graft.core.VerifyTarget.pick(byDir.asScala)
-  }
-
-  def oracleEntries: Map[String, String] = current() match {
+  def oracleEntries: Map[String, String] = stash.current match {
     case None => Map.empty
     case Some(merges) =>
       val chain = merges.foldLeft(

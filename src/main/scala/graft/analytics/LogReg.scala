@@ -197,20 +197,13 @@ object LogReg {
   * under verification ([[graft.core.VerifyTarget]]) baked in as literals.
   */
 object LogRegModels {
-  private val byDir = new java.util.concurrent.ConcurrentHashMap[String, LogReg.Model]()
-
-  def stash(dir: String, m: LogReg.Model): Unit = { byDir.put(dir, m); () }
-
-  private def current(): Option[LogReg.Model] = {
-    import scala.jdk.CollectionConverters._
-    graft.core.VerifyTarget.pick(byDir.asScala)
-  }
+  val stash = new graft.core.VerifyTarget.Stash[LogReg.Model]
 
   /** q_lr_quality oracle: recompute the mills features in DuckDB with the
     * exact parenthesization of [[LogReg.featureCols]], then the BIGINT
     * margin with the trained micro-coefficients as literals.
     */
-  def oracleEntries: Map[String, String] = current() match {
+  def oracleEntries: Map[String, String] = stash.current match {
     case None => Map.empty
     case Some(m) =>
       val wq = m.wMicros

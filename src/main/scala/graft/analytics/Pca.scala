@@ -177,25 +177,18 @@ object Pca {
   * check instead of comparing against a stale or untrained model).
   */
 object PcaModels {
-  private val byDir = new java.util.concurrent.ConcurrentHashMap[String, Pca.Model]()
-
-  def stash(dir: String, m: Pca.Model): Unit = byDir.put(dir, m)
-
-  /** The model to bake into the oracle: the dir under verification
-    * ([[graft.core.VerifyTarget]]), else sf0.01, else any stashed model
-    * (dev loops).
+  /** Trained models by data dir; the oracle bakes in the one for the dir
+    * under verification ([[graft.core.VerifyTarget]]), else sf0.01, else
+    * any stashed model (dev loops).
     */
-  private def current(): Option[Pca.Model] = {
-    import scala.jdk.CollectionConverters._
-    graft.core.VerifyTarget.pick(byDir.asScala)
-  }
+  val stash = new graft.core.VerifyTarget.Stash[Pca.Model]
 
   /** q_pca_project oracle SQL (empty map when no model was trained).
     * Mirrors [[Pca.project]] bit-for-bit: quantize (scale 1000), subtract
     * the quantized mean, integer-dot against the quantized (1e6)
     * sign-canonical components — all BIGINT math on both engines.
     */
-  def oracleEntries: Map[String, String] = current() match {
+  def oracleEntries: Map[String, String] = stash.current match {
     case None => Map.empty
     case Some(m) =>
       val d = m.d

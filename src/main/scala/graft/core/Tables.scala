@@ -35,6 +35,16 @@ object Tables {
     } else spark.read.parquet(s"$sfDir/$name.parquet")
   }
 
+  /** Bytes under a dataset path (a file or a dir tree) through the Hadoop
+    * FS API, so size-from-the-source plan decisions answer on HDFS/S3
+    * as they do locally. Checksum side-files are not counted: the local
+    * FS listing hides `.crc` files.
+    */
+  def bytesOf(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+  }
+
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
   def customer(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "customer")

@@ -2,13 +2,14 @@ package graft.core
 
 /** The data dir currently under oracle verification.
   *
-  * The dynamic-oracle stashes (PcaModels, ContrastiveIvfOracle,
-  * BpeOracle) are keyed by data dir because the models they bake into
-  * DuckDB SQL are corpus-derived; a long-lived session that runs the
-  * same query over two dirs holds two stashes. `oracleEntries` must
-  * dump the one for the dir the gate is actually replaying — picking
-  * "whichever ends with sf0.01, else an arbitrary first" replays the
-  * wrong corpus's literals whenever the gate targets another dir.
+  * The dynamic-oracle stashes ([[Stash]]: PcaModels, LogRegModels,
+  * ContrastiveIvfOracle, BpeOracle) are keyed by data dir because the
+  * models they bake into DuckDB SQL are corpus-derived; a long-lived
+  * session that runs the same query over two dirs holds two entries.
+  * `oracleEntries` must dump the one for the dir the gate is actually
+  * replaying — picking "whichever ends with sf0.01, else an arbitrary
+  * first" replays the wrong corpus's literals whenever the gate targets
+  * another dir.
   * [[graft.Verify]] sets this before dumping `oracle_sql.json`; the
   * stashes resolve through [[pick]] and fall back to the old heuristic
   * only when no target is set (spec/dev contexts).
@@ -23,12 +24,27 @@ object VerifyTarget {
   /** Resolve a by-dir stash: the verification target's entry when set
     * and present, else the sf0.01 entry, else an arbitrary entry.
     */
-  def pick[M](byDir: scala.collection.Map[String, M]): Option[M] = {
+  private def pick[M](byDir: scala.collection.Map[String, M]): Option[M] = {
     val target = ref.get().flatMap(t => byDir.collectFirst {
       case (d, m) if norm(d) == t => m
     })
     target
       .orElse(byDir.collectFirst { case (d, m) if norm(d).endsWith("sf0.01") => m })
       .orElse(byDir.values.headOption)
+  }
+
+  /** One dynamic oracle's per-dir stash: the query [[put]]s the model it
+    * trained for its data dir, and the oracle dump bakes in the
+    * [[current]] one, resolved as [[pick]] does.
+    */
+  final class Stash[M] {
+    private val byDir = new java.util.concurrent.ConcurrentHashMap[String, M]()
+
+    def put(dir: String, m: M): Unit = { byDir.put(dir, m); () }
+
+    def current: Option[M] = {
+      import scala.jdk.CollectionConverters._
+      pick(byDir.asScala)
+    }
   }
 }

@@ -79,9 +79,8 @@ class DatasetKeySpec extends SparkSuite {
 
   test("layout fixture rebuilds after the source dataset is mutated") {
     val d = scratchDataset(Seq("events"))
-    val path = Files.createTempDirectory("graft-dskey-fixture").toString
     var builds = 0
-    def build(): Unit = QueriesLayout.ensureWritten(path, d.toString) { builds += 1 }
+    def build(): Unit = graft.core.Tmp.stagedOnce("dskey_fixture", d.toString) { _ => builds += 1 }
     build(); build()
     assert(builds == 1, "unchanged dataset must not rebuild the fixture")
     touch(d, "events")

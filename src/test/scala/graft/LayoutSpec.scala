@@ -86,8 +86,7 @@ class LayoutSpec extends SparkSuite {
     assert(got == want, "merged COW table must equal the one-shot aggregate")
 
     // the rewrite wrote only the delta's partitions: v1 = buckets 0-3
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_cow_" +
-      sf0001.replaceAll("[^a-zA-Z0-9]", "_") + s"_${ProcessHandle.current().pid()}"
+    val base = graft.core.Tmp.staged("cow", sf0001)
     // Option-guard: an all-empty delta writes no v1 dir at all
     val v1Dirs = Option(new java.io.File(s"$base/v1").listFiles())
       .getOrElse(Array.empty[java.io.File])
@@ -135,7 +134,7 @@ class LayoutSpec extends SparkSuite {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == want, "compacted content must equal the source")
 
-    val base = QueriesLayout.compactionBase(sf0001)
+    val base = graft.core.Tmp.staged("compact", sf0001)
     def parquetFiles(v: String): Map[String, Int] =
       Option(new java.io.File(s"$base/$v").listFiles()).getOrElse(Array.empty)
         .filter(_.isDirectory)
@@ -266,8 +265,8 @@ class LayoutSpec extends SparkSuite {
       "both version scans must prune to changed buckets:\n" + p.take(3000))
     // the fixture's untouched buckets (6-8, 10-15) never enter the diff
     val changed = QueriesLayout.diffVersions(spark,
-      s"${QueriesLayout.versionDiffBase(sf0001)}/v0",
-      s"${QueriesLayout.versionDiffBase(sf0001)}/v1")._1
+      s"${graft.core.Tmp.staged("vdiff", sf0001)}/v0",
+      s"${graft.core.Tmp.staged("vdiff", sf0001)}/v1")._1
     assert(changed.toSet.subsetOf(Set(0, 1, 2, 3, 4, 5, 9)),
       s"only late-event/insert/erasure buckets may change: $changed")
   }

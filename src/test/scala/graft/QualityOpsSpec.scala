@@ -76,6 +76,25 @@ class QualityOpsSpec extends SparkSuite {
     assert(stream == batch)
   }
 
+  test("q_stream_ks reuses one output dir across runs instead of leaking one per run") {
+    // its per-batch delta dirs, wherever a run may leave them: RAM-backed
+    // scratch, or this process's staged-fixture root
+    def outputDirs(): Int = {
+      val staged = new java.io.File(System.getProperty("java.io.tmpdir"),
+        s"graft-staged-${ProcessHandle.current().pid()}")
+      def named(d: java.io.File, prefix: String) =
+        Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+          .count(f => f.isDirectory && f.getName.startsWith(prefix))
+      named(new java.io.File(graft.core.Tmp.scratchRoot), "graft-sks-out") +
+        named(staged, "sks_out_")
+    }
+    def run(): Long = SparkEntry.queries("q_stream_ks")(spark, sf0001).count()
+    val first = run()
+    val afterFirst = outputDirs()
+    assert(run() == first)
+    assert(outputDirs() == afterFirst, "a second run must not add an output dir")
+  }
+
   test("url canonicalization postconditions") {
     val rows = QueriesAnalytics.urlCanonical(spark, sf0001).collect()
     assert(rows.nonEmpty)

@@ -29,7 +29,7 @@ class SourceKillRecoverySpec extends SparkSuite with CrashSinkHarness {
   private val sfDir = "/root/testdata/sf0.1"
 
   test("binlog socket: hard kill mid-replay, resume re-dials COM_BINLOG_DUMP_GTID from the checkpointed set") {
-    val path = QueriesCdc.fixturePath("binlogsock_kill", sfDir) + ".binlog"
+    val path = graft.core.Tmp.staged("binlogsock_kill", sfDir)
     val n = QueriesCdc.buildBinaryLog(spark, sfDir, path)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val srv = new graft.changelog.MysqlRepl.Server(bytes)
