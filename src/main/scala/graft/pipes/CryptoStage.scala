@@ -6,9 +6,8 @@ import java.security.{KeyPair, KeyPairGenerator, PrivateKey, PublicKey, SecureRa
 import javax.crypto.{Cipher, KeyGenerator, SecretKey}
 import javax.crypto.spec.{GCMParameterSpec, SecretKeySpec}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Encrypt+sign / decrypt+verify file stage — the reference's PGP chain
   * (/root/reference/pipe/file.go:384-437 encrypt+sign on write, :898-960
@@ -29,9 +28,10 @@ import org.apache.spark.sql.{Encoders, SparkSession}
   *  GCM(u32 sigLen | sig | payload)`.
   *
   * Scale: [[encryptDir]]/[[decryptDir]] run task-side over the Hadoop
-  * FileSystem (same pattern as the `_DONE` manifest pass) — thousands of
-  * 1 GB files encrypt in parallel across executors, nothing streams
-  * through the driver.
+  * FileSystem through the same per-file tasks as the `_DONE` manifest
+  * pass (`FileSink.mapFileTasks`: names sliced into tasks, no shuffle) —
+  * thousands of 1 GB files encrypt in parallel across executors, nothing
+  * streams through the driver.
   */
 object CryptoStage {
 
@@ -121,24 +121,13 @@ object CryptoStage {
 
   // --------------------------------------------- directory stage (task-side)
 
-  private def listDataFiles(path: String, conf: Configuration): Seq[String] = {
-    val dir = new HPath(path)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-  }
-
   private def mapFiles(spark: SparkSession, path: String, suffixFrom: String,
                        suffixTo: String)(xform: Array[Byte] => Array[Byte]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new HPath(path)
     // never re-process already-transformed files (encryptDir is
     // idempotent: a second pass finds nothing to encrypt)
-    val names = listDataFiles(path, conf)
+    val names = FileSink.dataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
       .filter(n => n.endsWith(suffixFrom) && (suffixTo.isEmpty || !n.endsWith(suffixTo)))
-    if (names.isEmpty) return 0L
-    val entries = graft.core.HadoopConf.ship(spark)
-    val parallelism = math.max(1, math.min(names.size, spark.sparkContext.defaultParallelism))
-    val ds = spark.createDataset(names)(Encoders.STRING).repartition(parallelism)
 
     // Phase 1 — transform only. Retry-safe under Spark's task contract:
     // sources are NOT deleted here, so a task retry (or speculative twin)
@@ -158,42 +147,32 @@ object CryptoStage {
     // valid, so this attempt just discards its temp. A name whose source
     // is already gone but whose destination exists was finished by an
     // earlier run and is skipped.
-    val transformed = ds.mapPartitions { it =>
-      val d = new HPath(path)
-      val fs = d.getFileSystem(graft.core.HadoopConf.rebuild(entries))
-      it.map { n =>
-        val src = new HPath(d, n)
-        val dst = new HPath(d, n.stripSuffix(suffixFrom) + suffixTo)
-        if (!fs.exists(src)) {
-          require(fs.exists(dst), s"crypto stage: $n vanished without output")
-          1L
-        } else {
-          val inS = fs.open(src)
-          val bytes = try inS.readAllBytes() finally inS.close()
-          val tmp = new HPath(d, s".${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(xform(bytes)) finally out.close()
-          if (fs.exists(dst)) fs.delete(dst, false) // stale prior output
-          if (!fs.rename(tmp, dst)) {
-            if (!fs.exists(dst))
-              throw new java.io.IOException(s"crypto stage commit failed: $tmp -> $dst")
-            fs.delete(tmp, false) // competing attempt committed a valid envelope
-          }
-          1L
+    FileSink.mapFileTasks(spark, path, names) { (fs, src) =>
+      val d = src.getParent
+      val dst = new HPath(d, src.getName.stripSuffix(suffixFrom) + suffixTo)
+      if (!fs.exists(src)) {
+        require(fs.exists(dst), s"crypto stage: ${src.getName} vanished without output")
+      } else {
+        val inS = fs.open(src)
+        val bytes = try inS.readAllBytes() finally inS.close()
+        val tmp = new HPath(d, s".${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
+        val out = fs.create(tmp, true)
+        try out.write(xform(bytes)) finally out.close()
+        if (fs.exists(dst)) fs.delete(dst, false) // stale prior output
+        if (!fs.rename(tmp, dst)) {
+          if (!fs.exists(dst))
+            throw new java.io.IOException(s"crypto stage commit failed: $tmp -> $dst")
+          fs.delete(tmp, false) // competing attempt committed a valid envelope
         }
       }
-    }(Encoders.scalaLong).reduce(_ + _)
+    }
 
     // Phase 2 — delete sources, in a SEPARATE job that only starts after
     // every transform task succeeded. fs.delete of a missing file is a
     // no-op, so retries here are trivially idempotent.
-    ds.mapPartitions { it =>
-      val d = new HPath(path)
-      val fs = d.getFileSystem(graft.core.HadoopConf.rebuild(entries))
-      it.map { n => fs.delete(new HPath(d, n), false); 0L }
-    }(Encoders.scalaLong).reduce(_ + _)
+    FileSink.mapFileTasks(spark, path, names)((fs, src) => fs.delete(src, false))
 
-    transformed
+    names.size.toLong
   }
 
   /** Encrypt every data file in `path` in executor tasks; each `<name>`

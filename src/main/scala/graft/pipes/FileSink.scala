@@ -3,8 +3,12 @@ package graft.pipes
 import java.security.{DigestInputStream, MessageDigest}
 import java.util.zip.GZIPInputStream
 
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.HadoopConf
 
 /** File/HDFS/S3 sink with the reference's integrity protocol.
   *
@@ -21,10 +25,13 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   * (pipe/file.go:717-760); here the equivalent is a TASK-side pass — the
   * driver lists file names (a metadata op) and executors stream-hash the
   * files in parallel via the Hadoop FileSystem API (works for file://,
-  * hdfs:// and s3a:// uniformly). At 1 GB × thousands of files this is a
-  * wide map, not hours of single-threaded driver I/O.
+  * hdfs:// and s3a:// uniformly). The names are sliced straight into
+  * tasks ([[mapFileTasks]]), so the manifest is one narrow job with no
+  * shuffle. At 1 GB × thousands of files this is a parallel map, not
+  * hours of single-threaded driver I/O.
   *
-  * Encrypt+sign (:384-437) is the same post-commit pass —
+  * Encrypt+sign (:384-437) is the same post-commit pass over the same
+  * per-file tasks —
   * [[CryptoStage.encryptDirPgp]] (real RFC 4880 wire format, [[Pgp]]) or
   * [[CryptoStage.encryptDir]] (JCA hybrid envelope with signatures).
   */
@@ -78,35 +85,45 @@ object FileSink {
     Manifest(name, if (countRecs) recs else -1L, hash)
   }
 
-  /** SHA-256 each data file in executor tasks and write `<dir>/_DONE`
-    * (end-of-stream marker, K6). NumRecs counts records for line formats;
-    * -1 for binary formats (hash still guards integrity).
+  /** Names of the data files directly under `dir`: names starting with
+    * `_` or `.` are markers (`_DONE`, `_SUCCESS`) and temps.
     */
-  def writeDoneManifest(spark: SparkSession, path: String, format: String): Seq[Manifest] = {
-    val dir = new HPath(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(conf)
-    val names = fs.listStatus(dir).toSeq
+  private[pipes] def dataFiles(fs: FileSystem, dir: HPath): Seq[String] =
+    fs.listStatus(dir).toSeq
       .filter(_.isFile)
       .map(_.getPath.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    // Configuration is not serializable — ship its entries and rebuild per
-    // task (keeps s3a/hdfs credentials and settings intact).
-    val confEntries = graft.core.HadoopConf.ship(spark)
-    val dirStr = path
+
+  /** Apply `f` to each named file under `path` in executor tasks and
+    * collect the results: `parallelize(names, n)` slices the names into at
+    * most `defaultParallelism` tasks, so the pass is one narrow job. Each
+    * task rebuilds its FileSystem from the shipped Hadoop configuration
+    * (`Configuration` is not serializable; shipping its entries keeps
+    * s3a/hdfs credentials and settings intact).
+    */
+  private[pipes] def mapFileTasks[T: ClassTag](spark: SparkSession, path: String,
+      names: Seq[String])(f: (FileSystem, HPath) => T): Seq[T] =
+    if (names.isEmpty) Seq.empty
+    else {
+      val confEntries = HadoopConf.ship(spark)
+      val slices = math.min(names.size, spark.sparkContext.defaultParallelism)
+      spark.sparkContext.parallelize(names, slices).mapPartitions { it =>
+        val dir = new HPath(path)
+        val fs = dir.getFileSystem(HadoopConf.rebuild(confEntries))
+        it.map(n => f(fs, new HPath(dir, n)))
+      }.collect().toSeq
+    }
+
+  /** SHA-256 each data file in executor tasks (one narrow job) and write
+    * `<dir>/_DONE` (end-of-stream marker, K6). NumRecs counts records for
+    * line formats; -1 for binary formats (hash still guards integrity).
+    */
+  def writeDoneManifest(spark: SparkSession, path: String, format: String): Seq[Manifest] = {
+    val dir = new HPath(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val countRecs = isLineFormat(format)
-    val parallelism = math.max(1, math.min(names.size, spark.sparkContext.defaultParallelism))
-    val entries =
-      if (names.isEmpty) Seq.empty[Manifest]
-      else spark.createDataset(names)(Encoders.STRING)
-        .repartition(parallelism)
-        .mapPartitions { it =>
-          val d = new HPath(dirStr)
-          val taskFs = d.getFileSystem(graft.core.HadoopConf.rebuild(confEntries))
-          it.map(n => hashOne(taskFs, new HPath(d, n), countRecs))
-        }(Encoders.product[Manifest])
-        .collect().toSeq
-    val sorted = entries.sortBy(_.fileName)
+    val sorted = mapFileTasks(spark, path, dataFiles(fs, dir))(hashOne(_, _, countRecs))
+      .sortBy(_.fileName)
     val json = sorted.map(m =>
       s"""{"NumRecs":${m.numRecs},"Hash":"${m.hash}","FileName":"${m.fileName}"}""")
       .mkString("[", ",", "]")

@@ -12,19 +12,26 @@ import graft.state.StateStore
   * loop (O1, /root/reference/main.go:57-66) + streamer start
   * (/root/reference/streamer/streamer.go:224-310).
   *
-  * For each unsynced registration: run the snapshot phase (batch), then the
-  * changelog phase (Structured Streaming), encode to the registered output
-  * format, write through the pipe, mark synced. Task leases (O2) are not
-  * needed — one driver owns all queries; `ClusterConcurrency` (O11) is
-  * [[ClusterLimiter]]: wrap `runTask` in `limiter.withSlot(spark, cluster)`
-  * to cap concurrent tasks per source cluster and tag their jobs into a
-  * per-cluster FAIR pool.
+  * For each unsynced registration: start the changelog phase (Structured
+  * Streaming), write the snapshot phase (batch) while its epochs run —
+  * the reference's consumer-first order (streamer.go:196-199) — encode to
+  * the registered output format, write through the pipe, mark synced.
+  * Task leases (O2) are not needed — one driver owns all queries;
+  * `ClusterConcurrency` (O11) is [[ClusterLimiter]]: wrap `runTask` in
+  * `limiter.withSlot(spark, cluster)` to cap concurrent tasks per source
+  * cluster and tag their jobs into a per-cluster FAIR pool.
   */
 class Coordinator(spark: SparkSession, state: StateStore, outRoot: String) {
 
-  /** Process one registration end-to-end over fixture data:
-    * snapshot → seqno-sentinel rows → changelog expansion with epoch
-    * seqnos → CF-JSON → file pipe with `_DONE` manifest.
+  /** Process one registration end-to-end over fixture data: the changelog
+    * query starts first and expands events with epoch seqnos into
+    * `log/epoch=N`; meanwhile this thread writes the snapshot, with
+    * seqno-sentinel rows, into `snapshot/`; both go CF-JSON → file pipe
+    * with `_DONE` manifest. The two phases write separate directories and
+    * snapshot rows carry seqno 0, so latest-seqno-wins resolves the same
+    * state whichever phase finishes first. If the snapshot write fails,
+    * the query is stopped before the error propagates; the registration
+    * is marked synced only when both phases succeed.
     *
     * @param snapshot  the consistent-snapshot DataFrame (JDBC or parquet)
     * @param changelog streaming DataFrame with `op` + payload columns
@@ -36,18 +43,23 @@ class Coordinator(spark: SparkSession, state: StateStore, outRoot: String) {
     val payloadCols = snapshot.columns.toSeq
     val outDir = s"$outRoot/${reg.cluster}.${reg.db}.${reg.table}.v${reg.version}"
 
-    // Phase 1: snapshot with sentinel seqno (snapshot/mysql.go:301)
-    val snapRows = Streamer.snapshotPhase(snapshot)
-    val snapEncoded = encodeCf(snapRows, pkCols, payloadCols)
-    val snapManifest = FileSink.write(snapEncoded, s"$outDir/snapshot", "json")
-
-    // Phase 2: changelog (consumer offsets start from checkpoint created
-    // before/with the snapshot — micro-batch replay covers the fence gap)
+    // Consumer first (streamer.go:196-199): the query's epochs run on its
+    // own thread while the snapshot is written on this one.
     val logManifest = scala.collection.mutable.ArrayBuffer.empty[FileSink.Manifest]
     val q = Streamer.changelogPhase(changelog, orderCols, checkpoint, (batch, epoch) => {
       val enc = encodeCf(batch, pkCols, payloadCols)
       logManifest ++= FileSink.write(enc, s"$outDir/log/epoch=$epoch", "json")
     })
+
+    // Snapshot with sentinel seqno (snapshot/mysql.go:301)
+    val snapManifest =
+      try FileSink.write(encodeCf(Streamer.snapshotPhase(snapshot), pkCols, payloadCols),
+        s"$outDir/snapshot", "json")
+      catch {
+        case t: Throwable =>
+          try q.stop() catch { case s: Throwable => t.addSuppressed(s) }
+          throw t
+      }
     q.awaitTermination()
 
     state.markSynced(reg.key)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.changelog.Changelog
 
-/** Snapshot-then-stream orchestration (O3/O4/O6).
+/** Snapshot + changelog orchestration (O3/O4/O6).
   *
   * Reference protocol (/root/reference/streamer/streamer.go:183-310):
   *  1. the changelog consumer is created BEFORE snapshotting (":196-199 —
@@ -18,9 +18,13 @@ import graft.changelog.Changelog
   *     rows carry the monotone per-cluster seqno; readers resolve conflicts
   *     latest-seqno-wins.
   *
-  * Spark mapping: phase 1+2 collapse to "record the streaming source's
-  * starting offset (checkpoint) before running the batch snapshot"; the
-  * replay of buffered events comes free from micro-batch replay. Seqnos
+  * Spark mapping: [[Coordinator.runTask]] starts [[changelogPhase]] (the
+  * consumer) before it evaluates [[snapshotPhase]], the order of
+  * streamer.go:196-199, and writes the snapshot while the query's epochs
+  * run; the query's checkpoint holds its offsets, so buffered events come
+  * free from micro-batch replay. The phases write separate directories
+  * and snapshot rows carry the sentinel seqno, so latest-seqno-wins
+  * resolves the same state whichever phase finishes first. Seqnos
   * are `(epochId << 32) | rowIndex` — monotone across restarts because
   * epochId is checkpointed (vs. the reference persisting the counter every
   * SeqnoSaveInterval and skipping forward — changelog/mysql.go:394-417).
@@ -29,14 +33,14 @@ object Streamer {
 
   val SnapshotSeqno = 0L // sentinel: any log event outranks snapshot state
 
-  /** Phase 1: batch snapshot with sentinel seqno. */
+  /** Snapshot phase: batch snapshot rows with the sentinel seqno. */
   def snapshotPhase(snapshot: DataFrame): DataFrame =
     snapshot
       .withColumn("seqno", lit(SnapshotSeqno))
       .withColumn("op", lit("insert"))
       .withColumn("half", lit(1))
 
-  /** Phase 2: continuous changelog with expansion + durable seqnos,
+  /** Changelog phase: streaming changelog with expansion + durable seqnos,
     * `foreachBatch` so each micro-batch gets its epoch-scoped seqnos and
     * any pipe (file/JDBC/Kafka) can sit at the end.
     *

@@ -1,14 +1,49 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.changelog.BinlogWire
 import graft.core.Tables
 import graft.metrics.{Metrics, MetricsListeners}
 import graft.state.StateStore
 import graft.state.StateStore.Registration
+import graft.sources.BinlogFixture
 import graft.stream.{ClusterLimiter, Coordinator, Streamer}
+
+/** Cross-thread probe for the onboarding-order test: the snapshot's UDF
+  * records whether a streaming query was active when the snapshot was
+  * evaluated, and the changelog's UDF holds the query's first epoch until
+  * that has happened, so the query cannot finish before the snapshot is
+  * read (the hold is bounded: it never waits past 30 s).
+  */
+object OnboardOrderProbe {
+  @volatile var snapshotRead = new CountDownLatch(1)
+  val active = new AtomicInteger()
+  val idle = new AtomicInteger()
+
+  def reset(): Unit = {
+    snapshotRead = new CountDownLatch(1)
+    active.set(0)
+    idle.set(0)
+  }
+
+  def snapshotRow(name: String): String = {
+    if (SharedSpark.spark.streams.active.nonEmpty) active.incrementAndGet()
+    else idle.incrementAndGet()
+    snapshotRead.countDown()
+    name
+  }
+
+  def changelogRow(op: String): String = {
+    snapshotRead.await(30, TimeUnit.SECONDS)
+    op
+  }
+}
 
 /** Integrated worker-loop proof (O1 + O11 + metrics): a full registration
   * processed through the Coordinator inside a cluster-limiter slot with
@@ -82,5 +117,81 @@ class CoordinatorSpec extends SparkSuite {
       }
       assert(limiter.running(reg.cluster) == 0)
     } finally MetricsListeners.uninstall(spark, listeners)
+  }
+
+  private val binlogTable = BinlogWire.TableDef("shop", "items", Seq(
+    BinlogWire.Col("id", BinlogWire.T.LONGLONG),
+    BinlogWire.Col("name", BinlogWire.T.VARCHAR, meta = 32)))
+
+  /** A 12-transaction binary binlog over ids 0..7 (inserts, then updates
+    * and deletes), read by `graft-binlog` two events per epoch; `gate`
+    * wraps the `op` column.
+    */
+  private def binlogChangelog(work: String, gate: Column => Column): DataFrame = {
+    def img(id: Long, name: String): IndexedSeq[Any] = IndexedSeq(java.lang.Long.valueOf(id), name)
+    val uuid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
+    val rows = (0L until 8L).map(i => BinlogWire.Row("insert", None, Some(img(i, s"b$i")))) ++
+      Seq(BinlogWire.Row("update", Some(img(1, "b1")), Some(img(1, "u1"))),
+        BinlogWire.Row("update", Some(img(2, "b2")), Some(img(2, "u2"))),
+        BinlogWire.Row("delete", Some(img(3, "b3")), None),
+        BinlogWire.Row("update", Some(img(1, "u1")), Some(img(1, "v1"))))
+    val path = s"$work/backlog.binlog"
+    BinlogFixture.writeBinary(path, rows.zipWithIndex.iterator.map { case (r, g) =>
+      BinlogWire.Txn(uuid, g + 1L, 1700000000000L + g * 1000L, binlogTable, Seq(r))
+    })
+    spark.readStream.format("graft-binlog")
+      .option("path", path)
+      .option("maxEventsPerTrigger", "2")
+      .load()
+      .filter(col("op") =!= "ddl")
+      .select(col("seq"), gate(col("op")).as("op"),
+        from_json(col("payload"), org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, name STRING")).as("r"))
+      .select(col("seq"), col("op"), col("r.id").as("id"), col("r.name").as("name"))
+  }
+
+  private def newTask(tag: String): (String, StateStore, Registration, Coordinator) = {
+    val work = Files.createTempDirectory(s"graft-coord-$tag").toString
+    val state = new StateStore(s"$work/state")
+    val reg = Registration("svc", "cl1", "shop", "items", "mysql", "file", "json")
+    state.register(reg)
+    (work, state, reg, new Coordinator(spark, state, s"$work/out"))
+  }
+
+  test("runTask starts the changelog consumer before it reads the snapshot") {
+    // streamer.go:196-199: the consumer is created before the table is
+    // snapshotted, and the snapshot is written while the query runs
+    assert(spark.streams.active.isEmpty)
+    OnboardOrderProbe.reset()
+    val (work, state, reg, coordinator) = newTask("order")
+    val probeSnapshot = udf((n: String) => OnboardOrderProbe.snapshotRow(n))
+    val holdEpoch = udf((op: String) => OnboardOrderProbe.changelogRow(op))
+    val snapshot = spark.range(0, 8)
+      .select(col("id"), probeSnapshot(concat(lit("s"), col("id").cast("string"))).as("name"))
+    val manifests = coordinator.runTask(reg, snapshot, binlogChangelog(work, holdEpoch(_)),
+      pkCols = Seq("id"), orderCols = Seq("seq"), checkpoint = s"$work/ckpt")
+
+    assert(OnboardOrderProbe.active.get() > 0 && OnboardOrderProbe.idle.get() == 0,
+      s"snapshot rows read with the changelog query active: ${OnboardOrderProbe.active.get()}, " +
+        s"idle: ${OnboardOrderProbe.idle.get()}")
+    assert(spark.streams.active.isEmpty)
+    assert(state.listRegistrations.head.state == "synced")
+    // 8 snapshot rows + 12 events, of which 3 updates write two halves
+    val outBase = s"$work/out/cl1.shop.items.v0"
+    assert(manifests.map(_.numRecs).sum == 8 + 12 + 3)
+    assert(spark.read.json(s"$outBase/snapshot").count() +
+      spark.read.json(s"$outBase/log/*").count() == 8 + 12 + 3)
+  }
+
+  test("a failed snapshot stops the changelog query and leaves the registration unsynced") {
+    assert(spark.streams.active.isEmpty)
+    val (work, state, reg, coordinator) = newTask("fail")
+    val snapshot = spark.range(0, 8)
+      .select(col("id"), raise_error(lit("snapshot failed")).cast("string").as("name"))
+    intercept[Exception] {
+      coordinator.runTask(reg, snapshot, binlogChangelog(work, identity),
+        pkCols = Seq("id"), orderCols = Seq("seq"), checkpoint = s"$work/ckpt")
+    }
+    assert(spark.streams.active.isEmpty, spark.streams.active.map(_.name).mkString(","))
+    assert(state.listRegistrations.head.state != "synced")
   }
 }

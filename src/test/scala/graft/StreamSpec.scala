@@ -140,6 +140,62 @@ class FileSinkSpec extends SparkSuite {
     }
   }
 
+  test("_DONE manifest is one narrow job: no shuffle, entries match the files") {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val dir = Files.createTempDirectory("graft-sinkjobs")
+    val bodies = (0 until 4).map { i =>
+      val body = (0 to i * 3).map(j => s"""{"k":$j}""").mkString("", "\n", "\n").getBytes("UTF-8")
+      Files.write(dir.resolve(f"part-$i%05d.json"), body)
+      f"part-$i%05d.json" -> body
+    }.toMap
+
+    val sc = spark.sparkContext
+    val group = "graft-manifest-jobs"
+    val jobs = new AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new AtomicLong()
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+          case Some("graft-manifest-barrier") => drained = true
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    val manifest = try {
+      sc.setJobGroup(group, "manifest")
+      val m = FileSink.writeDoneManifest(spark, dir.toString, "json")
+      // listener events arrive in order: once the barrier job's start is
+      // seen, every event of the manifest's jobs has been delivered
+      sc.setJobGroup("graft-manifest-barrier", "barrier")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 20000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(drained, "listener bus did not deliver the barrier job")
+      m
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+
+    assert(jobs.get() == 1, s"manifest ran ${jobs.get()} jobs")
+    assert(shuffleBytes.get() == 0L, s"manifest wrote ${shuffleBytes.get()} shuffle bytes")
+    assert(manifest.map(_.fileName) == bodies.keys.toSeq.sorted)
+    manifest.foreach { m =>
+      val body = bodies(m.fileName)
+      val sha = java.security.MessageDigest.getInstance("SHA-256").digest(body)
+        .map("%02x".format(_)).mkString
+      assert(m.hash == sha, m.fileName)
+      assert(m.numRecs == body.count(_ == '\n'), m.fileName)
+    }
+  }
+
   test("gzip json sink hashes stored files and round-trips through the reader") {
     val dir = Files.createTempDirectory("graft-sinkgz").toString + "/out"
     val manifest = FileSink.write(
