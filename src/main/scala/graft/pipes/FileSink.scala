@@ -31,9 +31,9 @@ import graft.core.HadoopConf
   * hours of single-threaded driver I/O.
   *
   * Encrypt+sign (:384-437) is the same post-commit pass over the same
-  * per-file tasks —
-  * [[CryptoStage.encryptDirPgp]] (real RFC 4880 wire format, [[Pgp]]) or
-  * [[CryptoStage.encryptDir]] (JCA hybrid envelope with signatures).
+  * per-file tasks — [[CryptoStage.encryptDirPgp]] (real RFC 4880 wire
+  * format, [[Pgp]]) or [[CryptoStage.encryptDir]] (JCA hybrid envelope
+  * with signatures).
   */
 object FileSink {
 
