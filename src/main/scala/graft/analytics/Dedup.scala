@@ -34,6 +34,11 @@ object Dedup {
     * FIRST so the ~n× explode fan-out runs on every core even when the
     * source is a single parquet file (and, at 100 TB, so skewed input
     * files don't serialize the hash work).
+    *
+    * This exploded form is the REFERENCE the per-row kernels are pinned
+    * against ([[minhashWide]], MinHashNativeSpec, ShingleSetSpec): the
+    * production paths cut the same code-point windows inside one row
+    * ([[graft.functions.MinHashSignature]], [[graft.functions.ShingleSet]]).
     */
   def shingles(docs: DataFrame, idCol: String, text: Column, k: Int): DataFrame =
     Spread.byKey(docs, col(idCol))
@@ -155,13 +160,17 @@ object Dedup {
     * docs in SHAREABLE buckets (2 ≤ members ≤ cap) need sets at all, and
     * their id set is broadcast back into the shingle scan so
     * non-colliding docs never leave it.
+    *
+    * Precondition: `docs` holds ONE row per id. Each row's shingle set is
+    * built on its own ([[graft.functions.ShingleSet]]), so two rows
+    * sharing an id would yield two sets, not their union.
     */
   def lshVerifiedPairs(bandKeys: DataFrame, docs: DataFrame, idCol: String,
                        text: Column, k: Int, maxBucket: Int = 1000): DataFrame = {
     // MATERIALIZED once (r19): `shareable` is referenced by candIds AND
     // banded, and `banded` twice more by the bucket self-join — unpinned,
     // Catalyst executed the MinHash band-key pipeline up to 4x and the
-    // shingle-set aggregation 2x per invocation (guide §7.2 duplicated
+    // shingle-set build 2x per invocation (guide §7.2 duplicated
     // subtrees). Both pins are DISK_ONLY: band rows and set arrays are
     // corpus-proportional (the r15 sf100 sizing story is unchanged — the
     // cache holds exactly the rows the join already shipped).
@@ -173,14 +182,14 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
     implicit val spark = docs.sparkSession
     val candIds = shareable.select(col(idCol)).distinct()
-    // sets built SORTED (an O(n log n) once per doc) so the per-pair
-    // intersect below is a primitive two-pointer merge, not an
-    // array_intersect hash-set rebuild per candidate pair — see
+    // sets built SORTED, once per doc and within its row (ShingleSet: no
+    // shingle explode, no aggregation shuffle), so the per-pair intersect
+    // below is a primitive two-pointer merge, not an array_intersect
+    // hash-set rebuild per candidate pair — see
     // [[graft.functions.SortedIntersectCount]] for the sf100 numbers
-    val sets = shingles(
-        docs.join(broadcast(candIds), Seq(idCol), "left_semi"), idCol, text, k)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("ss"))
+    val sets = Spread.byKey(
+        docs.join(broadcast(candIds), Seq(idCol), "left_semi"), col(idCol))
+      .select(col(idCol), graft.functions.ShingleSet.column(text, k).as("ss"))
     val banded = graft.core.CacheRegistry.register(
       shareable.join(sets, Seq(idCol))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
@@ -240,10 +249,14 @@ object Dedup {
     * shingle sets. Run AFTER LSH candidate generation — the join is on
     * (pair), not all-pairs. Jaccard returned in exact integer form
     * (inter, uni) plus the double ratio.
+    *
+    * Precondition: `docs` holds ONE row per id (sets are built per row by
+    * [[graft.functions.ShingleSet]], not merged across rows that share an
+    * id).
     */
   def ngramJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
                    text: Column, k: Int): DataFrame = {
-    // CANDIDATE-BOUNDED since r15: the shingle-set aggregation runs only
+    // CANDIDATE-BOUNDED since r15: the shingle sets are built only
     // over docs that appear in `pairs` (broadcast semi join — the id set
     // is <= 2x|pairs|), so non-candidate docs never leave their scan.
     // NOTE the per-pair shape that remains: each doc's set array rides
@@ -252,24 +265,21 @@ object Dedup {
     // demo pairs, the sampled recall eval) but became ~600 GB of shuffle
     // at sf100's 78M LSH candidates — the corpus-scale pipeline path is
     // [[lshVerifiedPairs]], where sets move once per BAND instead.
-    // shuffle 8-byte hashes, not shingle strings (64-bit collisions are
+    // sets hold 8-byte hashes, not shingle strings (64-bit collisions are
     // ~1e-8 at billions of shingles — acceptable for near-dup detection)
     implicit val spark = docs.sparkSession
     val candIds = pairs.select(col("doc_a").as(idCol))
       .unionByName(pairs.select(col("doc_b").as(idCol)))
       .distinct()
     // MATERIALIZED once (r19): the pair join below consumes `docSets`
-    // twice (ss_a and ss_b sides) and Catalyst planned them as two
-    // independent copies of the whole shingle explode + collect_set
-    // aggregation (plan audit: 8 collect_set nodes = 2 aggregates x
-    // partial/final x 2 sides in q_ngram_jaccard/q_containment before
-    // this). One DISK_ONLY materialization halves the shingle work at
-    // any scale; set arrays are candidate-doc-proportional, so they go
-    // to executor disk, not the heap (dsirSelect discipline).
-    val docSets = graft.core.CacheRegistry.register(shingles(
-        docs.join(broadcast(candIds), Seq(idCol), "left_semi"), idCol, text, k)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(xxhash64(col("shingle")))).as("ss"))
+    // twice (ss_a and ss_b sides), and unpinned Catalyst plans them as two
+    // independent copies of the whole set build. One DISK_ONLY
+    // materialization halves the shingle work at any scale; set arrays
+    // are candidate-doc-proportional, so they go to executor disk, not the
+    // heap (dsirSelect discipline).
+    val docSets = graft.core.CacheRegistry.register(Spread.byKey(
+        docs.join(broadcast(candIds), Seq(idCol), "left_semi"), col(idCol))
+      .select(col(idCol), graft.functions.ShingleSet.column(text, k).as("ss"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
     val inter = pairs
       .join(docSets.select(col(idCol).as("doc_a"), col("ss").as("ss_a")), "doc_a")

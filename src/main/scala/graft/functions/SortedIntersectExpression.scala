@@ -16,19 +16,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * candidate pair (~10^11 hash inserts at sf100's 78M capped pairs with
   * ~1.3k-element shingle sets; the dominant constant left after the r15
   * fusion moved set movement off the pair multiplicity). The set arrays
-  * are built ONCE per doc by the aggregation anyway, so sorting them
-  * there (`sort_array(collect_set(...))`, an O(n log n) paid once per
-  * doc-band) converts every pair evaluation into a single O(|a|+|b|)
-  * primitive two-pointer merge: no allocation, no hashing, stays inside
-  * whole-stage codegen.
+  * are built ONCE per doc anyway, so sorting them there (an O(n log n)
+  * paid once per doc) converts every pair evaluation into a single
+  * O(|a|+|b|) primitive two-pointer merge: no allocation, no hashing,
+  * stays inside whole-stage codegen.
   *
   * CONTRACT (analysis-enforced where possible): element type bigint with
-  * containsNull=false (collect_set output — rejected otherwise by
-  * checkInputDataTypes); both arrays sorted ascending with distinct
-  * elements (NOT checkable per row without forfeiting the win — pinned
-  * instead by SortedIntersectSpec's parity sweep against array_intersect
-  * and by the call sites building sets exclusively via
-  * sort_array ∘ collect_set). On sorted distinct inputs the count is
+  * containsNull=false (rejected otherwise by checkInputDataTypes); both
+  * arrays sorted ascending with distinct elements (NOT checkable per row
+  * without forfeiting the win — pinned instead by SortedIntersectSpec's
+  * parity sweep against array_intersect, and by the sets coming from
+  * [[ShingleSet]], whose sorted-distinct output ShingleSetSpec pins
+  * against `sort_array(collect_set(..))`, or from
+  * sort_array ∘ collect_set directly). On sorted distinct inputs the count is
   * bit-identical to `size(array_intersect(a, b))`; on UNSORTED or
   * duplicated input the merge silently undercounts — so a debug-only
   * per-row assertion (strictly-ascending check on both sides, throwing
@@ -141,7 +141,7 @@ object SortedIntersectCount {
         throw new IllegalStateException(
           s"$name: $side input violates the sorted-distinct contract at " +
             s"index $i (${xs.getLong(i - 1)} >= ${xs.getLong(i)}); build " +
-            "inputs via sort_array(collect_set(..))")
+            "inputs via ShingleSet or sort_array(collect_set(..))")
       i += 1
     }
   }

@@ -10,7 +10,8 @@ import graft.functions.SortedIntersectCount
   * item). The merge is only correct on SORTED DISTINCT inputs — that
   * contract is what these tests pin: value parity against array_intersect
   * on adversarial inputs, both codegen paths, and the call sites actually
-  * building sets via sort_array ∘ collect_set.
+  * building sets via the sorted-distinct ShingleSet kernel (whose parity
+  * with sort_array ∘ collect_set ShingleSetSpec pins).
   */
 class SortedIntersectSpec extends SparkSuite {
 
@@ -106,15 +107,14 @@ class SortedIntersectSpec extends SparkSuite {
     val plan = verified.queryExecution.executedPlan.toString
     assert(plan.contains(SortedIntersectCount.name), plan.take(4000))
     assert(!plan.contains("array_intersect"), plan.take(4000))
-    // the sets the kernel consumes are built sorted at the aggregation —
-    // the r19 pin moved the set aggregate behind an InMemoryRelation
-    // leaf, and asserting on the analyzed plan was near-tautological (the
-    // analyzed tree always carries the expression the query was written
-    // with — r19 ADVICE item 3). Check the CACHED plans instead: walk
-    // every InMemoryTableScan's cachedPlan (unwrapping AQE wrappers,
-    // which are leaf nodes) and require a physical aggregate whose result
-    // expressions still contain SortArray — i.e. sorted-set construction
-    // survives to the plan that actually executes.
+    // the sets the kernel consumes are built sorted by ShingleSet, and
+    // they sit behind an InMemoryRelation leaf (the r19 pin), so asserting
+    // on the analyzed plan would be near-tautological (the analyzed tree
+    // always carries the expression the query was written with — r19
+    // ADVICE item 3). Check the CACHED plans instead: walk every
+    // InMemoryTableScan's cachedPlan (unwrapping AQE wrappers, which are
+    // leaf nodes) and require a physical node that evaluates ShingleSet —
+    // i.e. sorted-set construction survives to the plan that executes.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -123,14 +123,10 @@ class SortedIntersectSpec extends SparkSuite {
       case s: InMemoryTableScanExec => s +: expand(s.relation.cachedPlan)
       case q => Seq(q)
     }
-    val cachedAggSorted = expand(verified.queryExecution.executedPlan).exists {
-      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec =>
-        a.resultExpressions.exists(_.find(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SortArray]).isDefined)
-      case _ => false
-    }
-    assert(cachedAggSorted,
-      "no cached aggregate carries sort_array in its result expressions:\n" +
+    val cachedSetBuild = expand(verified.queryExecution.executedPlan).exists(
+      _.expressions.exists(_.find(_.isInstanceOf[graft.functions.ShingleSet]).isDefined))
+    assert(cachedSetBuild,
+      "no cached plan node evaluates ShingleSet:\n" +
         expand(verified.queryExecution.executedPlan).mkString("\n").take(4000))
   }
 
