@@ -462,7 +462,6 @@ object QueriesAnalytics {
     * window passes, not dot products.
     */
   def annRecall(s: SparkSession, dir: String): DataFrame = {
-    implicit val sp: SparkSession = s
     val buckets = embedLsh(s, dir)
     val q = emb(s, dir).select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
     val pq = q.filter(col("vec_id") % 40 === 0)
@@ -538,7 +537,6 @@ object QueriesAnalytics {
     * AFTER this contract (PcaSpec covers eigen/projection).
     */
   def embedCovariance(s: SparkSession, dir: String): DataFrame = {
-    implicit val ss: SparkSession = s
     val d = 64
     val tri = d * (d + 1) / 2
     val m = emb(s, dir)
@@ -568,7 +566,6 @@ object QueriesAnalytics {
     * by Verify AFTER the query stashed the model for its sf dir).
     */
   def pcaProject(s: SparkSession, dir: String): DataFrame = {
-    implicit val ss: SparkSession = s
     val e = emb(s, dir)
     val model = graft.analytics.Pca.train(e, col("embedding"), d = 64)
     graft.analytics.PcaModels.stash.put(dir, model)

@@ -1371,7 +1371,6 @@ object QueriesCdc {
     */
   def streamNeardup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    implicit val sp: SparkSession = s
     val src = Tmp.stagedOnce("sneardup_src", dir) { p =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       // The file source orders batches by file MODIFICATION TIME, so a

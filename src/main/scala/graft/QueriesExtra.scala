@@ -33,7 +33,7 @@ object QueriesExtra {
       .join(q.select(col("vec_id").as("vec_a"), col("qv").as("qa")), "vec_a")
       .join(q.select(col("vec_id").as("vec_b"), col("qv").as("qb")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
-        Similarity.dotQ(col("qa"), col("qb"))(s).as("dot"))
+        Similarity.dotQ(col("qa"), col("qb")).as("dot"))
       .filter(col("dot") > 20000) // ~cos 0.02 at scale 1000 on unit-ish vectors.
       // Deliberately loose: the LSH band cap already bounds candidate
       // volume, and the loose cut keeps the verified graph DENSE and

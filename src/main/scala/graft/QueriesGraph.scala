@@ -419,7 +419,6 @@ object QueriesGraph {
     * the broadcast; this operator is the exact-scoring twin.
     */
   def knnClassify(s: SparkSession, dir: String): DataFrame = {
-    implicit val sp: SparkSession = s
     val e = emb(s, dir).select(col("vec_id"),
       Similarity.quantize(col("embedding")).as("qv"), col("label"))
     val test = e.filter(col("vec_id") % 5 === 0)
@@ -458,7 +457,6 @@ object QueriesGraph {
 
   private[graft] def knnIvfImpl(s: SparkSession, dir: String, nprobe: Int,
                                 evalPred: Column): DataFrame = {
-    implicit val sp: SparkSession = s
     val e = emb(s, dir).select(col("vec_id"), col("embedding"), col("label"))
     val train = e.filter(col("vec_id") % 4 =!= 0)
     val ivf = Ivf.Model.parse( // persist/restore path, same as ivfProbe

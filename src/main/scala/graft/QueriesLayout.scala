@@ -148,7 +148,8 @@ object QueriesLayout {
     * filter); the probe column is hashed once and checked against bits.
     */
   def bloomPrune(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
@@ -176,15 +177,11 @@ object QueriesLayout {
       SessionConf.scoped(s,
           items -> math.max(s.conf.get(items).toLong, evalCount).toString,
           bits -> math.max(s.conf.get(bits).toLong, numBits).toString) {
-        val registry = s.sessionState.functionRegistry
-        registry.createOrReplaceTempFunction("graft_bloom_agg",
-          exprs => new BloomFilterAggregate(exprs.head,
-            org.apache.spark.sql.catalyst.expressions.Literal(evalCount),
-            org.apache.spark.sql.catalyst.expressions.Literal(numBits)), "built-in")
-        registry.createOrReplaceTempFunction("graft_might_contain",
-          exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
+        val bloom = new BloomFilterAggregate(
+          GraftColumnBridge.expression(xxhash64(col("gram"))),
+          Literal(evalCount), Literal(numBits))
         evalGrams
-          .agg(call_function("graft_bloom_agg", xxhash64(col("gram"))).as("bf"))
+          .agg(GraftColumnBridge.column(bloom.toAggregateExpression()).as("bf"))
           .head.getAs[Array[Byte]](0)
       }
     }
@@ -202,7 +199,8 @@ object QueriesLayout {
     val verifySide = QueriesTraining.evalVerifySide(evalGrams, evalCount)
     grams.filter(col("doc_id") % 17 =!= 0)
       // sketch pre-prune (false positives possible), codegen'd bit probe
-      .filter(call_function("graft_might_contain", lit(sketch), xxhash64(col("gram"))))
+      .filter(GraftColumnBridge.column(BloomFilterMightContain(
+        Literal(sketch), GraftColumnBridge.expression(xxhash64(col("gram"))))))
       .join(verifySide, "gram") // exact verify: false positives die here
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hit_grams"))

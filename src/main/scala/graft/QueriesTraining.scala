@@ -171,7 +171,6 @@ object QueriesTraining {
     * 3.8 s at sf0.1 vs ~0.3 s native, same integers out.
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
-    implicit val sp: SparkSession = s
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.TokenStats.column(col("text")).as("ts"))
@@ -424,7 +423,6 @@ object QueriesTraining {
     * expression tree — 46 s at sf0.1 vs ~3 s native, same bytes out.
     */
   private[graft] def substringDedupOn(d: DataFrame, w: Int): DataFrame = {
-    implicit val s: SparkSession = d.sparkSession
     val base = d.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
     val windows = d.select(col("doc_id"),
@@ -742,7 +740,7 @@ object QueriesTraining {
     val scored = e.select(col("vec_id").as("cand_id"), col("q").as("qc"))
       .join(broadcast(anchors), col("anchor_id") =!= col("cand_id"))
       .select(col("anchor_id"), col("cand_id"),
-        graft.analytics.Similarity.dotQ(col("qa"), col("qc"))(s).as("dot"),
+        graft.analytics.Similarity.dotQ(col("qa"), col("qc")).as("dot"),
         conv(substring(md5(concat_ws(":", col("anchor_id"), col("cand_id"))), 1, 15), 16, 10)
           .cast("long").as("h"))
     scored.groupBy(col("anchor_id"))
@@ -808,7 +806,7 @@ object QueriesTraining {
         array_contains(col("probes"), col("cell")) &&
           col("anchor_id") =!= col("cand_id"))
       .select(col("anchor_id"), col("cand_id"),
-        graft.analytics.Similarity.dotQ(col("qa"), col("qc"))(s).as("dot"),
+        graft.analytics.Similarity.dotQ(col("qa"), col("qc")).as("dot"),
         conv(substring(md5(concat_ws(":", col("anchor_id"), col("cand_id"))), 1, 15), 16, 10)
           .cast("long").as("h"))
     val pairs = scored.groupBy(col("anchor_id"))
@@ -1527,7 +1525,6 @@ object QueriesTraining {
     // executor-local disk rides the page cache and leaves the heap to
     // the aggregations. The broadcast (ratio) side executes first, so
     // one action materializes the cache before the probe side rescans.
-    implicit val sp: SparkSession = s
     val grams = graft.core.CacheRegistry.register(docs(s, dir)
       .select(col("doc_id"), (col("lang") === "en").as("tgt"),
         explode(graft.functions.NgramBuckets.column(col("text"), 2, b)).as("b"))
@@ -1567,7 +1564,6 @@ object QueriesTraining {
     */
   def streamDsir(s: SparkSession, dir: String): DataFrame = {
     val b = DsirBuckets
-    implicit val sp: SparkSession = s
     // offline training pass: one corpus scan -> 4096-row frozen model
     // (localCheckpoint, so micro-batches replay the table, not the scan)
     val ratio = dsirRatio(

@@ -25,17 +25,6 @@ object CorpusPipeline {
   def langGate(langs: Set[String])(df: DataFrame): DataFrame =
     df.filter(TextOps.predictLang(col("text")).isin(langs.toSeq: _*))
 
-  /** Normalize-fingerprint dedup: keep the smallest doc_id per
-    * whitespace/case-normalized fingerprint.
-    */
-  def fingerprintDedup(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("_fp")).orderBy(col("doc_id"))
-    df.withColumn("_fp", TextOps.fingerprint(col("text")))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_fp", "_rn")
-  }
-
   /** Deterministic 1-in-2^bits sampling by content hash — reproducible
     * across runs/engines, no RNG state, splits uniformly at any scale.
     * Keeps docs whose first md5 hex char falls in the first 16/2^bits

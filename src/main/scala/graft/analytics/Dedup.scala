@@ -82,7 +82,6 @@ object Dedup {
     */
   def minhashWideNative(docs: DataFrame, idCol: String, text: Column,
                         k: Int, numHashes: Int): DataFrame = {
-    implicit val spark = docs.sparkSession
     Spread.byKey(docs, col(idCol))
       .select(col(idCol),
         graft.functions.MinHashSignature.signature(text, k, numHashes).as("_sig"))
@@ -180,7 +179,6 @@ object Dedup {
       .filter(col("_n") >= 2 && col("_n") <= maxBucket)
       .drop("_n")
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    implicit val spark = docs.sparkSession
     val candIds = shareable.select(col(idCol)).distinct()
     // sets built SORTED, once per doc and within its row (ShingleSet: no
     // shingle explode, no aggregation shuffle), so the per-pair intersect
@@ -219,7 +217,6 @@ object Dedup {
     * shuffle (bit-identical to [[simhash]] — SimHashNativeSpec).
     */
   def simhashNative(docs: DataFrame, idCol: String, text: Column, bits: Int): DataFrame = {
-    implicit val spark = docs.sparkSession
     Spread.byKey(docs, col(idCol))
       .select(col(idCol), graft.functions.SimHash.column(text, bits).as("simhash"))
   }
@@ -267,7 +264,6 @@ object Dedup {
     // [[lshVerifiedPairs]], where sets move once per BAND instead.
     // sets hold 8-byte hashes, not shingle strings (64-bit collisions are
     // ~1e-8 at billions of shingles — acceptable for near-dup detection)
-    implicit val spark = docs.sparkSession
     val candIds = pairs.select(col("doc_a").as(idCol))
       .unionByName(pairs.select(col("doc_b").as(idCol)))
       .distinct()

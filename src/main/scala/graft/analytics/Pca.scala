@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed PCA for embedding columns — the dimensionality-reduction /
@@ -33,7 +33,6 @@ object Pca {
     * quantized vectors ([tri sums of products, per-dim sums, count]).
     */
   def moments(emb: DataFrame, vec: Column, d: Int): Array[Long] = {
-    implicit val s: SparkSession = emb.sparkSession
     val row = emb.select(Similarity.quantize(vec).as("q"))
       .agg(graft.functions.VecOuterSum.column(col("q"), d).as("m"))
       .head()
@@ -154,7 +153,6 @@ object Pca {
     * distributed projection equals a driver matmul bit-for-bit (PcaSpec).
     */
   def project(df: DataFrame, vec: Column, model: Model, k: Int): DataFrame = {
-    implicit val s: SparkSession = df.sparkSession
     require(k <= model.components.length)
     val mq = model.mean.map(x => math.round(x * 1000))
     val centered = Similarity.quantize(vec) // then subtract quantized mean

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) for embedding compression + approximate
@@ -174,56 +174,19 @@ object Pq {
   }
 
   /** Encode the corpus to PQ codes: (vec_id, codes array<int>, one code
-    * per subspace). One narrow scan + one keyed shuffle to collect the
-    * per-sub codes back into a compact row.
+    * per subspace). The native one-eval encoder has no subvector explode
+    * and no reassembly shuffle, so encode is one narrow scan (PqSpec pins
+    * parity with the composed assignExpr path). The codebooks live in the
+    * expression itself, so concurrent encodes with different models on
+    * one session cannot see each other's books.
     */
-  def encode(emb: DataFrame, id: Column, vec: Column, m: Model): DataFrame = {
-    // native one-eval encoder: no subvector explode, no reassembly
-    // shuffle — encode is a narrow scan (PqSpec pins parity with the
-    // composed assignExpr path). The registered name is unique PER CALL
-    // (process-wide counter — identityHashCode is 31-bit and can collide
-    // across live models): a shared name would let a concurrent encode
-    // with a different model rebind the function between registration and
-    // analysis and silently produce codes for the wrong codebooks. The
-    // binding is dropped as soon as the plan is analyzed, so a long-lived
-    // session does not accumulate one registry entry per model.
-    val spark = emb.sparkSession
-    val fname = s"graft_pq_encode_${encodeNameCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => graft.functions.PqEncode(exprs.head, m.books), "built-in")
-    try {
-      val out = emb.select(id.as("vec_id"),
-        call_function(fname, Similarity.quantize(vec)).as("codes"))
-      out.queryExecution.analyzed // resolve while the binding is live
-      out
-    } finally {
-      spark.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
-      ()
-    }
-  }
+  def encode(emb: DataFrame, id: Column, vec: Column, m: Model): DataFrame =
+    emb.select(id.as("vec_id"), codesColumn(vec, m).as("codes"))
 
-  private val encodeNameCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Append a native-encoder `codes` column to `df` and hand the result
-    * to `body` while the per-call temp-function binding is live (the
-    * binding discipline [[encode]] documents; here the consumer may
-    * trigger fresh analysis — e.g. a write command — so the binding
-    * stays registered for the whole callback).
-    */
-  private def withCodesColumn[T](df: DataFrame, vec: Column, m: Model)(
-      body: DataFrame => T): T = {
-    val spark = df.sparkSession
-    val fname = s"graft_pq_encode_${encodeNameCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => graft.functions.PqEncode(exprs.head, m.books), "built-in")
-    try body(df.withColumn("codes", call_function(fname, Similarity.quantize(vec))))
-    finally {
-      spark.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
-      ()
-    }
-  }
+  /** The native [[graft.functions.PqEncode]] column over quantized `vec`. */
+  private def codesColumn(vec: Column, m: Model): Column =
+    GraftColumnBridge.column(graft.functions.PqEncode(
+      GraftColumnBridge.expression(Similarity.quantize(vec)), m.books))
 
   /** The composed-builtins encoder the native path must match — kept as
     * the parity reference for PqSpec.
@@ -275,7 +238,7 @@ object Pq {
     emb.select(id.as("vec_id"), Similarity.quantize(vec).as("q"))
       .join(cand, "vec_id")
       .select(col("vec_id"),
-        Similarity.dotQ(col("q"), qlit)(emb.sparkSession).as("dot"))
+        Similarity.dotQ(col("q"), qlit).as("dot"))
       .orderBy(col("dot").desc, col("vec_id"))
       .limit(k)
   }
@@ -296,15 +259,14 @@ object Pq {
     // back onto assigned would recompute the assignment AND shuffle the
     // corpus once for nothing (cells + codes are both per-row functions
     // of the vector)
-    withCodesColumn(assigned, col("embedding"), m) { withCodes =>
-      withCodes
-        .select(col("vec_id"), col("embedding"), col("codes"), col("cell"))
-        // cluster by cell before the partitioned write: without it every
-        // input task writes a file into every cell dir (tasks x cells
-        // tiny files — the classic partitioned-write mistake at scale)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
+    assigned
+      .withColumn("codes", codesColumn(col("embedding"), m))
+      .select(col("vec_id"), col("embedding"), col("codes"), col("cell"))
+      // cluster by cell before the partitioned write: without it every
+      // input task writes a file into every cell dir (tasks x cells
+      // tiny files — the classic partitioned-write mistake at scale)
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
   }
 
   /** Probe the composed index: partition-prune to `nprobe` cells, ADC
@@ -325,7 +287,7 @@ object Pq {
     pruned
       .join(cand, "vec_id")
       .select(col("vec_id"),
-        Similarity.dotQ(Similarity.quantize(col("embedding")), qlit)(spark).as("dot"))
+        Similarity.dotQ(Similarity.quantize(col("embedding")), qlit).as("dot"))
       .orderBy(col("dot").desc, col("vec_id"))
       .limit(k)
   }

@@ -30,9 +30,7 @@ object Similarity {
     * closures per element per PAIR, which dominates candidate-verify and
     * re-rank scans (kNN measured 4.4 s -> 1.1 s at sf0.1 on the swap).
     */
-  def dotQ(a: Column, b: Column)(
-      implicit spark: org.apache.spark.sql.SparkSession): Column =
-    graft.functions.QDot.column(a, b)(spark)
+  def dotQ(a: Column, b: Column): Column = graft.functions.QDot.column(a, b)
 
   /** Brute-force top-k by quantized dot product against one query vector.
     * `queryVec` must be a 1-row DataFrame with column `qv` (already
@@ -43,7 +41,7 @@ object Similarity {
     embeddings
       .crossJoin(broadcast(queryVec))
       .select(id.as("vec_id"),
-        dotQ(quantize(vec), col("qv"))(embeddings.sparkSession).as("dot"))
+        dotQ(quantize(vec), col("qv")).as("dot"))
       .orderBy(col("dot").desc, col("vec_id"))
       .limit(k)
 

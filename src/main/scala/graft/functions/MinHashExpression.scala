@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -116,14 +117,9 @@ object MinHashSignature {
     UTF8String.fromBytes(out)
   }
 
-  /** Column API: minhash signature array for a text column. */
-  def signature(text: org.apache.spark.sql.Column, k: Int, numHashes: Int)
-               (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    // register-and-call keeps us on the public Column surface (Spark 4's
-    // Column wraps ColumnNodes, not Expressions)
-    val fname = s"graft_minhash_${k}_$numHashes"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => MinHashSignature(exprs.head, k, numHashes), "built-in")
-    org.apache.spark.sql.functions.call_function(fname, text)
-  }
+  /** Column API: minhash signature array for a text column (the
+    * expression itself, wrapped through [[GraftColumnBridge]]). */
+  def signature(text: Column, k: Int, numHashes: Int): Column =
+    GraftColumnBridge.column(
+      MinHashSignature(GraftColumnBridge.expression(text), k, numHashes))
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -87,14 +88,8 @@ case class NgramBuckets(child: Expression, maxN: Int, buckets: Long)
 }
 
 object NgramBuckets {
-  /** Column API via register-and-call (Spark 4's public Column wraps
-    * ColumnNodes, not Expressions — same pattern as [[TokenWindowHashes]]).
-    */
-  def column(text: org.apache.spark.sql.Column, maxN: Int, buckets: Long)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val fname = s"graft_ngram_buckets_${maxN}_$buckets"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => NgramBuckets(exprs.head, maxN, buckets), "built-in")
-    org.apache.spark.sql.functions.call_function(fname, text)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(text: Column, maxN: Int, buckets: Long): Column =
+    GraftColumnBridge.column(
+      NgramBuckets(GraftColumnBridge.expression(text), maxN, buckets))
 }

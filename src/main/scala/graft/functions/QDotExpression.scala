@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -49,10 +50,8 @@ case class QDot(left: Expression, right: Expression)
 }
 
 object QDot {
-  def column(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qdot", exprs => QDot(exprs(0), exprs(1)), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_qdot", a, b)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(a: Column, b: Column): Column =
+    GraftColumnBridge.column(
+      QDot(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -99,12 +100,7 @@ object ShingleSet {
   /** Spark's `xxhash64` seed. */
   val Seed = 42L
 
-  /** Column API via register-and-call (same pattern as [[MinHashSignature]]). */
-  def column(text: org.apache.spark.sql.Column, k: Int)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val fname = s"graft_shingle_set_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => ShingleSet(exprs.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(fname, text)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(text: Column, k: Int): Column =
+    GraftColumnBridge.column(ShingleSet(GraftColumnBridge.expression(text), k))
 }

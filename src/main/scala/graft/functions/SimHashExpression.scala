@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -62,11 +63,7 @@ case class SimHash(child: Expression, bits: Int)
 }
 
 object SimHash {
-  def column(text: org.apache.spark.sql.Column, bits: Int)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val fname = s"graft_simhash_$bits"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => SimHash(exprs.head, bits), "built-in")
-    org.apache.spark.sql.functions.call_function(fname, text)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(text: Column, bits: Int): Column =
+    GraftColumnBridge.column(SimHash(GraftColumnBridge.expression(text), bits))
 }

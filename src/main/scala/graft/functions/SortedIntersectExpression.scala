@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -146,21 +147,8 @@ object SortedIntersectCount {
     }
   }
 
-  def column(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => {
-        if (exprs.length != 2) throw new org.apache.spark.sql.AnalysisException(
-          "_LEGACY_ERROR_TEMP_3000",
-          Map("message" ->
-            (s"$name expects exactly 2 arguments " +
-              "(sortedA: array<bigint>, sortedB: array<bigint> — both " +
-              "sorted ascending with distinct non-null elements, i.e. " +
-              s"sort_array(collect_set(..))), got ${exprs.length}")))
-        SortedIntersectCount(exprs(0), exprs(1))
-      },
-      "built-in")
-    org.apache.spark.sql.functions.call_function(name, a, b)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(a: Column, b: Column): Column =
+    GraftColumnBridge.column(SortedIntersectCount(
+      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

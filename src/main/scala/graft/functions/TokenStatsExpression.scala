@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -66,12 +67,7 @@ case class TokenStats(child: Expression) extends UnaryExpression with CodegenFal
 }
 
 object TokenStats {
-  /** Column API via register-and-call (same pattern as [[MinHashSignature]]). */
-  def column(text: org.apache.spark.sql.Column)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val fname = "graft_token_stats"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => TokenStats(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function(fname, text)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(text: Column): Column =
+    GraftColumnBridge.column(TokenStats(GraftColumnBridge.expression(text)))
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -87,14 +88,7 @@ case class TokenWindowHashes(child: Expression, w: Int)
 }
 
 object TokenWindowHashes {
-  /** Column API via register-and-call (Spark 4's public Column wraps
-    * ColumnNodes, not Expressions — same pattern as [[MinHashSignature]]).
-    */
-  def column(text: org.apache.spark.sql.Column, w: Int)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val fname = s"graft_token_windows_$w"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => TokenWindowHashes(exprs.head, w), "built-in")
-    org.apache.spark.sql.functions.call_function(fname, text)
-  }
+  /** Column API: the expression itself, wrapped through [[GraftColumnBridge]]. */
+  def column(text: Column, w: Int): Column =
+    GraftColumnBridge.column(TokenWindowHashes(GraftColumnBridge.expression(text), w))
 }

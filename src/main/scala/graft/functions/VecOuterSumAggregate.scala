@@ -2,6 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -99,14 +100,9 @@ case class VecOuterSum(child: Expression, d: Int,
 }
 
 object VecOuterSum {
-  /** Column form via the session function registry (the repo's native-
-    * expression convention — see QDot.column).
-    */
-  def column(vec: org.apache.spark.sql.Column, d: Int)
-            (implicit spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column = {
-    val name = s"graft_vec_outer_sum_$d"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => VecOuterSum(exprs.head, d).toAggregateExpression(), "built-in")
-    org.apache.spark.sql.functions.call_function(name, vec)
-  }
+  /** Column API: the aggregate expression itself, wrapped through
+    * [[GraftColumnBridge]] (use it in `.agg`). */
+  def column(vec: Column, d: Int): Column =
+    GraftColumnBridge.column(
+      VecOuterSum(GraftColumnBridge.expression(vec), d).toAggregateExpression())
 }

@@ -46,21 +46,6 @@ object JdbcSnapshot {
     }
   }
 
-  /** Estimated row count for progress reporting
-    * (snapshot/mysql.go:95-96 information_schema.tables).
-    */
-  def estimateRows(src: JdbcSource): Try[Long] = Try {
-    Using.resource(DriverManager.getConnection(src.url, src.user, src.password)) { conn =>
-      Using.resource(conn.prepareStatement(
-        "SELECT table_rows FROM information_schema.tables " +
-          "WHERE table_schema = ? AND table_name = ?")) { st =>
-        st.setString(1, src.db); st.setString(2, src.table)
-        val rs = st.executeQuery()
-        if (rs.next()) rs.getLong(1) else 0L
-      }
-    }
-  }
-
   /** Backtick-quote an identifier (MySQL style; `` ` `` doubled). Control
     * -plane values come from the state store, but never splice unquoted.
     */

@@ -1,7 +1,5 @@
 package graft.stream
 
-import org.apache.spark.sql.types.StructType
-
 import graft.changelog.{AlterSchema, Ddl}
 import graft.core.Schema
 import graft.core.Schema.TableSchema
@@ -63,8 +61,4 @@ object SchemaFlow {
       ts.primaryKey.map(_.name), seqNo, 0L,
       ts.columns.sortBy(_.ordinal).map(c =>
         c.name -> (if (c.columnType.nonEmpty) c.columnType else c.dataType)))
-
-  /** Restore the latest schema version on restart. */
-  def currentStructType(state: StateStore, db: String, table: String): Option[StructType] =
-    state.currentSchema(db, table)
 }

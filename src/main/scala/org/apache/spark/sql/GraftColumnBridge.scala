@@ -2,13 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge to the classic Column <-> Catalyst Expression converters,
-  * which are `private[sql]` since the Spark 4 Column/ColumnNode split.
-  * Lives in `org.apache.spark.sql` solely to re-export the two
-  * conversions graft's native expressions need when no SparkSession is
-  * in scope to go through the function registry (e.g.
-  * [[graft.encode.SqlDml.value]] wrapping a column in a
-  * RuntimeReplaceable). Nothing else belongs here.
+/** The one Column <-> Catalyst Expression conversion point. The classic
+  * converters are `private[sql]` since the Spark 4 Column/ColumnNode
+  * split; this object lives in `org.apache.spark.sql` solely to
+  * re-export them. Every graft native expression is built as
+  * `column(X(expression(c), ...))` (aggregates as
+  * `column(X(...).toAggregateExpression())`), so using one writes
+  * nothing into the session's function registry and needs no session.
+  * Nothing else belongs here.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

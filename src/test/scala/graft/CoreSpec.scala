@@ -10,25 +10,38 @@ class RowKeySpec extends SparkSuite {
   import spark.implicits._
 
   test("length-prefixed row key matches reference GetRowKey shape") {
-    // FIXTURES.md §4: PK (1, 22) -> "1" + "1" + "2" + "22" = "11222"
-    val df = Seq((1L, 22L)).toDF("f1", "f2")
+    // FIXTURES.md §4: PK (1, 22) -> "1" + "1" + "2" + "22" = "11222";
+    // a null PK part nulls the whole key
+    val df = Seq((Some(1L), Some(22L)), (Some(1L), None)).toDF("f1", "f2")
       .select(RowKey.rowKey(Seq(col("f1"), col("f2"))))
-    assert(df.head().getString(0) == "11222")
+    val keys = df.collect()
+    assert(keys(0).getString(0) == "11222")
+    assert(keys(1).isNullAt(0))
+    // every fixture line item keys the same as the Go formula computed here
+    val li = graft.core.Tables.lineitem(spark, sf0001)
+      .select(col("l_orderkey"), col("l_linenumber"),
+        RowKey.rowKey(Seq(col("l_orderkey"), col("l_linenumber"))))
+      .collect()
+    assert(li.nonEmpty)
+    li.foreach { r =>
+      val want = Seq(r.get(0), r.get(1)).map(String.valueOf)
+        .map(v => s"${v.getBytes("UTF-8").length}$v").mkString
+      assert(r.getString(2) == want)
+    }
   }
 
   test("row key single column") {
     val df = Seq(Tuple1(12345L)).toDF("f1").select(RowKey.rowKey(Seq(col("f1"))))
     assert(df.head().getString(0) == "512345")
+    val rows = spark.range(1000).select(RowKey.rowKey(Seq(col("id")))).collect()
+    assert(rows(7).getString(0) == "17")
+    assert(rows(123).getString(0) == "3123")
   }
 
   test("non-ASCII PK values are prefixed with UTF-8 BYTE length (Go len())") {
     // 'é' is 1 char but 2 UTF-8 bytes — reference encoder/encoder.go:108
     val df = Seq(Tuple1("é")).toDF("f1").select(RowKey.rowKey(Seq(col("f1"))))
     assert(df.head().getString(0) == "2é")
-    graft.functions.RowKeyExpression.register(spark)
-    val native = Seq(Tuple1("café")).toDF("f1")
-      .selectExpr("graft_row_key(f1) as rk")
-    assert(native.head().getString(0) == "5café")
   }
 
   test("partition key is non-negative and stable") {

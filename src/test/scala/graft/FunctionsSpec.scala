@@ -2,38 +2,39 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.RowKey
-import graft.functions.RowKeyExpression
-
-class RowKeyExpressionSpec extends SparkSuite {
+/** The native Column APIs build plain Columns: using them (and the
+  * bloom pre-prune and PQ encoder built the same way) must leave the
+  * session's function registry exactly as it was.
+  */
+class FunctionsSpec extends SparkSuite {
   import spark.implicits._
 
-  test("native expression matches the composed-builtins row key on fixtures") {
-    RowKeyExpression.register(spark)
-    val li = graft.core.Tables.lineitem(spark, sf0001)
-    val both = li.select(
-      RowKey.rowKey(Seq(col("l_orderkey"), col("l_linenumber"))).as("composed"),
-      expr("graft_row_key(cast(l_orderkey as string), cast(l_linenumber as string))").as("native"))
-    assert(both.filter(col("composed") =!= col("native")).count() == 0)
-  }
-
-  test("golden value and null propagation") {
-    RowKeyExpression.register(spark)
-    val r = Seq((1L, 22L)).toDF("f1", "f2")
-      .selectExpr("graft_row_key(cast(f1 as string), cast(f2 as string)) as rk")
-    assert(r.head().getString(0) == "11222")
-    val n = Seq((Some(1L), Option.empty[Long])).toDF("f1", "f2")
-      .selectExpr("graft_row_key(cast(f1 as string), cast(f2 as string)) as rk")
-    assert(n.head().isNullAt(0))
-  }
-
-  test("works through whole-stage codegen (plan contains no fallback)") {
-    RowKeyExpression.register(spark)
-    val df = spark.range(1000).selectExpr("graft_row_key(cast(id as string)) as rk")
-    // executes via generated code path; spot-check values
-    val rows = df.collect()
-    assert(rows(7).getString(0) == "17")
-    assert(rows(123).getString(0) == "3123")
+  test("native Column APIs leave the session function registry untouched") {
+    import graft.analytics.Pq
+    import graft.functions._
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    val text = Seq((1L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("id", "text")
+    text.select(
+        MinHashSignature.signature(col("text"), 4, 8),
+        ShingleSet.column(col("text"), 4),
+        SimHash.column(col("text"), 16),
+        TokenStats.column(col("text")),
+        TokenWindowHashes.column(col("text"), 3),
+        NgramBuckets.column(col("text"), 2, 64L))
+      .collect()
+    val sets = Seq((Seq(1L, 2L, 3L), Seq(2L, 3L, 4L))).toDF("a", "b")
+    sets.select(
+        SortedIntersectCount.column(col("a"), col("b")),
+        QDot.column(col("a"), col("b")))
+      .collect()
+    sets.agg(VecOuterSum.column(col("a"), 3)).collect()
+    val e = graft.core.Tables.embeddings(spark, sf0001)
+    val m = Pq.train(e, col("vec_id"), col("embedding"), k = 4, iters = 1)
+    Pq.encode(e, col("vec_id"), col("embedding"), m).collect()
+    QueriesLayout.bloomPrune(spark, sf0001).collect()
+    assert(registry.listFunction().toSet == before)
   }
 }
 
@@ -51,7 +52,6 @@ class QDotSpec extends SparkSuite {
       (a.toSeq, b.toSeq)
     }
     val df = rows.toDF("a", "b")
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     val got = df.select(graft.functions.QDot.column(col("a"), col("b"))).as[Long].collect()
     val want = df.select(
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
@@ -67,7 +67,6 @@ class QDotSpec extends SparkSuite {
       (Some(Seq(1L, 2L)), Some(Seq(3L, 4L))),
       (None, Some(Seq(3L, 4L))),
       (Some(Seq(1L, 2L)), None)).toDF("a", "b")
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     val got = df.select(graft.functions.QDot.column(col("a"), col("b"))).collect()
     assert(got(0).getLong(0) == 11L)
     assert(got(1).isNullAt(0) && got(2).isNullAt(0))
@@ -78,7 +77,6 @@ class QDotNullParitySpec extends SparkSuite {
   import spark.implicits._
 
   test("QDot matches composed-form null algebra: unequal lengths and null elements -> NULL") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     val df = Seq(
       (Seq[Option[Long]](Some(1L), Some(2L)), Seq[Option[Long]](Some(3L))),          // unequal
       (Seq[Option[Long]](Some(1L), None), Seq[Option[Long]](Some(3L), Some(4L))),    // null elem left

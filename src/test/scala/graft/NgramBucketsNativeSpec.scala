@@ -24,7 +24,6 @@ class NgramBucketsNativeSpec extends SparkSuite {
           lit(B)).as("b"))
 
   private def native(d: org.apache.spark.sql.DataFrame) = {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     d.select(col("doc_id"), explode(NgramBuckets.column(col("text"), 2, B)).as("b"))
   }
 

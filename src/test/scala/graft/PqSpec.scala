@@ -43,7 +43,7 @@ class PqSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val exact = corpus
       .select(col("vec_id"),
-        Similarity.dotQ(Similarity.quantize(col("embedding")), typedLit(query))(spark).as("dot"))
+        Similarity.dotQ(Similarity.quantize(col("embedding")), typedLit(query)).as("dot"))
       .orderBy(col("dot").desc, col("vec_id")).limit(10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pq === exact)
@@ -65,7 +65,7 @@ class PqSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val exact = e
       .select(col("vec_id"),
-        Similarity.dotQ(Similarity.quantize(col("embedding")), typedLit(query))(spark).as("dot"))
+        Similarity.dotQ(Similarity.quantize(col("embedding")), typedLit(query)).as("dot"))
       .orderBy(col("dot").desc, col("vec_id")).limit(10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(full === exact)
@@ -97,7 +97,7 @@ class PqSpec extends SparkSuite {
     val n = codes.count().toInt
     val exactIds = corpus
       .select(col("vec_id"),
-        Similarity.dotQ(Similarity.quantize(col("embedding")), typedLit(query))(spark).as("dot"))
+        Similarity.dotQ(Similarity.quantize(col("embedding")), typedLit(query)).as("dot"))
       .orderBy(col("dot").desc, col("vec_id")).limit(10)
       .collect().map(_.getLong(0)).toSet
     val candIds = Pq.adcCandidates(codes, m, query, n / 2)
@@ -114,6 +114,35 @@ class PqSpec extends SparkSuite {
     val composed = Pq.encodeComposed(e, col("vec_id"), col("embedding"), m)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
     assert(native == composed)
+  }
+
+  test("concurrent encodes with different models on one session keep their own codebooks") {
+    val e = Tables.embeddings(spark, sf0001)
+    val models = Seq(4 -> 2, 16 -> 3).map { case (k, iters) =>
+      Pq.train(e, col("vec_id"), col("embedding"), k = k, iters = iters)
+    }
+    assert(models(0).books != models(1).books)
+    def codes(df: org.apache.spark.sql.DataFrame): Map[Long, List[Int]] =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toList).toMap
+    // both threads build, analyze and run their plans while the other is
+    // in flight; each must come back with its own model's codes
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futures = models.map { m =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Map[Long, List[Int]]]] {
+          def call(): Seq[Map[Long, List[Int]]] = {
+            start.await()
+            (1 to 3).map(_ => codes(Pq.encode(e, col("vec_id"), col("embedding"), m)))
+          }
+        })
+      }
+      start.countDown()
+      models.zip(futures).foreach { case (m, f) =>
+        val want = codes(Pq.encodeComposed(e, col("vec_id"), col("embedding"), m))
+        assert(f.get(5, java.util.concurrent.TimeUnit.MINUTES).forall(_ == want))
+      }
+    } finally pool.shutdownNow()
   }
 
   test("native encode is a narrow scan (no exchange in the encode plan)") {

@@ -13,8 +13,6 @@ import graft.functions.ShingleSet
   */
 class ShingleSetSpec extends SparkSuite {
 
-  private implicit def s: org.apache.spark.sql.SparkSession = spark
-
   private def composed(docs: DataFrame, k: Int): DataFrame =
     Dedup.shingles(docs, "doc_id", col("text"), k)
       .groupBy(col("doc_id"))

@@ -8,7 +8,6 @@ import graft.functions.SimHash
 class SimHashNativeSpec extends SparkSuite {
 
   test("native expression equals the composed pipeline on fixtures") {
-    implicit val s = spark
     val docs = graft.core.Tables.documents(spark, sf0001)
     val native = docs.select(col("doc_id"),
       SimHash.column(col("text"), 16).as("simhash"))
@@ -17,7 +16,6 @@ class SimHashNativeSpec extends SparkSuite {
   }
 
   test("edge inputs: empty text, repeated/interior spaces") {
-    implicit val s = spark
     import spark.implicits._
     val edge = Seq((1L, ""), (2L, "a  b"), (3L, "a b "), (4L, "x")).toDF("doc_id", "text")
     val native = edge.select(col("doc_id"), SimHash.column(col("text"), 16).as("simhash"))

@@ -15,8 +15,6 @@ import graft.functions.SortedIntersectCount
   */
 class SortedIntersectSpec extends SparkSuite {
 
-  private implicit def s: org.apache.spark.sql.SparkSession = spark
-
   /** Deterministic pseudo-random sorted-distinct array (seeded per row). */
   private def arr(seed: Long, len: Int, domain: Int): Array[Long] = {
     var x = seed * 6364136223846793005L + 1442695040888963407L

@@ -25,7 +25,6 @@ class TokenWindowNativeSpec extends SparkSuite {
       .select(col("doc_id"), col("wp.pos").as("pos"), col("wp.h").as("h"))
 
   private def native(d: org.apache.spark.sql.DataFrame, w: Int) = {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     d.select(col("doc_id"),
         explode(TokenWindowHashes.column(col("text"), w)).as("wp"))
       .select(col("doc_id"), col("wp.pos").as("pos"), col("wp.h").as("h"))
