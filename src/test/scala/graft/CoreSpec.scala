@@ -10,32 +10,15 @@ class RowKeySpec extends SparkSuite {
   import spark.implicits._
 
   test("length-prefixed row key matches reference GetRowKey shape") {
-    // FIXTURES.md §4: PK (1, 22) -> "1" + "1" + "2" + "22" = "11222";
-    // a null PK part nulls the whole key
-    val df = Seq((Some(1L), Some(22L)), (Some(1L), None)).toDF("f1", "f2")
+    // FIXTURES.md §4: PK (1, 22) -> "1" + "1" + "2" + "22" = "11222"
+    val df = Seq((1L, 22L)).toDF("f1", "f2")
       .select(RowKey.rowKey(Seq(col("f1"), col("f2"))))
-    val keys = df.collect()
-    assert(keys(0).getString(0) == "11222")
-    assert(keys(1).isNullAt(0))
-    // every fixture line item keys the same as the Go formula computed here
-    val li = graft.core.Tables.lineitem(spark, sf0001)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        RowKey.rowKey(Seq(col("l_orderkey"), col("l_linenumber"))))
-      .collect()
-    assert(li.nonEmpty)
-    li.foreach { r =>
-      val want = Seq(r.get(0), r.get(1)).map(String.valueOf)
-        .map(v => s"${v.getBytes("UTF-8").length}$v").mkString
-      assert(r.getString(2) == want)
-    }
+    assert(df.head().getString(0) == "11222")
   }
 
   test("row key single column") {
     val df = Seq(Tuple1(12345L)).toDF("f1").select(RowKey.rowKey(Seq(col("f1"))))
     assert(df.head().getString(0) == "512345")
-    val rows = spark.range(1000).select(RowKey.rowKey(Seq(col("id")))).collect()
-    assert(rows(7).getString(0) == "17")
-    assert(rows(123).getString(0) == "3123")
   }
 
   test("non-ASCII PK values are prefixed with UTF-8 BYTE length (Go len())") {
@@ -48,6 +31,51 @@ class RowKeySpec extends SparkSuite {
     val df = Seq(-5L, 0L, 31L, 32L, 33L).toDF("k")
       .select(RowKey.partitionKey(col("k"), 32).as("p"))
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(27L, 0L, 31L, 0L, 1L))
+  }
+}
+
+/** The row key as a Catalyst expression: `core.RowKey.rowKey` is composed
+  * of builtins only, so it propagates nulls like the reference's GetRowKey
+  * and compiles inside whole-stage codegen.
+  */
+class RowKeyExpressionSpec extends SparkSuite {
+  import spark.implicits._
+
+  test("golden value and null propagation") {
+    // FIXTURES.md §4 golden; a null PK part nulls the whole key
+    val keys = Seq((Some(1L), Some(22L)), (Some(1L), None)).toDF("f1", "f2")
+      .select(RowKey.rowKey(Seq(col("f1"), col("f2"))))
+      .collect()
+    assert(keys(0).getString(0) == "11222")
+    assert(keys(1).isNullAt(0))
+  }
+
+  test("row key equals the Go GetRowKey formula on the lineitem fixture") {
+    val li = graft.core.Tables.lineitem(spark, sf0001)
+      .select(col("l_orderkey"), col("l_linenumber"),
+        RowKey.rowKey(Seq(col("l_orderkey"), col("l_linenumber"))))
+      .collect()
+    assert(li.nonEmpty)
+    li.foreach { r =>
+      val want = Seq(r.get(0), r.get(1)).map(String.valueOf)
+        .map(v => s"${v.getBytes("UTF-8").length}$v").mkString
+      assert(r.getString(2) == want)
+    }
+  }
+
+  test("works through whole-stage codegen (plan contains no fallback)") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    val df = spark.range(1000).select(RowKey.rowKey(Seq(col("id"))))
+    val plan = df.queryExecution.executedPlan
+    val fused = plan.collect { case w: WholeStageCodegenExec => w }
+    assert(fused.exists(_.child.find(_.isInstanceOf[ProjectExec]).isDefined), plan)
+    val fallbacks = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case f: CodegenFallback => f })
+    assert(fallbacks.isEmpty, fallbacks)
+    val rows = df.collect()
+    assert(rows(7).getString(0) == "17")
+    assert(rows(123).getString(0) == "3123")
   }
 }
 
