@@ -27,9 +27,10 @@ import org.apache.spark.sql.SparkSession
   * `GRFE1 | u16 wrappedKeyLen | wrappedKey | 12-byte IV |
   *  GCM(u32 sigLen | sig | payload)`.
   *
-  * Scale: [[encryptDir]]/[[decryptDir]] run task-side over the Hadoop
-  * FileSystem through the same per-file tasks as the `_DONE` manifest
-  * pass (`FileSink.mapFileTasks`: names sliced into tasks, no shuffle) —
+  * Scale: [[encryptDir]]/[[decryptDir]] transform committed files, so
+  * they keep their own pass: task-side over the Hadoop FileSystem, through
+  * the per-file tasks of the standalone `FileSink.writeDoneManifest`
+  * (`FileSink.mapFileTasks`: names sliced into tasks, no shuffle) —
   * thousands of 1 GB files encrypt in parallel across executors, nothing
   * streams through the driver.
   */

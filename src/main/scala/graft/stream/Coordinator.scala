@@ -16,6 +16,8 @@ import graft.state.StateStore
   * Streaming), write the snapshot phase (batch) while its epochs run —
   * the reference's consumer-first order (streamer.go:196-199) — encode to
   * the registered output format, write through the pipe, mark synced.
+  * Per-epoch latency is a fixed cost plus the work, so each epoch is one
+  * job: no seqno shuffle, and `_DONE` comes from the write job itself.
   * Task leases (O2) are not needed — one driver owns all queries;
   * `ClusterConcurrency` (O11) is [[ClusterLimiter]]: wrap `runTask` in
   * `limiter.withSlot(spark, cluster)` to cap concurrent tasks per source
@@ -27,9 +29,12 @@ class Coordinator(spark: SparkSession, state: StateStore, outRoot: String) {
     * query starts first and expands events with epoch seqnos into
     * `log/epoch=N`; meanwhile this thread writes the snapshot, with
     * seqno-sentinel rows, into `snapshot/`; both go CF-JSON → file pipe
-    * with `_DONE` manifest. The two phases write separate directories and
-    * snapshot rows carry seqno 0, so latest-seqno-wins resolves the same
-    * state whichever phase finishes first. If the snapshot write fails,
+    * with `_DONE` manifest. Each write is one Spark job: the snapshot's,
+    * and one per epoch, whose seqno window, encode, write and file digests
+    * share one task ([[Streamer.changelogPhase]], [[FileSink.write]]).
+    * The two phases write separate directories and snapshot rows carry
+    * seqno 0, so latest-seqno-wins resolves the same state whichever
+    * phase finishes first. If the snapshot write fails,
     * the query is stopped before the error propagates; the registration
     * is marked synced only when both phases succeed.
     *

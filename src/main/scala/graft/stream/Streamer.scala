@@ -24,8 +24,8 @@ import graft.changelog.Changelog
   * run; the query's checkpoint holds its offsets, so buffered events come
   * free from micro-batch replay. The phases write separate directories
   * and snapshot rows carry the sentinel seqno, so latest-seqno-wins
-  * resolves the same state whichever phase finishes first. Seqnos
-  * are `(epochId << 32) | rowIndex` — monotone across restarts because
+  * resolves the same state whichever phase finishes first. Seqnos are
+  * `((epochId + 1) << 32) + rowNumber` — monotone across restarts because
   * epochId is checkpointed (vs. the reference persisting the counter every
   * SeqnoSaveInterval and skipping forward — changelog/mysql.go:394-417).
   */
@@ -56,10 +56,17 @@ object Streamer {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val expanded = Changelog.expandUpdates(batch)
-        // row index within the batch: window over the natural order cols;
-        // partition-less window is fine at micro-batch scale (bounded by
-        // maxOffsetsPerTrigger), NOT at table scale.
+        // row index within the batch: a partition-less window over the
+        // natural order cols, run in ONE task. `foreachBatch` hands over the
+        // batch with unknown partitioning, so without the coalesce the
+        // window plans an `Exchange SinglePartition` (under AQE its own map
+        // job); coalesced, the sort, the window and the sink's write share
+        // the one task of one job. The trade-off: an input spanning several
+        // partitions also runs its upstream narrow work (decode, expand) in
+        // that task. Fine at micro-batch scale (bounded by
+        // maxOffsetsPerTrigger; `graft-binlog` delivers one ordered
+        // partition), NOT at table scale.
+        val expanded = Changelog.expandUpdates(batch).coalesce(1)
         val w = org.apache.spark.sql.expressions.Window
           .orderBy((orderCols.map(col) :+ col("half")).map(_.asc): _*)
         val withSeqno = expanded.withColumn("seqno",

@@ -182,6 +182,26 @@ class CoordinatorSpec extends SparkSuite {
       spark.read.json(s"$outBase/log/*").count() == 8 + 12 + 3)
   }
 
+  test("runTask runs one job for the snapshot and one per changelog epoch") {
+    assert(spark.streams.active.isEmpty)
+    val (work, _, reg, coordinator) = newTask("jobs")
+    val snapshot = spark.range(0, 8, 1, 1)
+      .select(col("id"), concat(lit("s"), col("id").cast("string")).as("name"))
+    val (manifests, jobs) = JobCount(spark, group = None) {
+      coordinator.runTask(reg, snapshot, binlogChangelog(work, identity),
+        pkCols = Seq("id"), orderCols = Seq("seq"), checkpoint = s"$work/ckpt")
+    }
+    val epochs = new java.io.File(s"$work/out/cl1.shop.items.v0/log").list().count(_.startsWith("epoch="))
+    assert(manifests.map(_.numRecs).sum == 8 + 12 + 3)
+    // 12 transactions, two events per epoch: 7 jobs. Before each write
+    // built its `_DONE` in its own job and the epoch's seqno window ran in
+    // the write's task, this was 20 jobs: snapshot write + manifest pass,
+    // and per epoch the seqno shuffle's map job, the write and the
+    // manifest pass.
+    assert(epochs == 6, s"$epochs epochs")
+    assert(jobs == 1 + epochs, s"$jobs jobs over $epochs epochs")
+  }
+
   test("a failed snapshot stops the changelog query and leaves the registration unsynced") {
     assert(spark.streams.active.isEmpty)
     val (work, state, reg, coordinator) = newTask("fail")

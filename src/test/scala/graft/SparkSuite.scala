@@ -32,3 +32,52 @@ abstract class SparkSuite extends AnyFunSuite
     try graft.core.CacheRegistry.releaseAll() finally super.afterAll()
   }
 }
+
+/** Counts the Spark jobs a block of code starts. Listener events arrive in
+  * submission order, so the jobs counted are exactly those whose start
+  * event falls between a start-barrier job and an end-barrier job run on
+  * this thread around `body`.
+  */
+object JobCount {
+  private val Start = "graft-jobcount-start"
+  private val End = "graft-jobcount-end"
+
+  /** Run `body` and return its result with the number of jobs started while
+    * it ran: with `group`, only the jobs of that job group (set on this
+    * thread for the body); without, every job, whichever thread ran it.
+    */
+  def apply[A](spark: SparkSession, group: Option[String])(body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var counting = false
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(Start) => counting = true
+          case Some(End) => drained = true
+          case g => if (counting && !drained && (group.isEmpty || g == group)) jobs.incrementAndGet()
+        }
+    }
+    def barrier(name: String, seen: => Boolean): Unit = {
+      sc.setJobGroup(name, name)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 20000
+      while (!seen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen, s"listener bus did not deliver the $name job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      barrier(Start, counting)
+      sc.clearJobGroup()
+      group.foreach(sc.setJobGroup(_, "counted"))
+      val out = body
+      barrier(End, drained)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+}

@@ -46,6 +46,41 @@ class StreamerSpec extends SparkSuite {
     assert(laterSeqnos.nonEmpty && laterSeqnos.min > seqnos.max)
   }
 
+  test("epoch seqnos: one task, no Exchange, ((epoch+1) << 32) + 1..n in (orderCols, half) order") {
+    implicit val sqlCtx = spark.sqlContext
+    // one addData call is one input partition of the micro-batch; rows are
+    // out of order within and across partitions
+    val batches = Seq(
+      Seq(Cdc("update", 5, 9, 100, "e"), Cdc("insert", 1, 4, 100, "a"), Cdc("update", 5, 2, 101, "d")),
+      Seq(Cdc("delete", 3, 7, 100, null), Cdc("insert", 2, 8, 102, "b")),
+      Seq(Cdc("update", 4, 1, 103, "c"), Cdc("insert", 1, 6, 104, "f")))
+    for (parts <- Seq(1, batches.size)) {
+      val stream = MemoryStream[Cdc]
+      if (parts == 1) stream.addData(batches.flatten)
+      else batches.foreach(b => stream.addData(b))
+      // (epoch, input partitions, executed plan, (ts, id, half, seqno))
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, String, Seq[(Long, Long, Int, Long)])]
+      val ckpt = Files.createTempDirectory("graft-ckpt-seqno").toString
+      Streamer.changelogPhase(stream.toDF(), Seq("ts", "id"), ckpt, (batch, epoch) => {
+        val rows = batch.select("ts", "id", "half", "seqno").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
+        val inputParts = batch.queryExecution.sparkPlan.collectLeaves()
+          .map(_.execute().getNumPartitions).sum
+        seen += ((epoch, inputParts, batch.queryExecution.executedPlan.toString, rows))
+      }).awaitTermination()
+
+      assert(seen.size == 1, s"$parts partitions: ${seen.size} epochs")
+      val (epoch, inputParts, plan, rows) = seen.head
+      assert(inputParts == parts, s"micro-batch has $inputParts input partitions, want $parts")
+      assert(!plan.contains("Exchange"), s"$parts partitions: the epoch shuffles:\n$plan")
+      // 7 events, 3 of them updates (two halves each)
+      assert(rows.size == 10)
+      val expected = rows.sortBy { case (ts, id, half, _) => (ts, id, half) }.zipWithIndex
+        .map { case ((ts, id, half, _), i) => (ts, id, half, ((epoch + 1) << 32) + i + 1) }
+      assert(rows.sortBy(_._4) == expected, s"$parts partitions")
+    }
+  }
+
   test("snapshot + changelog merge resolves latest-by-seqno with tombstones") {
     val snapshot = Streamer.snapshotPhase(
       Seq((100L, "old"), (200L, "keep")).toDF("k", "v"))
@@ -193,6 +228,44 @@ class FileSinkSpec extends SparkSuite {
         .map("%02x".format(_)).mkString
       assert(m.hash == sha, m.fileName)
       assert(m.numRecs == body.count(_ == '\n'), m.fileName)
+    }
+  }
+
+  test("write is one job and its _DONE equals a writeDoneManifest re-read, byte for byte") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    val json = (n: Long, parts: Int) =>
+      spark.range(0, n, 1, parts).select(col("id").as("k"), concat(lit("v"), col("id")).as("v"))
+    // (case, scheme, frame, format, maxRecordsPerFile, gzip, rows)
+    val cases = Seq(
+      ("multi-partition json", "", json(300, 3), "json", 0L, false, 300L),
+      ("maxRecordsPerFile rotation", "", json(1000, 2), "json", 100L, false, 1000L),
+      ("gzip json", "", json(200, 2), "json", 0L, true, 200L),
+      ("text", "", spark.range(0, 50, 1, 2).select(
+        concat(lit("""{"k":"""), col("id"), lit("}")).as("value")), "text", 0L, false, 50L),
+      ("empty frame", "", Seq.empty[(Long, String)].toDF("k", "v"), "json", 0L, false, 0L),
+      ("graftfs scheme", "graftfs://", json(120, 2), "json", 0L, false, 120L))
+    for ((name, scheme, df, format, maxRecs, gzip, rows) <- cases) {
+      val dir = scheme + Files.createTempDirectory("graft-sinkparity").toString + "/out"
+      val done = new org.apache.hadoop.fs.Path(dir, "_DONE")
+      val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def doneBytes(): Array[Byte] = {
+        val in = fs.open(done)
+        try in.readAllBytes() finally in.close()
+      }
+      val (written, jobs) = JobCount(spark, Some("graft-sink-write")) {
+        FileSink.write(df, dir, format = format, maxRecordsPerFile = maxRecs, gzip = gzip)
+      }
+      val inWriter = doneBytes()
+      val reread = FileSink.writeDoneManifest(spark, dir, format)
+      assert(jobs == 1, s"$name: write ran $jobs jobs")
+      assert(written == reread, name)
+      assert(new String(inWriter, "UTF-8") == new String(doneBytes(), "UTF-8"), name)
+      assert(written.map(_.numRecs).sum == rows, name)
+      if (maxRecs > 0)
+        assert(written.size >= rows / maxRecs && written.forall(_.numRecs <= maxRecs), name)
+      if (gzip) assert(written.nonEmpty && written.forall(_.fileName.endsWith(".gz")), name)
+      if (scheme.nonEmpty) assert(fs.isInstanceOf[GraftTestFs], s"$name: ${fs.getClass}")
     }
   }
 
