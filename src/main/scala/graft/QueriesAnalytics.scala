@@ -635,12 +635,6 @@ object QueriesAnalytics {
     }.reduce(_.unionAll(_))
   }
 
-  // both models are deterministic, so train-once probe-many is
-  // observationally transparent; the CONTENT key retrains on a dataset
-  // refresh under the same path
-  private val ivfpqModels = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.analytics.Ivf.Model, graft.analytics.Pq.Model)]()
-
   /** IVF × PQ serving composition — the full Faiss-style ANN shape as ONE
     * lake layout: coarse cells partition the index (probes partition-prune
     * to `nprobe` cell dirs), PQ codes make the in-cell candidate scan
@@ -655,16 +649,15 @@ object QueriesAnalytics {
     val e = emb(s, dir)
     val corpus = e.filter(col("vec_id") =!= 2)
     // models train on the FULL table (training is sample-bounded and the
-    // PQ seed takes the first k ids); only the index excludes the query
-    val (ivf, pq) = ivfpqModels.computeIfAbsent(graft.core.DatasetKey.of(dir), _ => {
-      val iv = graft.analytics.Ivf.Model.parse( // persist/restore path
-        graft.analytics.Ivf.train(e, "vec_id", "embedding", k = 8, iters = 5).serialize)
-      // SHARED with q_pq_topk: identical corpus + params -> one codebook
-      // fit per process instead of two (the 14-15 s pass-1 cost)
-      val pqm = graft.analytics.Pq.trainCached(e, graft.core.DatasetKey.of(dir),
-        col("vec_id"), col("embedding"), k = 32, iters = 8)
-      (iv, pqm)
-    })
+    // PQ seed takes the first k ids); only the index excludes the query.
+    // Both are deterministic, so train-once probe-many is observationally
+    // transparent; each is memoized on its own by the dataset's content.
+    val ivf = Tmp.stagedOnce("ivfmodel_8_5", dir)(_ =>
+      graft.analytics.Ivf.Model.parse( // persist/restore path
+        graft.analytics.Ivf.train(e, "vec_id", "embedding", k = 8, iters = 5).serialize))
+    // SHARED with q_pq_topk: identical corpus + params -> one codebook
+    // fit per process instead of two
+    val pq = QueriesRelational.pqModel(e, dir)
     val path = Tmp.stagedOnce("ivfpq", dir) { p =>
       graft.analytics.Pq.materializeIvfPq(corpus, col("vec_id"), col("embedding"),
         ivf, pq, p)

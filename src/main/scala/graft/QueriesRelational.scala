@@ -198,17 +198,18 @@ object QueriesRelational {
     * code-scan→re-rank shape; production tunes candidates ≪ corpus and
     * composes with IVF cell pruning ([[graft.analytics.Ivf]]).
     */
-  // train-once, probe-many is the PQ serving contract; the model memo
-  // lives in Pq.trainCached (SHARED with q_ivfpq_topk, which fits the
-  // identical codebook — see its scaladoc), keyed by the DatasetKey
-  // CONTENT key + params: a dataset refreshed under the same path
-  // retrains instead of serving the stale model.
-  private[graft] def pqModelCacheSize: Int = graft.analytics.Pq.modelCacheSize
+  /** The codebook q_pq_topk and q_ivfpq_topk both probe. Train-once,
+    * probe-many is the PQ serving contract: [[graft.analytics.Pq
+    * .trainCached]] fits it once per process and dataset content, so a
+    * dataset refreshed under the same path retrains instead of serving
+    * the stale model.
+    */
+  private[graft] def pqModel(e: DataFrame, dir: String): graft.analytics.Pq.Model =
+    graft.analytics.Pq.trainCached(e, dir, col("vec_id"), col("embedding"), k = 32, iters = 8)
 
   def pqTopk(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val m = graft.analytics.Pq.trainCached(e, graft.core.DatasetKey.of(dir),
-      col("vec_id"), col("embedding"), k = 32, iters = 8)
+    val m = pqModel(e, dir)
     val codes = graft.analytics.Pq.encode(
       e.filter(col("vec_id") =!= 1), col("vec_id"), col("embedding"), m)
     val query = e.filter(col("vec_id") === 1)

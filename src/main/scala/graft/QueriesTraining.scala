@@ -86,12 +86,13 @@ object QueriesTraining {
   }
 
   /** Eval-side gram-mass estimate for [[evalVerifySide]], memoized by
-    * (dataset content key, predicate tag) the way [[graft.analytics.Pq
-    * .trainCached]] keys codebooks: the answer is a property of the
-    * eval-set DEFINITION on a dataset, not of the calling query, so a warm
-    * catalog run (Bench/Verify: one long-lived session, many invocations)
-    * pays the estimation jobs once per (dataset, predicate) instead of a
-    * full corpus column scan per decontaminate call (r18 verdict item 4).
+    * [[graft.core.Tmp.stagedOnce]] over (predicate tag, dataset content)
+    * the way [[graft.analytics.Pq.trainCached]] keys codebooks: the
+    * answer is a property of the eval-set DEFINITION on a dataset, not of
+    * the calling query, so a warm catalog run (Bench/Verify: one
+    * long-lived session, many invocations) pays the estimation jobs once
+    * per (dataset, predicate) instead of a full corpus column scan per
+    * decontaminate call (r18 verdict item 4).
     *
     * Estimate = eval doc count × sampled avg tokens/doc × 1.25. Tokens/doc
     * bounds distinct n-grams/doc from above (grams = tokens−n+1), and the
@@ -107,24 +108,19 @@ object QueriesTraining {
     * faster at 258M grams, see [[evalVerifySide]]); an under-estimate risks the
     * broadcast ceiling.
     */
-  private val evalGramEstCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def estEvalGrams(d: DataFrame, pred: Column,
                                   dir: String, predTag: String): Long =
-    evalGramEstCache.computeIfAbsent(
-      s"${graft.core.DatasetKey.of(dir)}#$predTag",
-      { _ =>
-        val evalDocs = d.filter(pred).count()
-        val avgTok = d.filter(pred)
-          .select(size(split(col("text"), " ")).cast("long").as("t"))
-          .limit(2048)
-          .agg(avg(col("t"))).head() match {
-            case r if r.isNullAt(0) => 0.0
-            case r => r.getDouble(0)
-          }
-        Long.box(math.ceil(evalDocs * avgTok * 1.25).toLong)
-      }).longValue()
+    Tmp.stagedOnce(s"evalgrams_$predTag", dir) { _ =>
+      val evalDocs = d.filter(pred).count()
+      val avgTok = d.filter(pred)
+        .select(size(split(col("text"), " ")).cast("long").as("t"))
+        .limit(2048)
+        .agg(avg(col("t"))).head() match {
+          case r if r.isNullAt(0) => 0.0
+          case r => r.getDouble(0)
+        }
+      math.ceil(evalDocs * avgTok * 1.25).toLong
+    }
 
   /** Benchmark decontamination: flag training documents sharing any
     * 4-token gram with the held-out eval set (here: doc_id % 29 == 0, the
@@ -2185,10 +2181,11 @@ object QueriesTraining {
 }
 
 /** Holder for the trained IVF coarse centroids behind q_contrastive_ivf,
-  * keyed by data dir, so its DuckDB oracle can be emitted with the SAME
-  * milli-quantized centroid literals the Spark side assigned cells with
-  * (the [[graft.analytics.PcaModels]] pattern: Verify runs the query —
-  * which trains and stashes — before dumping `SparkEntry.oracleSql`).
+  * keyed by the data dir string the query ran on, so its DuckDB oracle
+  * can be emitted with the SAME milli-quantized centroid literals the
+  * Spark side assigned cells with (the [[graft.analytics.PcaModels]]
+  * pattern: Verify runs the query — which trains and stashes — before
+  * dumping `SparkEntry.oracleSql(sfDir)`).
   * All arithmetic downstream of the literals is BIGINT on both engines.
   */
 object ContrastiveIvfOracle {
@@ -2201,9 +2198,9 @@ object ContrastiveIvfOracle {
     */
   val FloorMills: Long = 750L
 
-  val stash = new graft.core.VerifyTarget.Stash[IndexedSeq[IndexedSeq[Long]]]
+  val stash = new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[IndexedSeq[Long]]]()
 
-  def oracleEntries: Map[String, String] = stash.current match {
+  def oracleEntries(dir: String): Map[String, String] = Option(stash.get(dir)) match {
     case None => Map.empty
     case Some(cents) =>
       val values = cents.zipWithIndex
@@ -2266,17 +2263,18 @@ object ContrastiveIvfOracle {
   }
 }
 
-/** Holder for the BPE merge list trained by [[QueriesTraining.bpeTokenize]],
-  * keyed by data dir — the [[graft.analytics.PcaModels]] dynamic-oracle
+/** Holder for the BPE merge list trained by [[QueriesTraining.bpeTokenize]]
+  * and [[QueriesTraining.tokenizeApply]], keyed by the data dir string
+  * the query ran on — the [[graft.analytics.PcaModels]] dynamic-oracle
   * pattern: Verify runs the query (which trains and stashes) before
-  * dumping `SparkEntry.oracleSql`, so the DuckDB oracle replays the
+  * dumping `SparkEntry.oracleSql(sfDir)`, so the DuckDB oracle replays the
   * IDENTICAL merges as a literal replace chain (two sweeps per merge,
   * the same deterministic apply contract as the Spark side).
   */
 object BpeOracle {
-  val stash = new graft.core.VerifyTarget.Stash[List[(String, String)]]
+  val stash = new java.util.concurrent.ConcurrentHashMap[String, List[(String, String)]]()
 
-  def oracleEntries: Map[String, String] = stash.current match {
+  def oracleEntries(dir: String): Map[String, String] = Option(stash.get(dir)) match {
     case None => Map.empty
     case Some(merges) =>
       val chain = merges.foldLeft(

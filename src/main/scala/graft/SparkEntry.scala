@@ -78,23 +78,26 @@ object SparkEntry {
       |       THEN CAST(ROUND(value * 100) AS BIGINT) - 1 END AS before_cents
       |FROM events WHERE event_type IN ('signup', 'click', 'error')""".stripMargin
 
-  def oracleSql: Map[String, String] =
+  /** The DuckDB oracles for a run over `dir`. Data-dependent oracles
+    * carry literals from the model their query trained when it ran on
+    * that very dir string (Verify runs queries before dumping SQL); a
+    * dir their query never ran on has no entry for them.
+    */
+  def oracleSql(dir: String): Map[String, String] =
     QueriesExtra.oracleSql ++ QueriesQuality.oracleSql ++
       QueriesPipes.oracleSql ++ QueriesTraining.oracleSql ++
       QueriesRelational.oracleSql ++ QueriesLayout.oracleSql ++
       QueriesGraph.oracleSql ++ QueriesIncremental.oracleSql ++
-      // data-dependent oracle: literals from the model q_pca_project
-      // trained when it ran (Verify runs queries before dumping SQL)
-      graft.analytics.PcaModels.oracleEntries ++
-      // same pattern: q_contrastive_ivf's oracle carries the trained
-      // coarse-centroid literals stashed when the query ran
-      ContrastiveIvfOracle.oracleEntries ++
-      // and q_bpe_tokenize's oracle replays the trained merge list as a
+      // q_pca_project: the trained quantized mean/components
+      graft.analytics.PcaModels.oracleEntries(dir) ++
+      // q_contrastive_ivf: the trained coarse-centroid literals
+      ContrastiveIvfOracle.oracleEntries(dir) ++
+      // q_bpe_tokenize / q_tokenize_apply: the trained merge list as a
       // literal replace chain
-      BpeOracle.oracleEntries ++
-      // and q_lr_quality's oracle bakes the trained LR weights in as
-      // BIGINT literals over DuckDB-recomputed mills features
-      graft.analytics.LogRegModels.oracleEntries ++ Map(
+      BpeOracle.oracleEntries(dir) ++
+      // q_lr_quality: the trained LR weights as BIGINT literals over
+      // DuckDB-recomputed mills features
+      graft.analytics.LogRegModels.oracleEntries(dir) ++ Map(
     "q_snapshot_scan" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'R'""".stripMargin,

@@ -6,9 +6,6 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // dynamic oracles (PCA / IVF / BPE stashes) must dump THIS dir's
-    // trained literals, not whichever dir a long-lived session saw first
-    graft.core.VerifyTarget.set(sfDir)
     // optional 3rd arg: comma-separated query names (dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
@@ -29,6 +26,7 @@ object Verify {
     // represented by an old result — and (b) lint violations are collected
     // and fail the whole run with a nonzero exit.
     val lintFailures = scala.collection.mutable.ArrayBuffer[String]()
+    val ran = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -63,6 +61,7 @@ object Verify {
         // local gate and still fails the driver's canonicalization
         graft.core.OutputTypeLint.check(name, df.schema)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        ran += name
       }
       catch {
         case e: graft.core.OutputTypeLint.Violation =>
@@ -91,13 +90,21 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // data-dependent oracles are looked up by the dir their query ran on:
+    // a query that produced output but has no oracle for sfDir would
+    // otherwise just drop out of the DuckDB check
+    val oracles = SparkEntry.oracleSql(sfDir)
+    ran.filterNot(oracles.contains).foreach { name =>
+      lintFailures += name
+      System.err.println(s"[verify] $name NO ORACLE for $sfDir — run will exit nonzero")
+    }
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (lintFailures.nonEmpty) {
       System.err.println(
-        s"[verify] OUTPUT TYPE LINT FAILED for ${lintFailures.size} queries: ${lintFailures.sorted.mkString(", ")}")
+        s"[verify] LINT FAILED for ${lintFailures.size} queries: ${lintFailures.sorted.mkString(", ")}")
       sys.exit(2)
     }
   }

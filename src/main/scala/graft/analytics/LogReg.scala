@@ -191,19 +191,20 @@ object LogReg {
   }
 }
 
-/** Per-dir stash of trained models for the data-dependent DuckDB oracle —
-  * the [[PcaModels]] / BpeOracle pattern: Verify runs the query (which
-  * stashes), THEN dumps oracle SQL with the weights of the dir actually
-  * under verification ([[graft.core.VerifyTarget]]) baked in as literals.
+/** Trained q_lr_quality models keyed by the data dir string the query
+  * ran on, for its data-dependent DuckDB oracle — the [[PcaModels]]
+  * pattern: Verify runs the query (which stashes), THEN dumps the oracle
+  * SQL of the dir it verified, with that dir's weights baked in as
+  * literals.
   */
 object LogRegModels {
-  val stash = new graft.core.VerifyTarget.Stash[LogReg.Model]
+  val stash = new java.util.concurrent.ConcurrentHashMap[String, LogReg.Model]()
 
   /** q_lr_quality oracle: recompute the mills features in DuckDB with the
     * exact parenthesization of [[LogReg.featureCols]], then the BIGINT
     * margin with the trained micro-coefficients as literals.
     */
-  def oracleEntries: Map[String, String] = stash.current match {
+  def oracleEntries(dir: String): Map[String, String] = Option(stash.get(dir)) match {
     case None => Map.empty
     case Some(m) =>
       val wq = m.wMicros

@@ -166,27 +166,24 @@ object Pca {
   }
 }
 
-/** Holder for trained PCA models, keyed by data dir, so the q_pca_project
-  * DuckDB oracle can be emitted with the TRAINED quantized mean/components
-  * as SQL literals. Verify runs every query (training and stashing the
-  * model for its sf dir) before it dumps `SparkEntry.oracleSql`, so the
-  * entry is present exactly when the query ran; if the query never ran the
-  * oracle entry is simply omitted (the driver falls back to a rows-only
-  * check instead of comparing against a stale or untrained model).
+/** Holder for trained PCA models, keyed by the data dir string
+  * q_pca_project ran on, so its DuckDB oracle can be emitted with the
+  * TRAINED quantized mean/components as SQL literals. Verify runs every
+  * query (training and stashing the model for its sf dir) before it dumps
+  * `SparkEntry.oracleSql(sfDir)`, so the entry for a dir is present
+  * exactly when the query ran on that dir; a dir the query never ran on
+  * has no entry (Verify then fails loudly instead of comparing against a
+  * stale or untrained model).
   */
 object PcaModels {
-  /** Trained models by data dir; the oracle bakes in the one for the dir
-    * under verification ([[graft.core.VerifyTarget]]), else sf0.01, else
-    * any stashed model (dev loops).
-    */
-  val stash = new graft.core.VerifyTarget.Stash[Pca.Model]
+  val stash = new java.util.concurrent.ConcurrentHashMap[String, Pca.Model]()
 
   /** q_pca_project oracle SQL (empty map when no model was trained).
     * Mirrors [[Pca.project]] bit-for-bit: quantize (scale 1000), subtract
     * the quantized mean, integer-dot against the quantized (1e6)
     * sign-canonical components — all BIGINT math on both engines.
     */
-  def oracleEntries: Map[String, String] = stash.current match {
+  def oracleEntries(dir: String): Map[String, String] = Option(stash.get(dir)) match {
     case None => Map.empty
     case Some(m) =>
       val d = m.d

@@ -74,21 +74,18 @@ object Pq {
       transform(sub, s => struct(s.getField("_1").as("cid"), s.getField("_2").as("cent"))))
   }
 
-  /** Shared train-once cache: the pq and ivfpq catalog rows train the
-    * IDENTICAL codebook (same corpus, same params) — before r13 each row
-    * held its own memo, so the 14-15 s codebook fit ran twice per
-    * process. Keyed by (dataset CONTENT key, every train param):
-    * training is bit-deterministic (PqSpec), so sharing is
-    * observationally transparent; a refreshed dataset or different
-    * params miss and retrain.
+  /** Train-once memo: the pq and ivfpq catalog rows train the IDENTICAL
+    * codebook (same corpus, same params), so one fit per process serves
+    * both. Memoized by [[graft.core.Tmp.stagedOnce]] over `dir` (its
+    * content key) with every train param in the tag: training is
+    * bit-deterministic (PqSpec), so sharing is observationally
+    * transparent; a refreshed dataset or different params miss and
+    * retrain.
     */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
-  def modelCacheSize: Int = modelCache.size()
-  def trainCached(emb: DataFrame, contentKey: String, id: Column, vec: Column,
+  def trainCached(emb: DataFrame, dir: String, id: Column, vec: Column,
                   dims: Int = 64, numSub: Int = 8, k: Int = 16,
                   iters: Int = 5): Model =
-    modelCache.computeIfAbsent(s"$contentKey#$dims/$numSub/$k/$iters",
+    graft.core.Tmp.stagedOnce(s"pqmodel_${dims}_${numSub}_${k}_$iters", dir)(
       _ => train(emb, id, vec, dims, numSub, k, iters))
 
   /** Train per-subspace codebooks with Lloyd's iterations over exact

@@ -17,8 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    row) apart; the content hash makes path identity equal memo
   *    identity, so two dirs that sanitize alike, or one dir refreshed
   *    mid-process, land at distinct paths.
-  *  - memo: a fixture built once per process is memoized by its staged
-  *    path ([[stagedOnce]]), i.e. by (tag, source dir, source content).
+  *  - memo: a fixture or model built once per process is memoized by its
+  *    staged path ([[stagedOnce]]), i.e. by (tag, source dir, source
+  *    content as [[DatasetKey]] reads it through the Hadoop FS).
   *  - wiped-at-entry outputs (stream drains, topic dirs, per-run sink
   *    round trips) reuse their staged path each run and delete it at
   *    entry with [[deleteRecursively]]: the previous run's output lives
@@ -93,11 +94,14 @@ object Tmp {
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** Build the fixture at `staged(tag, dir)` once per process and serve
-    * the memoized result afterwards. A build that throws is not
-    * memoized; the next call builds again. `build` must not itself call
-    * [[stagedOnce]] (one map, so a nested build would be a recursive
-    * update).
+  /** Build what `staged(tag, dir)` names once per process and serve the
+    * memoized result afterwards: a fixture written at that path, or a
+    * model (or estimate) trained from `dir` that writes nothing there —
+    * its tag then carries every training parameter. A build that throws
+    * is not memoized; the next call builds again. `build` must not
+    * itself call [[stagedOnce]] (one map, so a nested build would be a
+    * recursive update): a result built from other memoized results takes
+    * them as inputs, each from its own call.
     */
   def stagedOnce[T](tag: String, dir: String)(build: String => T): T =
     built.computeIfAbsent(staged(tag, dir), p => build(p).asInstanceOf[AnyRef])

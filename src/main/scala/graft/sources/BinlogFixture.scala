@@ -68,43 +68,34 @@ object BinlogFixture {
     * cursor and never re-parses history; the fixture equivalent is parsing
     * each log version once per process, not once per micro-batch.
     *
-    * Keyed by (len, mtime, probe checksum): len+mtime alone can serve
-    * stale events when an overwrite preserves length within the
-    * filesystem's mtime granularity (1 s on some filesystems), so the key
-    * also folds in an FNV-1a hash of the first and last 8 KB — two cheap
-    * positioned reads, independent of log size. Eviction is LRU via an
+    * One map, two key kinds: a file or segment-dir log is keyed by its
+    * [[graft.core.DatasetKey]] (every file's path, length and mtime plus
+    * a head and tail sample, read through the log's Hadoop FS), so any
+    * rewritten segment — even a same-length one within the filesystem's
+    * mtime granularity — misses; a socket dump is keyed by the MD5 of
+    * the dumped bytes ([[readSocket]]). Eviction is LRU via an
     * access-ordered LinkedHashMap bounded at [[MaxCachedLogs]], so hot
     * entries survive when cold ones are dropped.
     */
   private val MaxCachedLogs = 8
-  private final case class CacheKey(len: Long, mtime: Long, probe: Long)
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (CacheKey, Vector[Event])](16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Vector[Event]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (CacheKey, Vector[Event])]): Boolean =
+          e: java.util.Map.Entry[String, Vector[Event]]): Boolean =
         size() > MaxCachedLogs
     })
 
-  /** FNV-1a over the head and tail 8 KB — cheap content fingerprint. */
-  private def probeChecksum(fs: FileSystem, p: HPath, len: Long): Long = {
-    if (len == 0L) return 0L
-    val headLen = math.min(len, 8192L).toInt
-    val head = new Array[Byte](headLen)
-    val in = fs.open(p)
-    try {
-      in.readFully(0L, head)
-      var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < headLen) { h ^= (head(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-      if (len > headLen) {
-        val tailLen = math.min(len - headLen, 8192L).toInt
-        val tail = new Array[Byte](tailLen)
-        in.readFully(len - tailLen, tail)
-        i = 0
-        while (i < tailLen) { h ^= (tail(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-      }
-      h
-    } finally in.close()
+  /** The cached parse under `key`, parsing on a miss (two concurrent
+    * misses on one key may both parse; their results are equal).
+    */
+  private def cached(key: String)(parse: => Vector[Event]): Vector[Event] = {
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val events = parse
+      cache.put(key, events)
+      events
+    }
   }
 
   /** Segment files of a directory log, in replay (= name) order. */
@@ -114,32 +105,10 @@ object BinlogFixture {
       .sortBy(_.getName).toSeq
 
   def readCached(path: String, conf: Configuration = new Configuration()): Vector[Event] = {
-    // replication-socket sources are not file-backed: no FileStatus to
-    // key a cache on, and a dump is already one bounded network read
+    // replication-socket sources are not file-backed: a dump is already
+    // one bounded network read, and readSocket keys its parse by content
     if (path.startsWith("mysql://")) return readSocket(path, graft.changelog.GtidSet.empty)
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    // a segmented (directory) log folds every segment's (len, mtime,
-    // probe) into one key — any rewritten segment misses the cache
-    val key =
-      if (st.isDirectory) {
-        var lenSum = 0L; var mtimeMax = 0L; var h = 0xcbf29ce484222325L
-        segFiles(fs, p).foreach { f =>
-          val fst = fs.getFileStatus(f)
-          lenSum += fst.getLen
-          mtimeMax = math.max(mtimeMax, fst.getModificationTime)
-          h ^= probeChecksum(fs, f, fst.getLen); h *= 0x100000001b3L
-        }
-        CacheKey(lenSum, mtimeMax, h)
-      } else CacheKey(st.getLen, st.getModificationTime, probeChecksum(fs, p, st.getLen))
-    val hit = cache.get(path)
-    if (hit != null && hit._1 == key) hit._2
-    else {
-      val events = read(path, conf)
-      cache.put(path, (key, events))
-      events
-    }
+    cached(graft.core.DatasetKey.of(path, conf))(read(path, conf))
   }
 
   /** Read the full fixture log in order. Two formats are auto-detected:
@@ -241,8 +210,8 @@ object BinlogFixture {
     *
     * The dump itself happens on EVERY call — that wire round trip is the
     * contract under test — but the parse of the returned image is cached
-    * by (url, length, CRC32 of the bytes), symmetric with what
-    * [[readCached]] already does for file logs: re-decoding an identical
+    * by (length, MD5 of the bytes) in the same map [[readCached]] uses
+    * for file logs: re-decoding an identical
     * byte image per micro-batch measures the JSON materializer, not the
     * socket. A changed image (different resume set, a grown log) misses
     * and parses fresh.
@@ -254,22 +223,9 @@ object BinlogFixture {
     // the parse result. MD5, not a 32-bit checksum: a key collision here
     // would serve WRONG events to a correctness-gated row
     val md = java.security.MessageDigest.getInstance("MD5")
-    val key = s"${img.length}#${md.digest(img).map("%02x".format(_)).mkString}"
-    val hit = socketCache.get(key)
-    if (hit != null) hit
-    else {
-      val events = toEvents(BinlogWire.parse(new java.io.ByteArrayInputStream(img)))
-      socketCache.put(key, events)
-      events
-    }
+    cached(s"${img.length}#${md.digest(img).map("%02x".format(_)).mkString}")(
+      toEvents(BinlogWire.parse(new java.io.ByteArrayInputStream(img))))
   }
-
-  private val socketCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Vector[Event]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Vector[Event]]): Boolean =
-        size() > MaxCachedLogs
-    })
 
   /** Write a real binary binlog (v4 wire format, CRC32-checksummed). */
   def writeBinary(path: String, entries: Iterator[BinlogWire.Entry],
