@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - registration routing drops events for unregistered targets
   *    (/root/reference/changelog/mysql.go:546-564)
   *
-  * All of it is `explode`/`filter`/`join` — no per-row driver loops, shuffles
+  * All of it is `inline`/`filter`/`join` — no per-row driver loops, shuffles
   * only where the semantics demand one (none here: expansion and gating are
   * narrow; routing broadcasts the small registration set).
   */
@@ -37,28 +37,34 @@ object Changelog {
     * before-image columns are dropped from the output. When `beforeImage`
     * is empty the caller asserts PK columns are immutable for this stream
     * (the delete half then carries the after-image key, which is equal).
+    *
+    * Output columns: the input's in order, minus the before-image columns,
+    * with `op` (and `half`, if present) replaced in place, else `half`
+    * appended. The frame is one `select`: each row becomes an array of
+    * whole output rows (one per half) that `inline` unpacks, so the plan
+    * is analysed once.
     */
   def expandUpdates(df: DataFrame, opCol: String = "op",
                     beforeImage: Map[String, String] = Map.empty): DataFrame = {
-    val halves = when(col(opCol) === "update",
-        array(
-          struct(lit("delete").as("op2"), lit(0).as("half")),
-          struct(lit("insert").as("op2"), lit(1).as("half"))))
-      .when(col(opCol) === "delete",
-        array(struct(lit("delete").as("op2"), lit(0).as("half"))))
-      .otherwise(
-        array(struct(lit("insert").as("op2"), lit(1).as("half"))))
-    val expanded = df.withColumn("_h", explode(halves))
-      .withColumn("_src_op", col(opCol))
-      .withColumn(opCol, col("_h.op2"))
-      .withColumn("half", col("_h.half"))
-    val substituted = beforeImage.foldLeft(expanded) { case (d, (c, beforeC)) =>
-      d.withColumn(c,
-        when(col("_src_op") === "update" && col("half") === 0, col(beforeC))
-          .otherwise(col(c)))
-    }
-    substituted.drop("_h" +: "_src_op" +: beforeImage.values.toSeq: _*)
+    val dropped = beforeImage.values.toSet
+    val kept = df.columns.toSeq.filterNot(dropped)
+    val names = if (kept.contains("half")) kept else kept :+ "half"
+    val isUpdate = col(opCol) === "update"
+    def half(op: String, h: Int): Column = struct(names.map {
+      case `opCol` => lit(op).as(opCol)
+      case "half" => lit(h).as("half")
+      case c => (beforeImage.get(c) match {
+        case Some(b) if h == 0 => when(isUpdate, col(quoted(b))).otherwise(col(quoted(c)))
+        case _ => col(quoted(c))
+      }).as(c)
+    }: _*)
+    df.select(inline(
+      when(isUpdate, array(half("delete", 0), half("insert", 1)))
+        .when(col(opCol) === "delete", array(half("delete", 0)))
+        .otherwise(array(half("insert", 1)))))
   }
+
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** NoDeleteOnUpdate: updates contribute only their insert half; true
     * deletes pass through. Applied BEFORE expansion in the reference

@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.CollectionAccumulator
 
-import graft.core.HadoopConf
+import graft.core.{HadoopConf, LocalFs}
 
 /** File/HDFS/S3 sink with the reference's integrity protocol.
   *
@@ -62,6 +62,7 @@ object FileSink {
   def write(df: DataFrame, path: String, format: String = "json",
             maxRecordsPerFile: Long = 0, gzip: Boolean = false): Seq[Manifest] = {
     val spark = df.sparkSession
+    LocalFs.install(spark)
     var w = df.write.mode("overwrite")
     if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
     if (gzip && format != "parquet") w = w.option("compression", "gzip")

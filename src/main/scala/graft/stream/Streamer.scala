@@ -1,10 +1,13 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.changelog.Changelog
+import graft.core.LocalFs
 
 /** Snapshot + changelog orchestration (O3/O4/O6).
   *
@@ -33,12 +36,12 @@ object Streamer {
 
   val SnapshotSeqno = 0L // sentinel: any log event outranks snapshot state
 
-  /** Snapshot phase: batch snapshot rows with the sentinel seqno. */
+  /** Snapshot phase: batch snapshot rows with the sentinel seqno, in one
+    * projection (`withColumns` is one `select`).
+    */
   def snapshotPhase(snapshot: DataFrame): DataFrame =
-    snapshot
-      .withColumn("seqno", lit(SnapshotSeqno))
-      .withColumn("op", lit("insert"))
-      .withColumn("half", lit(1))
+    snapshot.withColumns(ListMap(
+      "seqno" -> lit(SnapshotSeqno), "op" -> lit("insert"), "half" -> lit(1)))
 
   /** Changelog phase: streaming changelog with expansion + durable seqnos,
     * `foreachBatch` so each micro-batch gets its epoch-scoped seqnos and
@@ -50,7 +53,9 @@ object Streamer {
     * @param sink      called once per micro-batch with expanded rows
     */
   def changelogPhase(changelog: DataFrame, orderCols: Seq[String],
-                     checkpoint: String, sink: (DataFrame, Long) => Unit): StreamingQuery =
+                     checkpoint: String, sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    // offset/commit logs and state files go through FileContext
+    LocalFs.install(changelog.sparkSession)
     changelog.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -74,6 +79,7 @@ object Streamer {
         sink(withSeqno, epochId)
       }
       .start()
+  }
 
   /** Latest-state resolution: one row per key, highest seqno wins; delete
     * tombstones drop the key (idempotent-sink semantics,

@@ -202,6 +202,46 @@ class CoordinatorSpec extends SparkSuite {
     assert(jobs == 1 + epochs, s"$jobs jobs over $epochs epochs")
   }
 
+  test("runTask starts no chmod or readlink child process") {
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    // the commands of the child processes `body` starts, whichever thread
+    def commands(body: => Unit): Seq[String] = {
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      val file = Files.createTempFile("graft-procs", ".jfr")
+      try {
+        rec.dump(file)
+        RecordingFile.readAllEvents(file).asScala.map(_.getString("command")).toSeq
+      } finally { rec.close(); Files.deleteIfExists(file) }
+    }
+    def fsChildren(cmds: Seq[String]): Seq[String] =
+      cmds.filter(c => Set("chmod", "readlink")(new java.io.File(c.trim.split("\\s+").head).getName))
+
+    // control: Hadoop's own local FS runs chmod in a child process, and the recording sees it
+    val raw = new org.apache.hadoop.fs.RawLocalFileSystem
+    raw.initialize(org.apache.hadoop.fs.FsConstants.LOCAL_FS_URI, spark.sparkContext.hadoopConfiguration)
+    val probe = Files.createTempFile("graft-chmod", ".json")
+    assert(fsChildren(commands(raw.setPermission(new org.apache.hadoop.fs.Path(probe.toString),
+      org.apache.hadoop.fs.permission.FsPermission.getFileDefault))).nonEmpty)
+
+    assert(spark.streams.active.isEmpty)
+    val (work, _, reg, coordinator) = newTask("procs")
+    val snapshot = spark.range(0, 8, 1, 1)
+      .select(col("id"), concat(lit("s"), col("id").cast("string")).as("name"))
+    var manifests = Seq.empty[graft.pipes.FileSink.Manifest]
+    val cmds = commands {
+      manifests = coordinator.runTask(reg, snapshot, binlogChangelog(work, identity),
+        pkCols = Seq("id"), orderCols = Seq("seq"), checkpoint = s"$work/ckpt")
+    }
+    assert(manifests.map(_.numRecs).sum == 8 + 12 + 3)
+    val fsCmds = fsChildren(cmds)
+    assert(fsCmds.isEmpty, s"${fsCmds.size} of ${cmds.size} child processes, e.g.\n${fsCmds.take(5).mkString("\n")}")
+  }
+
   test("a failed snapshot stops the changelog query and leaves the registration unsynced") {
     assert(spark.streams.active.isEmpty)
     val (work, state, reg, coordinator) = newTask("fail")

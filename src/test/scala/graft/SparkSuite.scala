@@ -14,6 +14,7 @@ object SharedSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    graft.core.LocalFs.install(s)
     s
   }
 }
