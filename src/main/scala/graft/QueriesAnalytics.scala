@@ -126,9 +126,11 @@ object QueriesAnalytics {
 
   /** THE canonical MinHash dedup pipeline, end to end in one plan:
     * signatures → banded LSH candidates (capped) → exact n-gram Jaccard
-    * verify (>= 0.5) → connected components → cluster keepers. Every
-    * stage shuffles signatures/ids only; raw text never leaves the
-    * shingle scan. Since r15 the candidate generation and the verify are
+    * verify (>= 0.5) → connected components → cluster keepers. Later
+    * stages shuffle signatures, ids and the candidates' shingle sets; raw
+    * text leaves its scan only when [[graft.core.Spread]] spreads an
+    * input with fewer file splits than its width before the per-document
+    * kernels. Since r15 the candidate generation and the verify are
     * FUSED ([[Dedup.lshVerifiedPairs]] — identical pair set and
     * statistics, proven by the unchanged oracle): the sf100 probe caught
     * the join-by-pair verify shuffling each doc's shingle set once PER

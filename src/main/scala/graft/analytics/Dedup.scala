@@ -1,8 +1,11 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.Spread
 
@@ -157,8 +160,19 @@ object Dedup {
     * verdict rows — 40 bytes, not kilobytes — reach the pair-dedup
     * shuffle. Two more bounds keep the set movement itself small: only
     * docs in SHAREABLE buckets (2 ≤ members ≤ cap) need sets at all, and
-    * their id set is broadcast back into the shingle scan so
+    * their bucket keys are broadcast back into the shingle scan so
     * non-colliding docs never leave it.
+    *
+    * One reference per intermediate: the plan is a single query in which
+    * the band-key pipeline, the bucket-size window and the set build each
+    * appear once, with no pin. The shareable keys reach the sets as ONE
+    * per-doc list (≤ numBands entries), broadcast into the doc scan; each
+    * kept doc builds its set once and explodes it onto its own keys. The
+    * bucket self-join reads both sides from that one (band, band_key)
+    * exchange, which Spark plans as a `ReusedExchange`. The bucket sizes
+    * come from a window, not a `collect_list` per bucket: a window
+    * streams a hot bucket through its partition, where a per-bucket list
+    * would hold all of its members in one aggregation buffer.
     *
     * Precondition: `docs` holds ONE row per id. Each row's shingle set is
     * built on its own ([[graft.functions.ShingleSet]]), so two rows
@@ -166,42 +180,45 @@ object Dedup {
     */
   def lshVerifiedPairs(bandKeys: DataFrame, docs: DataFrame, idCol: String,
                        text: Column, k: Int, maxBucket: Int = 1000): DataFrame = {
-    // MATERIALIZED once (r19): `shareable` is referenced by candIds AND
-    // banded, and `banded` twice more by the bucket self-join — unpinned,
-    // Catalyst executed the MinHash band-key pipeline up to 4x and the
-    // shingle-set build 2x per invocation (guide §7.2 duplicated
-    // subtrees). Both pins are DISK_ONLY: band rows and set arrays are
-    // corpus-proportional (the r15 sf100 sizing story is unchanged — the
-    // cache holds exactly the rows the join already shipped).
-    val shareable = graft.core.CacheRegistry.register(bandKeys
+    val keys = bandKeys
       .withColumn("_n", count(lit(1)).over(
         Window.partitionBy(col("band"), col("band_key"))))
       .filter(col("_n") >= 2 && col("_n") <= maxBucket)
-      .drop("_n")
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val candIds = shareable.select(col(idCol)).distinct()
+      .groupBy(col(idCol))
+      .agg(collect_list(struct(col("band"), col("band_key"))).as("_keys"))
     // sets built SORTED, once per doc and within its row (ShingleSet: no
     // shingle explode, no aggregation shuffle), so the per-pair intersect
     // below is a primitive two-pointer merge, not an array_intersect
     // hash-set rebuild per candidate pair — see
-    // [[graft.functions.SortedIntersectCount]] for the sf100 numbers
-    val sets = Spread.byKey(
-        docs.join(broadcast(candIds), Seq(idCol), "left_semi"), col(idCol))
-      .select(col(idCol), graft.functions.ShingleSet.column(text, k).as("ss"))
-    val banded = graft.core.CacheRegistry.register(
-      shareable.join(sets, Seq(idCol))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    def side(outId: String, outSs: String) =
-      banded.select(col("band"), col("band_key"),
-        col(idCol).as(outId), col("ss").as(outSs))
-    side("doc_a", "ss_a").join(side("doc_b", "ss_b"), Seq("band", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.SortedIntersectCount.column(col("ss_a"), col("ss_b")).as("inter"),
-        size(col("ss_a")).cast("long").as("n_a"),
-        size(col("ss_b")).cast("long").as("n_b"))
-      // a pair colliding in BOTH bands yields two IDENTICAL verdict rows
-      .distinct()
+    // [[graft.functions.SortedIntersectCount]] for the sf100 numbers.
+    // The set is projected BELOW the explode: an expression beside a
+    // generator is evaluated per generated row, i.e. once per band.
+    val exploded = Spread.byKey(docs.join(broadcast(keys), Seq(idCol)), col(idCol))
+      .select(col(idCol), col("_keys"),
+        graft.functions.ShingleSet.column(text, k).as("ss"))
+      .select(col(idCol), col("ss"), explode(col("_keys")).as("_k"))
+      .select(col("_k.band").as("band"), col("_k.band_key").as("band_key"),
+        col(idCol), col("ss"))
+    // the bucket exchange, written out: a planned one vanishes when a small
+    // input makes the self-join a broadcast join, and each side then builds
+    // its own sets. Spread at a fixed width: AQE would otherwise fold the
+    // pair fan-out (a merge intersect per pair) into one task, since its
+    // input is few bytes.
+    val withSets = Spread.byKey(exploded, col("band"), col("band_key"))
+    withSets.as("l").join(withSets.as("r"),
+        col("l.band") === col("r.band") && col("l.band_key") === col("r.band_key") &&
+          col(s"l.$idCol") < col(s"r.$idCol"))
+      .select(col(s"l.$idCol").as("doc_a"), col(s"r.$idCol").as("doc_b"),
+        graft.functions.SortedIntersectCount.column(col("l.ss"), col("r.ss")).as("inter"),
+        size(col("l.ss")).cast("long").as("n_a"),
+        size(col("r.ss")).cast("long").as("n_b"))
+      // a pair colliding in BOTH bands yields two IDENTICAL verdict rows.
+      // Grouped on the pair, not `distinct`: the statistics then leave an
+      // aggregate, so no filter on them (inter > 0 here, a caller's
+      // Jaccard cut) is pushed into the join condition, where each would
+      // run the intersect again, and ahead of the id test
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(max(col("inter")).as("inter"), max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"))
       .filter(col("inter") > 0) // parity with ngramJaccard
       .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
       .withColumn("jaccard", col("inter").cast("double") / col("uni"))
@@ -355,18 +372,55 @@ object Dedup {
     * each, which is this algorithm family's floor anyway; genuine
     * pathology still fails loud at the bound.
     *
+    * HYBRID: a small pair set is a driver-trivial union-find — the same
+    * bounded-driver-work stance as IVF's sampled k-means. The pair rows
+    * are pinned once and read back by ONE bounded `take(rowCap + 1)`,
+    * where rowCap is the smaller of
+    * `graft.cc.driverEdgeThreshold` (pair rows; bounds driver CPU) and the
+    * rows [[graft.core.DriverBudget]] admits (bounds driver MEMORY — a
+    * wide-key graph can sit under the count cap and still not fit). At
+    * most rowCap rows back: union-find on the driver. More: the
+    * distributed loop, built from the same pin, so the upstream pair plan
+    * runs once on either path. Labels are identical by construction: min
+    * reachable id per component.
+    *
     * Returns (doc_id, component) for every doc that appears in `pairs`.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    graft.core.Checkpoints.scoped(pairs.sparkSession) {
-      connectedComponentsBody(pairs, maxIter)
-    }
+    components(pairs, maxIter).fold(_.labels, identity)
 
-  /** Observability for specs: whether the last connectedComponents call
-    * took the driver union-find path (true) or the distributed HashMin
-    * loop (false).
+  /** Observability for specs: whether the last connectedComponents or
+    * dupClusters call took the driver union-find path (true) or the
+    * distributed HashMin loop (false).
     */
   @volatile private[graft] var lastPathDriver: Boolean = false
+
+  /** Pins `pairs`' (doc_a, doc_b) rows, then labels them on the driver
+    * when at most rowCap rows come back (see [[connectedComponents]]),
+    * else with the distributed loop over the same pin.
+    */
+  private def components(pairs: DataFrame, maxIter: Int): Either[DriverLabels, DataFrame] = {
+    val spark = pairs.sparkSession
+    val pairRows = pairs.select(col("doc_a"), col("doc_b"))
+    // the pin is the pair query's own result RDD, so the bounded take
+    // below computes and caches it in one job (a cached Dataset would
+    // take one job to build the cache and another to read it)
+    val pin = pairRows.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val thresholdRows = sys.props.get("graft.cc.driverEdgeThreshold")
+        .map(_.toLong).getOrElse(1000000L)
+      // each pair row becomes two directed edges on the driver
+      val budgetRows = graft.core.DriverBudget.edgesAdmitted(
+        spark.createDataFrame(pin, pairRows.schema), "doc_a", "doc_b") / 2
+      val rowCap = math.min(math.min(thresholdRows, budgetRows), Int.MaxValue - 1L).toInt
+      val rows = pin.take(rowCap + 1)
+      lastPathDriver = rows.length <= rowCap
+      if (lastPathDriver) Left(new DriverLabels(spark, pairRows.schema("doc_a").dataType, rows))
+      else Right(graft.core.Checkpoints.scoped(spark) {
+        distributedComponents(spark, pin, pairRows.schema, maxIter)
+      })
+    } finally pin.unpersist()
+  }
 
   /** Adaptive CC round bound: max(caller floor, 12 + 2·ceil-ish log2 of
     * the directed edge count). Exposed for the bound's own spec — the
@@ -375,15 +429,21 @@ object Dedup {
     math.max(maxIter,
       12 + 2 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, nDirected))))
 
-  private def connectedComponentsBody(pairs: DataFrame, maxIter: Int): DataFrame = {
-    // Undirected edge list, both directions, in ONE pass over `pairs`: a
-    // union of two projections would compute the (expensive) upstream
-    // candidate-pair plan twice on materialization; the explode is narrow.
+  /** The distributed HashMin + pointer-jumping loop over the pinned pair
+    * rows; releases the pin once the edge list built from it is
+    * materialized. Each round costs ~1 s of scheduling whatever the data
+    * size (join + agg + checkpoint jobs), which is why small graphs take
+    * the driver.
+    */
+  private def distributedComponents(spark: SparkSession, pin: RDD[Row], schema: StructType,
+                                    maxIter: Int): DataFrame = {
+    // Undirected edge list, both directions, in ONE pass over the pin: the
+    // explode is narrow.
     // No distinct — min-propagation is multi-edge tolerant (duplicate
     // contributions to min() are harmless), so deduping here would be a
     // pure extra shuffle. Repartitioned by src so the per-round join
     // reuses this partitioning and only the (small) label side shuffles.
-    val edges = pairs
+    val edges = spark.createDataFrame(pin, schema)
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
@@ -397,29 +457,8 @@ object Dedup {
       // the doc_id aggregation).
       .sortWithinPartitions(col("src"))
       .persist()
-    // HYBRID: a small edge set is a driver-trivial union-find — the same
-    // bounded-driver-work stance as IVF's sampled k-means. The iterative
-    // path costs ~1 s of scheduling per round regardless of data size
-    // (join + agg + checkpoint jobs), so a 22k-edge fixture graph paid
-    // ~6 s for what is microseconds of actual work; at 100 TB the
-    // near-dup graph (edges between CANDIDATES, not the corpus) often
-    // still fits this bound, and when it doesn't the distributed
-    // HashMin + pointer-jumping loop below takes over. Labels are
-    // identical by construction: min reachable id per component.
     val nDirected = edges.count()
-    val driverEdgeCap = sys.props.get("graft.cc.driverEdgeThreshold")
-      .map(_.toLong).getOrElse(1000000L)
-    // count cap bounds driver CPU; the bytes gate bounds driver MEMORY —
-    // a wide-key graph (string doc ids) can sit under the count cap and
-    // still not fit a fraction of free driver heap (see DriverBudget)
-    if (nDirected / 2 <= driverEdgeCap &&
-        graft.core.DriverBudget.fitsDriver(edges, nDirected)) {
-      lastPathDriver = true
-      val result = driverComponents(edges)
-      edges.unpersist()
-      return result
-    }
-    lastPathDriver = false
+    pin.unpersist()
     // IMPORTANT cache discipline: unpersist must be called on the EXACT
     // DataFrame that was persisted — calling it on a projection is a
     // silent no-op, caches pile up, and eviction then cascades into
@@ -514,7 +553,7 @@ object Dedup {
     // Checkpoints.scoped subdir: the result is pinned to the replicated
     // cache and the files are deleted before connectedComponents returns.
     val result =
-      if (pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      if (spark.sparkContext.getCheckpointDir.isDefined)
         labels.checkpoint(true)
       else labels.localCheckpoint(true)
     edges.unpersist()
@@ -522,53 +561,76 @@ object Dedup {
     result
   }
 
-  /** Driver-side exact components for a collected edge list: union-find
-    * with path compression, then per-root minimum under the key type's
-    * natural ordering — bit-identical to what HashMin converges to.
+  /** Driver-side exact components of collected (doc_a, doc_b) rows:
+    * union-find with path compression, then per-root minimum under the
+    * key type's natural ordering — bit-identical to what HashMin
+    * converges to.
     */
-  private def driverComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val keyType = edges.schema("src").dataType
-    val rows = edges.select(col("src"), col("dst")).collect()
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x0: Any): Any = {
-      var root = x0
-      var p = parent.getOrDefault(root, root)
-      while (p != root) { root = p; p = parent.getOrDefault(root, root) }
-      var x = x0
-      while (x != root) { val nxt = parent.get(x); parent.put(x, root); x = nxt }
-      root
+  private final class DriverLabels(spark: SparkSession, keyType: DataType, rows: Array[Row]) {
+    /** Every node → its component's least node. */
+    private val component: java.util.HashMap[Any, Any] = {
+      val parent = new java.util.HashMap[Any, Any]()
+      def find(x0: Any): Any = {
+        var root = x0
+        var p = parent.getOrDefault(root, root)
+        while (p != root) { root = p; p = parent.getOrDefault(root, root) }
+        var x = x0
+        while (x != root) { val nxt = parent.get(x); parent.put(x, root); x = nxt }
+        root
+      }
+      val nodes = new java.util.HashSet[Any]()
+      rows.foreach { r =>
+        val a = r.get(0); val b = r.get(1)
+        nodes.add(a); nodes.add(b)
+        val ra = find(a); val rb = find(b)
+        if (ra != rb) parent.put(ra, rb)
+      }
+      val ord: Ordering[Any] = new Ordering[Any] {
+        def compare(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
+      }
+      val minOfRoot = new java.util.HashMap[Any, Any]()
+      nodes.forEach { n =>
+        val r = find(n)
+        val cur = minOfRoot.get(r)
+        if (cur == null || ord.lt(n, cur)) minOfRoot.put(r, n)
+      }
+      val out = new java.util.HashMap[Any, Any](nodes.size * 2)
+      nodes.forEach(n => out.put(n, minOfRoot.get(find(n))))
+      out
     }
-    val nodes = new java.util.HashSet[Any]()
-    rows.foreach { r =>
-      val a = r.get(0); val b = r.get(1)
-      nodes.add(a); nodes.add(b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent.put(ra, rb)
+
+    /** (doc_id, component) per node. */
+    def labels: DataFrame = {
+      val out = new scala.collection.mutable.ArrayBuffer[Row](component.size)
+      component.forEach((n, c) => out += Row(n, c))
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(out.toSeq,
+          math.max(1, math.min(32, out.size / 50000 + 1))),
+        StructType(Seq(StructField("doc_id", keyType), StructField("component", keyType))))
     }
-    val ord: Ordering[Any] = new Ordering[Any] {
-      def compare(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+    /** (component, n_docs, keep_id) per cluster, as a local relation so a
+      * caller's collect runs no job. A component IS its least member, so
+      * it is also the keeper.
+      */
+    def clusters: DataFrame = {
+      val sizes = new java.util.HashMap[Any, java.lang.Long]()
+      component.forEach((_, c) => sizes.merge(c, 1L, (a, b) => a + b))
+      val out = new java.util.ArrayList[Row](sizes.size)
+      sizes.forEach((c, n) => out.add(Row(c, n, c)))
+      spark.createDataFrame(out, StructType(Seq(
+        StructField("component", keyType),
+        StructField("n_docs", LongType, nullable = false),
+        StructField("keep_id", keyType))))
     }
-    val minOfRoot = new java.util.HashMap[Any, Any]()
-    nodes.forEach { n =>
-      val r = find(n)
-      val cur = minOfRoot.get(r)
-      if (cur == null || ord.lt(n, cur)) minOfRoot.put(r, n)
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](nodes.size)
-    nodes.forEach(n => out += org.apache.spark.sql.Row(n, minOfRoot.get(find(n))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq,
-        math.max(1, math.min(32, out.size / 50000 + 1))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", keyType),
-        org.apache.spark.sql.types.StructField("component", keyType))))
   }
 
   /** Cluster summary: component root (= canonical keeper), member count.
+    * On the driver path the summary is built where the labels are, with
+    * no further job.
     */
   def dupClusters(pairs: DataFrame): DataFrame =
-    connectedComponents(pairs)
+    components(pairs, maxIter = 20).fold(_.clusters, _
       .groupBy(col("component"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id"))
+      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id")))
 }

@@ -52,15 +52,12 @@ object DriverBudget {
     case _ => None // StringType, BinaryType, Decimal, structs…
   }
 
-  /** Estimated driver-heap bytes to collect and iterate `edgeCount`
-    * (src, dst) rows of `edges`. One bounded sampling scan only when a
-    * key type is variable-width.
+  /** Estimated driver-heap bytes to collect and iterate one (src, dst)
+    * edge of `edges`. One bounded sampling scan only when a key type is
+    * variable-width.
     */
-  def estimateEdgeBytes(edges: DataFrame, edgeCount: Long,
-                        srcCol: String = "src", dstCol: String = "dst"): Long = {
-    val srcT = edges.schema(srcCol).dataType
-    val dstT = edges.schema(dstCol).dataType
-    def width(colName: String, dt: DataType): Long = fixedBoxedWidth(dt).getOrElse {
+  private def bytesPerEdge(edges: DataFrame, srcCol: String, dstCol: String): Long = {
+    def width(colName: String): Long = fixedBoxedWidth(edges.schema(colName).dataType).getOrElse {
       // variable-width: String object (~40 B header+fields) + UTF-16
       // payload; sample the average length from a bounded prefix scan
       val avgLen = edges.select(col(colName)).limit(SampleRows)
@@ -69,11 +66,24 @@ object DriverBudget {
         .map(_.asInstanceOf[Double]).getOrElse(32.0)
       48L + 2L * math.ceil(avgLen).toLong
     }
-    val perEdge = 64L + width(srcCol, srcT) + width(dstCol, dstT)
     // ×3: collected rows + interning/union-find maps (~1 entry per
     // endpoint, entry ≈ key again + 48 B of HashMap overhead)
-    3L * perEdge * math.max(edgeCount, 0L)
+    3L * (64L + width(srcCol) + width(dstCol))
   }
+
+  /** Estimated driver-heap bytes to collect and iterate `edgeCount`
+    * (src, dst) rows of `edges`.
+    */
+  def estimateEdgeBytes(edges: DataFrame, edgeCount: Long,
+                        srcCol: String = "src", dstCol: String = "dst"): Long =
+    bytesPerEdge(edges, srcCol, dstCol) * math.max(edgeCount, 0L)
+
+  /** The most (src, dst) edges of `edges` whose collect fits the budget:
+    * heapFraction × free heap over the per-edge estimate — the edge count
+    * at which [[fitsDriver]] turns false, without counting the edges.
+    */
+  def edgesAdmitted(edges: DataFrame, srcCol: String, dstCol: String): Long =
+    (heapFraction * freeHeapBytes).toLong / bytesPerEdge(edges, srcCol, dstCol)
 
   /** True when collecting `edgeCount` edges of `edges` fits the budget:
     * estimated bytes ≤ heapFraction × free heap. Callers AND this with

@@ -180,4 +180,23 @@ class SpreadSpec extends SparkSuite {
         math.max(spark.sparkContext.defaultParallelism, prev.toInt))
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  test("byKey leaves a file scan of at least width splits alone; a single file still spreads") {
+    val width = math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread")
+    try {
+      val rows = (1 to 400).map(i => (i.toLong, s"t$i")).toDF("id", "t")
+      rows.repartition(width).write.parquet(s"$dir/wide")
+      rows.coalesce(1).write.parquet(s"$dir/one")
+      val wide = spark.read.parquet(s"$dir/wide")
+      assert(wide.rdd.getNumPartitions >= width, "fixture: one split per file")
+      assert(graft.core.Spread.byKey(wide, col("id")) eq wide)
+      // the scan's splits survive a broadcast join's streamed side
+      val joined = wide.join(broadcast(rows.select(col("id"))), "id")
+      assert(graft.core.Spread.byKey(joined, col("id")) eq joined)
+      val one = spark.read.parquet(s"$dir/one")
+      assert(graft.core.Spread.byKey(one, col("id")).rdd.getNumPartitions == width)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }

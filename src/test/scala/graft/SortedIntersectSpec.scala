@@ -105,26 +105,23 @@ class SortedIntersectSpec extends SparkSuite {
     val plan = verified.queryExecution.executedPlan.toString
     assert(plan.contains(SortedIntersectCount.name), plan.take(4000))
     assert(!plan.contains("array_intersect"), plan.take(4000))
-    // the sets the kernel consumes are built sorted by ShingleSet, and
-    // they sit behind an InMemoryRelation leaf (the r19 pin), so asserting
-    // on the analyzed plan would be near-tautological (the analyzed tree
-    // always carries the expression the query was written with — r19
-    // ADVICE item 3). Check the CACHED plans instead: walk every
-    // InMemoryTableScan's cachedPlan (unwrapping AQE wrappers, which are
-    // leaf nodes) and require a physical node that evaluates ShingleSet —
-    // i.e. sorted-set construction survives to the plan that executes.
+    // the sets the kernel consumes are built sorted by ShingleSet.
+    // Asserting on the analyzed plan would be near-tautological (the
+    // analyzed tree always carries the expression the query was written
+    // with — r19 ADVICE item 3), so require a PHYSICAL node that evaluates
+    // ShingleSet, i.e. sorted-set construction survives to the plan that
+    // executes. The verify query holds no pin, so the set build sits in
+    // its own physical plan; the walk only unwraps AQE's wrapper, a leaf.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     def expand(p: SparkPlan): Seq[SparkPlan] = p.collect { case q => q }.flatMap {
       case a: AdaptiveSparkPlanExec => a +: expand(a.executedPlan)
-      case s: InMemoryTableScanExec => s +: expand(s.relation.cachedPlan)
       case q => Seq(q)
     }
-    val cachedSetBuild = expand(verified.queryExecution.executedPlan).exists(
+    val setBuild = expand(verified.queryExecution.executedPlan).exists(
       _.expressions.exists(_.find(_.isInstanceOf[graft.functions.ShingleSet]).isDefined))
-    assert(cachedSetBuild,
-      "no cached plan node evaluates ShingleSet:\n" +
+    assert(setBuild,
+      "no physical plan node evaluates ShingleSet:\n" +
         expand(verified.queryExecution.executedPlan).mkString("\n").take(4000))
   }
 

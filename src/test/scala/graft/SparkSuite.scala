@@ -24,7 +24,7 @@ abstract class SparkSuite extends AnyFunSuite
   lazy val spark: SparkSession = SharedSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
 
-  // Library-level pins (cappedPairs, lshVerifiedPairs, ngramJaccard, …)
+  // Library-level pins (cappedPairs, ngramJaccard, …)
   // register persisted handles at plan-construction time and rely on the
   // harness calling releaseAll after each query; test sessions get the
   // same hygiene here so a long suite run doesn't accumulate dead cached
