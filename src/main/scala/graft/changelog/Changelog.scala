@@ -91,11 +91,16 @@ object Changelog {
     df.withColumn("seqno",
       row_number().over(Window.partitionBy(col(groupCol)).orderBy(orderCols: _*)))
 
-  /** Durable streaming seqno: (epochId << 32) | rowIndexInBatch — monotone
-    * across restarts because epochId is checkpointed by Structured
+  /** Durable streaming seqno: (epoch << 32) + rowIndexInBatch — monotone
+    * across restarts because the epoch id is checkpointed by Structured
     * Streaming. Mirrors the reference's save-every-N + skip-forward scheme
     * (changelog/mysql.go:394-417) without a round-trip to a state DB.
+    * Callers pass `epochId + 1` and number rows from 1, so no log event
+    * shares seqno 0 with the snapshot sentinel.
     */
+  def epochSeqno(epochId: Long, rowIndexInBatch: Long): Long = (epochId << 32) + rowIndexInBatch
+
+  /** [[epochSeqno]] over a row-index column. */
   def epochSeqno(epochId: Long, rowIndexInBatch: Column): Column =
-    (lit(epochId) * lit(1L << 32) + rowIndexInBatch).as("seqno")
+    (lit(epochSeqno(epochId, 0L)) + rowIndexInBatch).as("seqno")
 }

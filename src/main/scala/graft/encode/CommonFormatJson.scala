@@ -70,30 +70,50 @@ object CommonFormatJson {
     concat((lit("[") +: parts) :+ lit("]"): _*)
   }
 
-  /** Insert (or schema-ish) event with Fields payload. */
-  def insertJson(key: Seq[(Column, DataType)], seqNo: Column, timestamp: Column,
-                 fields: Seq[(String, Column, DataType)]): Column = {
+  /** An event split around its SeqNo digits: `head` is the text up to and
+    * including `"SeqNo":`, `tail` the text after the digits. Every event
+    * form below is `head + seqNo + tail`, so a writer that numbers rows as
+    * it writes them ([[graft.pipes.EpochFileSink]]) puts out the same bytes.
+    */
+  final case class Split(head: Column, tail: Column) {
+    def withSeqNo(seqNo: Column): Column = concat(head, seqNo.cast("string"), tail)
+  }
+
+  private def insertSplit(key: Seq[(Column, DataType)], timestamp: Column,
+                          fields: Seq[(String, Column, DataType)]): Split = {
     val fieldParts = fields.zipWithIndex.flatMap { case ((n, c, dt), i) =>
       (if (i == 0) Seq.empty else Seq(lit(","))) :+ field(n, c, dt)
     }
-    concat(
-      Seq(lit("""{"Type":"insert","Key":"""), keyArray(key),
-        lit(""","SeqNo":"""), seqNo.cast("string"),
-        lit(""","Timestamp":"""), timestamp.cast("string"),
-        lit(""","Fields":[""")) ++ fieldParts ++ Seq(lit("]}")): _*)
+    Split(concat(lit("""{"Type":"insert","Key":"""), keyArray(key), lit(""","SeqNo":""")),
+      concat(Seq(lit(""","Timestamp":"""), timestamp.cast("string"),
+        lit(""","Fields":[""")) ++ fieldParts :+ lit("]}"): _*))
   }
+
+  private def deleteSplit(key: Seq[(Column, DataType)], timestamp: Column): Split =
+    Split(concat(lit("""{"Type":"delete","Key":"""), keyArray(key), lit(""","SeqNo":""")),
+      concat(lit(""","Timestamp":"""), timestamp.cast("string"), lit("}")))
+
+  /** Insert (or schema-ish) event with Fields payload. */
+  def insertJson(key: Seq[(Column, DataType)], seqNo: Column, timestamp: Column,
+                 fields: Seq[(String, Column, DataType)]): Column =
+    insertSplit(key, timestamp, fields).withSeqNo(seqNo)
 
   /** Delete event: key + metadata only, NO Fields (main_test.go:96). */
   def deleteJson(key: Seq[(Column, DataType)], seqNo: Column, timestamp: Column): Column =
-    concat(lit("""{"Type":"delete","Key":"""), keyArray(key),
-      lit(""","SeqNo":"""), seqNo.cast("string"),
-      lit(""","Timestamp":"""), timestamp.cast("string"), lit("}"))
+    deleteSplit(key, timestamp).withSeqNo(seqNo)
+
+  /** op-dispatched event, split around its SeqNo digits. */
+  def eventSplit(op: Column, key: Seq[(Column, DataType)], timestamp: Column,
+                 fields: Seq[(String, Column, DataType)]): Split = {
+    val (d, i) = (deleteSplit(key, timestamp), insertSplit(key, timestamp, fields))
+    val isDelete = op === "delete"
+    Split(when(isDelete, d.head).otherwise(i.head), when(isDelete, d.tail).otherwise(i.tail))
+  }
 
   /** op-dispatched event (insert/update already expanded upstream). */
   def eventJson(op: Column, key: Seq[(Column, DataType)], seqNo: Column,
                 timestamp: Column, fields: Seq[(String, Column, DataType)]): Column =
-    when(op === "delete", deleteJson(key, seqNo, timestamp))
-      .otherwise(insertJson(key, seqNo, timestamp, fields))
+    eventSplit(op, key, timestamp, fields).withSeqNo(seqNo)
 
   /** Schema event (encoder_test.go:136 outJSONSchema shape): Key = PK
     * column NAMES, Fields = column name → source (MySQL) type string.
@@ -111,12 +131,16 @@ object CommonFormatJson {
   /** Convenience: encode a DataFrame's payload columns using their schema
     * types. Expects `op`, `seqno` columns plus the payload/pk columns.
     */
-  def encodeRows(df: DataFrame, pkCols: Seq[String], payloadCols: Seq[String]): Column = {
+  def encodeRows(df: DataFrame, pkCols: Seq[String], payloadCols: Seq[String]): Column =
+    encodeSplit(df, pkCols, payloadCols).withSeqNo(col("seqno"))
+
+  /** [[encodeRows]] without the seqno: expects an `op` column plus the
+    * payload/pk columns, and leaves the SeqNo digits to the writer.
+    */
+  def encodeSplit(df: DataFrame, pkCols: Seq[String], payloadCols: Seq[String]): Split = {
     val schema: StructType = df.schema
     def dt(n: String) = schema(n).dataType
-    eventJson(col("op"),
-      pkCols.map(n => col(n) -> dt(n)),
-      col("seqno"), lit(0L),
+    eventSplit(col("op"), pkCols.map(n => col(n) -> dt(n)), lit(0L),
       payloadCols.map(n => (n, col(n), dt(n))))
   }
 }

@@ -113,7 +113,11 @@ final class SnapshotMetricsListener extends SparkListener {
 }
 
 /** Streaming-stage metrics from micro-batch progress: rows per batch into
-  * `streamer_events_read`/`streamer_events_written`, batch row count into
+  * `streamer_events_read`/`streamer_events_written` (the sink's
+  * `numOutputRows`: a DataSource-V2 sink such as the changelog phase's
+  * reports it, a `foreachBatch` sink reports -1 and adds nothing; the
+  * V2 write tasks set no output metrics, so those rows are not in the
+  * snapshot family), batch row count into
   * the `streamer_batch_size` timer and batch wall time into
   * `streamer_produce_latency` — the Streamer family (metrics.go:92-97).
   */

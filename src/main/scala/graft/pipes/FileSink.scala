@@ -45,7 +45,9 @@ import graft.core.{HadoopConf, LocalFs}
   * for file://, hdfs:// and s3a:// uniformly), names sliced straight into
   * tasks ([[mapFileTasks]]), so it is one narrow job with no shuffle. Both
   * paths digest a file with [[hashOne]] and render `_DONE` with
-  * [[writeDone]], so their manifests are byte-identical.
+  * [[writeDone]], so their manifests are byte-identical. The streaming
+  * [[EpochFileSink]] digests as it writes and renders its `_DONE` with
+  * [[writeDone]] too.
   *
   * Encrypt+sign (:384-437) transforms the committed files, so it is its own
   * pass over [[mapFileTasks]] — [[CryptoStage.encryptDirPgp]] (real RFC 4880
@@ -138,7 +140,7 @@ object FileSink {
     * by file name, as the reference's `[{NumRecs,Hash,FileName}]` array.
     * Returns the sorted entries.
     */
-  private def writeDone(fs: FileSystem, dir: HPath, entries: Seq[Manifest]): Seq[Manifest] = {
+  private[pipes] def writeDone(fs: FileSystem, dir: HPath, entries: Seq[Manifest]): Seq[Manifest] = {
     val sorted = entries.sortBy(_.fileName)
     val json = sorted.map(m =>
       s"""{"NumRecs":${m.numRecs},"Hash":"${m.hash}","FileName":"${m.fileName}"}""")

@@ -1,9 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.core.RowKey
 import graft.encode.CommonFormatJson
 import graft.pipes.FileSink
 import graft.state.StateStore
@@ -17,7 +15,10 @@ import graft.state.StateStore
   * the reference's consumer-first order (streamer.go:196-199) — encode to
   * the registered output format, write through the pipe, mark synced.
   * Per-epoch latency is a fixed cost plus the work, so each epoch is one
-  * job: no seqno shuffle, and `_DONE` comes from the write job itself.
+  * streaming plan, planned once per micro-batch, and one job of one task:
+  * the stream expands, encodes and sorts, the sink's writer numbers the
+  * seqnos and digests the file it writes, and the sink's commit writes
+  * `_DONE` ([[Streamer.changelogPhase]], [[graft.pipes.EpochFileSink]]).
   * Task leases (O2) are not needed — one driver owns all queries;
   * `ClusterConcurrency` (O11) is [[ClusterLimiter]]: wrap `runTask` in
   * `limiter.withSlot(spark, cluster)` to cap concurrent tasks per source
@@ -26,12 +27,14 @@ import graft.state.StateStore
 class Coordinator(spark: SparkSession, state: StateStore, outRoot: String) {
 
   /** Process one registration end-to-end over fixture data: the changelog
-    * query starts first and expands events with epoch seqnos into
-    * `log/epoch=N`; meanwhile this thread writes the snapshot, with
-    * seqno-sentinel rows, into `snapshot/`; both go CF-JSON → file pipe
-    * with `_DONE` manifest. Each write is one Spark job: the snapshot's,
-    * and one per epoch, whose seqno window, encode, write and file digests
-    * share one task ([[Streamer.changelogPhase]], [[FileSink.write]]).
+    * query starts first and writes each epoch's events, expanded, with
+    * epoch seqnos, into `log/epoch=N`; meanwhile this thread writes the
+    * snapshot, with seqno-sentinel rows, into `snapshot/`; both go CF-JSON
+    * → file pipe with `_DONE` manifest. Each write is one Spark job: the
+    * snapshot's ([[FileSink.write]]), and one per epoch, whose sort, encode,
+    * seqno numbering, write and file digest share one task: a source with
+    * several partitions is coalesced to one ordered task per epoch, as the
+    * binlog is one ordered stream per cluster ([[Streamer.changelogPhase]]).
     * The two phases write separate directories and snapshot rows carry
     * seqno 0, so latest-seqno-wins resolves the same state whichever
     * phase finishes first. If the snapshot write fails,
@@ -50,27 +53,23 @@ class Coordinator(spark: SparkSession, state: StateStore, outRoot: String) {
 
     // Consumer first (streamer.go:196-199): the query's epochs run on its
     // own thread while the snapshot is written on this one.
-    val logManifest = scala.collection.mutable.ArrayBuffer.empty[FileSink.Manifest]
-    val q = Streamer.changelogPhase(changelog, orderCols, checkpoint, (batch, epoch) => {
-      val enc = encodeCf(batch, pkCols, payloadCols)
-      logManifest ++= FileSink.write(enc, s"$outDir/log/epoch=$epoch", "json")
-    })
+    val log = Streamer.changelogPhase(changelog, pkCols, payloadCols, orderCols, checkpoint,
+      s"$outDir/log")
 
     // Snapshot with sentinel seqno (snapshot/mysql.go:301)
     val snapManifest =
-      try FileSink.write(encodeCf(Streamer.snapshotPhase(snapshot), pkCols, payloadCols),
-        s"$outDir/snapshot", "json")
-      catch {
+      try {
+        val snap = Streamer.snapshotPhase(snapshot)
+        FileSink.write(snap.select(CommonFormatJson.encodeRows(snap, pkCols, payloadCols).as("value")),
+          s"$outDir/snapshot", "json")
+      } catch {
         case t: Throwable =>
-          try q.stop() catch { case s: Throwable => t.addSuppressed(s) }
+          try log.stop() catch { case s: Throwable => t.addSuppressed(s) }
           throw t
       }
-    q.awaitTermination()
+    val logManifest = log.await()
 
     state.markSynced(reg.key)
     snapManifest ++ logManifest
   }
-
-  private def encodeCf(df: DataFrame, pkCols: Seq[String], payloadCols: Seq[String]): DataFrame =
-    df.select(CommonFormatJson.encodeRows(df, pkCols, payloadCols).as("value"))
 }

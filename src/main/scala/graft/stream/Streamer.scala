@@ -4,10 +4,11 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.changelog.Changelog
 import graft.core.LocalFs
+import graft.encode.CommonFormatJson
+import graft.pipes.EpochFileSink
 
 /** Snapshot + changelog orchestration (O3/O4/O6).
   *
@@ -27,8 +28,10 @@ import graft.core.LocalFs
   * run; the query's checkpoint holds its offsets, so buffered events come
   * free from micro-batch replay. The phases write separate directories
   * and snapshot rows carry the sentinel seqno, so latest-seqno-wins
-  * resolves the same state whichever phase finishes first. Seqnos are
-  * `((epochId + 1) << 32) + rowNumber` — monotone across restarts because
+  * resolves the same state whichever phase finishes first. The stream
+  * plans each epoch once (expand, encode, sort, write) and the sink's
+  * writer numbers the seqnos, `((epochId + 1) << 32) + rowNumber`, as it
+  * writes the epoch's sorted rows — monotone across restarts because
   * epochId is checkpointed (vs. the reference persisting the counter every
   * SeqnoSaveInterval and skipping forward — changelog/mysql.go:394-417).
   */
@@ -43,42 +46,45 @@ object Streamer {
     snapshot.withColumns(ListMap(
       "seqno" -> lit(SnapshotSeqno), "op" -> lit("insert"), "half" -> lit(1)))
 
-  /** Changelog phase: streaming changelog with expansion + durable seqnos,
-    * `foreachBatch` so each micro-batch gets its epoch-scoped seqnos and
-    * any pipe (file/JDBC/Kafka) can sit at the end.
+  /** Changelog phase: the streaming changelog, expanded, CF-encoded and
+    * written one epoch at a time to `outDir/epoch=N` with its `_DONE` by
+    * [[graft.pipes.EpochFileSink]]. The whole epoch is one streaming plan,
+    * built here once, that Structured Streaming plans once per micro-batch:
+    * expand, `coalesce(1)`, project the order columns, `half` and the CF
+    * record split around its SeqNo digits, local sort on
+    * `orderCols :+ "half"` (the sink's required ordering), write. The
+    * writer numbers the seqnos as the sorted rows arrive:
+    * `((epochId + 1) << 32) + 1..n`.
     *
-    * @param changelog streaming DataFrame with an `op` column
-    *                  (insert/update/delete) and arbitrary payload columns
-    * @param orderCols intra-batch ordering, typically (ts, event_id)
-    * @param sink      called once per micro-batch with expanded rows
+    * Multi-partition sources: `coalesce(1)` gives one ordered task per
+    * epoch, with no Exchange, because there is one ordered binlog per
+    * cluster and one seqno counter per cluster (changelog/mysql.go:394-402);
+    * `graft-binlog` delivers one partition, and an input spanning several
+    * partitions runs its narrow upstream work (decode, expand) in that one
+    * task too. Fine at micro-batch scale (bounded by the source's per-trigger
+    * cap), NOT at table scale. The sink fails an epoch that reaches it in
+    * more than one partition, so seqnos cannot collide.
+    *
+    * @param changelog   streaming DataFrame with an `op` column
+    *                    (insert/update/delete) and the payload columns
+    * @param pkCols      primary key columns (the CF `Key`)
+    * @param payloadCols columns encoded into the CF `Fields`
+    * @param orderCols   intra-batch ordering, typically (ts, event_id)
+    * @return the running query; [[graft.pipes.EpochFileSink.Run.await]]
+    *         returns the epochs' `_DONE` entries
     */
-  def changelogPhase(changelog: DataFrame, orderCols: Seq[String],
-                     checkpoint: String, sink: (DataFrame, Long) => Unit): StreamingQuery = {
+  def changelogPhase(changelog: DataFrame, pkCols: Seq[String], payloadCols: Seq[String],
+                     orderCols: Seq[String], checkpoint: String,
+                     outDir: String): EpochFileSink.Run = {
     // offset/commit logs and state files go through FileContext
     LocalFs.install(changelog.sparkSession)
-    changelog.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // row index within the batch: a partition-less window over the
-        // natural order cols, run in ONE task. `foreachBatch` hands over the
-        // batch with unknown partitioning, so without the coalesce the
-        // window plans an `Exchange SinglePartition` (under AQE its own map
-        // job); coalesced, the sort, the window and the sink's write share
-        // the one task of one job. The trade-off: an input spanning several
-        // partitions also runs its upstream narrow work (decode, expand) in
-        // that task. Fine at micro-batch scale (bounded by
-        // maxOffsetsPerTrigger; `graft-binlog` delivers one ordered
-        // partition), NOT at table scale.
-        val expanded = Changelog.expandUpdates(batch).coalesce(1)
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy((orderCols.map(col) :+ col("half")).map(_.asc): _*)
-        val withSeqno = expanded.withColumn("seqno",
-          Changelog.epochSeqno(epochId + 1, row_number().over(w).cast("long")))
-        sink(withSeqno, epochId)
-      }
-      .start()
+    val expanded = Changelog.expandUpdates(changelog).coalesce(1)
+    val cf = CommonFormatJson.encodeSplit(expanded, pkCols, payloadCols)
+    val sortCols = orderCols :+ "half"
+    EpochFileSink.start(
+      expanded.select(sortCols.map(col) :+ cf.head.as(EpochFileSink.Head) :+
+        cf.tail.as(EpochFileSink.Tail): _*),
+      sortCols, outDir, checkpoint)
   }
 
   /** Latest-state resolution: one row per key, highest seqno wins; delete

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.changelog.BinlogWire
@@ -42,6 +42,39 @@ object OnboardOrderProbe {
   def changelogRow(op: String): String = {
     snapshotRead.await(30, TimeUnit.SECONDS)
     op
+  }
+}
+
+/** A 12-transaction binary binlog over ids 0..7 (inserts, then updates and
+  * deletes), read by `graft-binlog` two events per epoch: 6 epochs, 15 CF
+  * records (3 updates write two halves); `gate` wraps the `op` column.
+  * Columns: `seq`, `op`, `id`, `name`.
+  */
+object TxnBinlog {
+  private val table = BinlogWire.TableDef("shop", "items", Seq(
+    BinlogWire.Col("id", BinlogWire.T.LONGLONG),
+    BinlogWire.Col("name", BinlogWire.T.VARCHAR, meta = 32)))
+
+  def changelog(spark: SparkSession, work: String, gate: Column => Column = identity): DataFrame = {
+    def img(id: Long, name: String): IndexedSeq[Any] = IndexedSeq(java.lang.Long.valueOf(id), name)
+    val uuid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
+    val rows = (0L until 8L).map(i => BinlogWire.Row("insert", None, Some(img(i, s"b$i")))) ++
+      Seq(BinlogWire.Row("update", Some(img(1, "b1")), Some(img(1, "u1"))),
+        BinlogWire.Row("update", Some(img(2, "b2")), Some(img(2, "u2"))),
+        BinlogWire.Row("delete", Some(img(3, "b3")), None),
+        BinlogWire.Row("update", Some(img(1, "u1")), Some(img(1, "v1"))))
+    val path = s"$work/backlog.binlog"
+    BinlogFixture.writeBinary(path, rows.zipWithIndex.iterator.map { case (r, g) =>
+      BinlogWire.Txn(uuid, g + 1L, 1700000000000L + g * 1000L, table, Seq(r))
+    })
+    spark.readStream.format("graft-binlog")
+      .option("path", path)
+      .option("maxEventsPerTrigger", "2")
+      .load()
+      .filter(col("op") =!= "ddl")
+      .select(col("seq"), gate(col("op")).as("op"),
+        from_json(col("payload"), org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, name STRING")).as("r"))
+      .select(col("seq"), col("op"), col("r.id").as("id"), col("r.name").as("name"))
   }
 }
 
@@ -104,14 +137,18 @@ class CoordinatorSpec extends SparkSuite {
       assert(manifests.nonEmpty && manifests.forall(_.hash.length == 64))
       assert(state.listRegistrations.head.state == "synced")
       val outBase = s"$work/out/cl1.fixtures.events_state.v0"
-      val written = spark.read.json(s"$outBase/snapshot").count() +
-        spark.read.json(s"$outBase/log/*").count()
-      assert(written == manifests.map(_.numRecs).sum)
+      val snapshotRows = spark.read.json(s"$outBase/snapshot").count()
+      val logRows = spark.read.json(s"$outBase/log/*").count()
+      assert(logRows > 0 && snapshotRows + logRows == manifests.map(_.numRecs).sum)
 
-      // metrics populated by the run itself
+      // metrics populated by the run itself: batch write tasks' output
+      // metrics feed the snapshot family; the changelog's rows reach the
+      // streamer family through the sink's progress (its DataSource-V2
+      // write tasks report no output metrics)
       eventually() {
         val snap = Metrics.snapshot()
-        assert(snap("snapshot_events_written") >= written, snap)
+        assert(snap("streamer_events_written") == logRows, snap)
+        assert(snap("snapshot_events_written") >= snapshotRows, snap)
         assert(snap("streamer_events_read") > 0L, snap)
         assert(snap("streamer_batches") >= 1L, snap)
       }
@@ -119,35 +156,8 @@ class CoordinatorSpec extends SparkSuite {
     } finally MetricsListeners.uninstall(spark, listeners)
   }
 
-  private val binlogTable = BinlogWire.TableDef("shop", "items", Seq(
-    BinlogWire.Col("id", BinlogWire.T.LONGLONG),
-    BinlogWire.Col("name", BinlogWire.T.VARCHAR, meta = 32)))
-
-  /** A 12-transaction binary binlog over ids 0..7 (inserts, then updates
-    * and deletes), read by `graft-binlog` two events per epoch; `gate`
-    * wraps the `op` column.
-    */
-  private def binlogChangelog(work: String, gate: Column => Column): DataFrame = {
-    def img(id: Long, name: String): IndexedSeq[Any] = IndexedSeq(java.lang.Long.valueOf(id), name)
-    val uuid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
-    val rows = (0L until 8L).map(i => BinlogWire.Row("insert", None, Some(img(i, s"b$i")))) ++
-      Seq(BinlogWire.Row("update", Some(img(1, "b1")), Some(img(1, "u1"))),
-        BinlogWire.Row("update", Some(img(2, "b2")), Some(img(2, "u2"))),
-        BinlogWire.Row("delete", Some(img(3, "b3")), None),
-        BinlogWire.Row("update", Some(img(1, "u1")), Some(img(1, "v1"))))
-    val path = s"$work/backlog.binlog"
-    BinlogFixture.writeBinary(path, rows.zipWithIndex.iterator.map { case (r, g) =>
-      BinlogWire.Txn(uuid, g + 1L, 1700000000000L + g * 1000L, binlogTable, Seq(r))
-    })
-    spark.readStream.format("graft-binlog")
-      .option("path", path)
-      .option("maxEventsPerTrigger", "2")
-      .load()
-      .filter(col("op") =!= "ddl")
-      .select(col("seq"), gate(col("op")).as("op"),
-        from_json(col("payload"), org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, name STRING")).as("r"))
-      .select(col("seq"), col("op"), col("r.id").as("id"), col("r.name").as("name"))
-  }
+  private def binlogChangelog(work: String, gate: Column => Column): DataFrame =
+    TxnBinlog.changelog(spark, work, gate)
 
   private def newTask(tag: String): (String, StateStore, Registration, Coordinator) = {
     val work = Files.createTempDirectory(s"graft-coord-$tag").toString
@@ -193,11 +203,13 @@ class CoordinatorSpec extends SparkSuite {
     }
     val epochs = new java.io.File(s"$work/out/cl1.shop.items.v0/log").list().count(_.startsWith("epoch="))
     assert(manifests.map(_.numRecs).sum == 8 + 12 + 3)
-    // 12 transactions, two events per epoch: 7 jobs. Before each write
-    // built its `_DONE` in its own job and the epoch's seqno window ran in
-    // the write's task, this was 20 jobs: snapshot write + manifest pass,
-    // and per epoch the seqno shuffle's map job, the write and the
-    // manifest pass.
+    // 12 transactions, two events per epoch: 7 jobs, the snapshot write
+    // and one per epoch, whose streaming write sorts, numbers seqnos,
+    // writes and digests in one task and writes `_DONE` in its commit.
+    // Before each write built its `_DONE` in its own job and the epoch's
+    // seqno window ran in the write's task, this was 20 jobs: snapshot
+    // write + manifest pass, and per epoch the seqno shuffle's map job,
+    // the write and the manifest pass.
     assert(epochs == 6, s"$epochs epochs")
     assert(jobs == 1 + epochs, s"$jobs jobs over $epochs epochs")
   }

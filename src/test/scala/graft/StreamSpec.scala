@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 import graft.stream.Streamer
@@ -13,37 +13,45 @@ case class Cdc(op: String, ts: Long, id: Long, k: Long, v: String)
 class StreamerSpec extends SparkSuite {
   import spark.implicits._
 
+  // CF Key = (ts, id), so every record, delete or insert, carries its order columns
+  private val Pk = Seq("ts", "id")
+  private val Payload = Seq("ts", "id", "k", "v")
+
+  /** (epoch, ts, id, half, seqno) of every record written under `dir`;
+    * the half is the record's Type (an update's delete half comes first).
+    */
+  private def written(dir: String): Seq[(Long, Long, Long, Int, Long)] =
+    EpochFiles.records(dir).map { case (epoch, r) =>
+      (epoch, r.get("Key").get(0).asLong, r.get("Key").get(1).asLong,
+        if (r.get("Type").asText == "delete") 0 else 1, r.get("SeqNo").asLong)
+    }
+
   test("changelog phase: updates expand, seqnos monotone across epochs") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Cdc]
-    val results = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val out = Files.createTempDirectory("graft-log").toString + "/log"
 
     stream.addData(
       Cdc("insert", 1, 1, 100, "a"),
       Cdc("update", 2, 2, 100, "b"),
       Cdc("delete", 3, 3, 100, null))
 
-    val q = Streamer.changelogPhase(stream.toDF(), Seq("ts", "id"), ckpt,
-      (batch, _) => results += batch.cache())
-    q.awaitTermination()
-
-    val rows = results.flatMap(_.collect()).sortBy(_.getAs[Long]("seqno"))
+    val first = Streamer.changelogPhase(stream.toDF(), Pk, Payload, Seq("ts", "id"), ckpt, out).await()
+    val rows = written(out).sortBy(_._5)
     // 1 insert + (delete+insert) + 1 delete = 4 physical events
-    assert(rows.map(r => (r.getAs[String]("op"), r.getAs[Long]("id"))).toSeq ==
-      Seq(("insert", 1L), ("delete", 2L), ("insert", 2L), ("delete", 3L)))
+    assert(rows.map(r => (r._4, r._3)) == Seq((1, 1L), (0, 2L), (1, 2L), (0, 3L)))
+    assert(first.map(_.numRecs) == Seq(4L))
     // delete-half of the update precedes its insert-half in seqno order
-    val seqnos = rows.map(_.getAs[Long]("seqno"))
-    assert(seqnos == seqnos.sorted && seqnos.distinct.length == seqnos.length)
+    val seqnos = rows.map(_._5)
+    assert(seqnos.distinct.length == seqnos.length)
 
-    // second batch: epoch increments keep seqnos monotone (restart-safe)
-    val stream2Results = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // a restart on the same checkpoint: the epoch id keeps seqnos monotone
     stream.addData(Cdc("insert", 4, 4, 101, "c"))
-    val q2 = Streamer.changelogPhase(stream.toDF(), Seq("ts", "id"), ckpt,
-      (batch, _) => stream2Results += batch.cache())
-    q2.awaitTermination()
-    val laterSeqnos = stream2Results.flatMap(_.collect()).map(_.getAs[Long]("seqno"))
-    assert(laterSeqnos.nonEmpty && laterSeqnos.min > seqnos.max)
+    val second = Streamer.changelogPhase(stream.toDF(), Pk, Payload, Seq("ts", "id"), ckpt, out).await()
+    assert(second.map(_.numRecs) == Seq(1L))
+    val later = written(out).filter(_._1 == 1L).map(_._5)
+    assert(later.nonEmpty && later.min > seqnos.max)
   }
 
   test("epoch seqnos: one task, no Exchange, ((epoch+1) << 32) + 1..n in (orderCols, half) order") {
@@ -58,26 +66,25 @@ class StreamerSpec extends SparkSuite {
       val stream = MemoryStream[Cdc]
       if (parts == 1) stream.addData(batches.flatten)
       else batches.foreach(b => stream.addData(b))
-      // (epoch, input partitions, executed plan, (ts, id, half, seqno))
-      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, String, Seq[(Long, Long, Int, Long)])]
       val ckpt = Files.createTempDirectory("graft-ckpt-seqno").toString
-      Streamer.changelogPhase(stream.toDF(), Seq("ts", "id"), ckpt, (batch, epoch) => {
-        val rows = batch.select("ts", "id", "half", "seqno").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
-        val inputParts = batch.queryExecution.sparkPlan.collectLeaves()
-          .map(_.execute().getNumPartitions).sum
-        seen += ((epoch, inputParts, batch.queryExecution.executedPlan.toString, rows))
-      }).awaitTermination()
+      val out = Files.createTempDirectory("graft-log-seqno").toString + "/log"
+      val run = Streamer.changelogPhase(stream.toDF(), Pk, Payload, Seq("ts", "id"), ckpt, out)
+      run.await()
+      val plan = run.query.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val inputParts = plan.collectLeaves().map(_.execute().getNumPartitions).sum
+      val writeTasks = plan.children.map(_.execute().getNumPartitions).sum
+      val rows = written(out)
 
-      assert(seen.size == 1, s"$parts partitions: ${seen.size} epochs")
-      val (epoch, inputParts, plan, rows) = seen.head
+      assert(rows.map(_._1).distinct == Seq(0L), s"$parts partitions: epochs ${rows.map(_._1).distinct}")
       assert(inputParts == parts, s"micro-batch has $inputParts input partitions, want $parts")
-      assert(!plan.contains("Exchange"), s"$parts partitions: the epoch shuffles:\n$plan")
+      assert(writeTasks == 1, s"$parts partitions: the epoch writes in $writeTasks tasks")
+      assert(!plan.toString.contains("Exchange"), s"$parts partitions: the epoch shuffles:\n$plan")
       // 7 events, 3 of them updates (two halves each)
       assert(rows.size == 10)
-      val expected = rows.sortBy { case (ts, id, half, _) => (ts, id, half) }.zipWithIndex
-        .map { case ((ts, id, half, _), i) => (ts, id, half, ((epoch + 1) << 32) + i + 1) }
-      assert(rows.sortBy(_._4) == expected, s"$parts partitions")
+      val expected = rows.sortBy { case (_, ts, id, half, _) => (ts, id, half) }.zipWithIndex
+        .map { case ((epoch, ts, id, half, _), i) => (epoch, ts, id, half, ((epoch + 1) << 32) + i + 1) }
+      // the file is in seqno order, and the seqnos follow (ts, id, half)
+      assert(rows == expected, s"$parts partitions")
     }
   }
 

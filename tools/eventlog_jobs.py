@@ -11,10 +11,21 @@ overlap, as adaptive stages of one query often do), the job's duration, the
 stages and tasks it ran (skipped stages and their tasks are not counted)
 and its call site. A footer sums jobs, tasks, job time and gap time over
 the printed range.
+
+Then, for a log with streaming queries, one line per micro-batch from its
+QueryProgressEvent, in the order the batches ended: query run id, batch
+id, input rows over its sources, the sink's output rows (-1 for a sink
+that does not count them, as foreachBatch) and the batch's durationMs
+phases (addBatch, queryPlanning, walCommit, commitOffsets,
+triggerExecution); then the median of each phase per batch id over all
+the runs in the log. The job range does not apply to this part.
 """
 import json
 import pathlib
+import statistics
 import sys
+
+PHASES = ("addBatch", "queryPlanning", "walCommit", "commitOffsets", "triggerExecution")
 
 
 def lines(path):
@@ -30,10 +41,13 @@ def read(path):
     jobs = {}       # job id -> dict
     ran = set()     # stage ids that were submitted
     tasks = {}      # stage id -> finished task count
+    batches = []    # micro-batch progress, in the order the batches ended
     for line in lines(path):
         ev = json.loads(line)
-        kind = ev.get("Event")
-        if kind == "SparkListenerJobStart":
+        kind = ev.get("Event") or ""
+        if kind.endswith("StreamingQueryListener$QueryProgressEvent"):
+            batches.append(ev["progress"])
+        elif kind == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
             stages = ev.get("Stage Infos") or []
             site = props.get("callSite.short") or (stages[-1].get("Stage Name") if stages else "")
@@ -58,13 +72,38 @@ def read(path):
         elif kind == "SparkListenerTaskEnd":
             s = ev.get("Stage ID")
             tasks[s] = tasks.get(s, 0) + 1
-    return jobs, ran, tasks
+    return jobs, ran, tasks, batches
+
+
+def phase_cells(values):
+    """One right-aligned cell per phase, as wide as the phase's name."""
+    return "".join(f" {v:>{len(p)}}" for p, v in zip(PHASES, values))
+
+
+def print_batches(batches):
+    if not batches:
+        return
+    print(f"\n{'run':>8} {'batch':>5} {'rows':>6} {'out':>6}{phase_cells(PHASES)}")
+    by_id = {}
+    for b in batches:
+        d = b.get("durationMs") or {}
+        by_id.setdefault(b["batchId"], []).append(d)
+        rows = sum(src.get("numInputRows", 0) for src in b.get("sources") or [])
+        out = (b.get("sink") or {}).get("numOutputRows", "")
+        print(f"{b['runId'][:8]:>8} {b['batchId']:>5} {rows:>6} {out:>6}"
+              f"{phase_cells(d.get(p, '') for p in PHASES)}")
+    print("\nmedian ms per batch id")
+    print(f"{'batch':>5} {'runs':>5}{phase_cells(PHASES)}")
+    for i in sorted(by_id):
+        ds = by_id[i]
+        medians = (statistics.median(v) if (v := [d[p] for d in ds if p in d]) else "" for p in PHASES)
+        print(f"{i:>5} {len(ds):>5}{phase_cells(medians)}")
 
 
 def main(argv):
     if len(argv) < 2:
         sys.exit(__doc__)
-    jobs, ran, tasks = read(argv[1])
+    jobs, ran, tasks, batches = read(argv[1])
     ids = sorted(jobs)
     lo = int(argv[2]) if len(argv) > 2 else (ids[0] if ids else 0)
     hi = int(argv[3]) if len(argv) > 3 else (ids[-1] if ids else -1)
@@ -88,6 +127,7 @@ def main(argv):
         print(f"{j:>5} {job['sql']:>5} {'' if gap is None else gap:>7} "
               f"{'' if dur is None else dur:>7} {len(stages):>6} {t:>6}  {job['site']}")
     print(f"{n} jobs, {n_tasks} tasks, {busy} ms in jobs, {idle} ms between them")
+    print_batches(batches)
 
 
 if __name__ == "__main__":
