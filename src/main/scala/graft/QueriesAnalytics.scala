@@ -364,21 +364,11 @@ object QueriesAnalytics {
     */
   def lshRecall(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    // MATERIALIZED once (r19): `universe` is referenced three times
-    // (ngramJaccard's candIds + its pair join, plus flagged) — unpinned,
-    // the whole MinHash candidate pipeline re-executed per reference
-    // (plan audit: 14 minhashsignature nodes / 56 parquet scans in this
-    // one query before the r19 pins here + in cappedPairs/ngramJaccard).
-    // It is an id-pair list (bounded by planted + capped LSH
-    // candidates), so MEMORY_AND_DISK is safe at any SF.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // r20: the universe carries its LSH provenance instead of the former
-    // separate `cand` pin + flag-back join. planted rows enter flagged
-    // false, LSH candidates true, and the distinct becomes a max() over
-    // the pair key — the SAME one pair-keyed exchange the distinct
-    // already paid, while the second pin, its cache build and the third
-    // pair-list join at the end disappear outright (guide §2.4: two
-    // operations keyed the same way share one exchange).
+    // The universe carries its LSH provenance: planted rows enter flagged
+    // false, LSH candidates true, and a max() over the pair key dedups
+    // them. Its three consumers (ngramJaccard's candidate ids and pair
+    // explode, and `flagged`) each read that one pair-keyed exchange,
+    // which Spark plans once and reuses (`ReusedExchange`).
     val cand = Dedup.lshCandidatePairs(
       Dedup.lshBandKeys(d, "doc_id", col("text"), k = 8,
         numHashes = 8, rowsPerBand = 4), "doc_id")
@@ -386,11 +376,9 @@ object QueriesAnalytics {
     val planted = d.select(col("doc_id").as("doc_a"))
       .join(d.select((col("doc_id") - 1).as("doc_a"), col("doc_id").as("doc_b")), "doc_a")
       .select(col("doc_a"), col("doc_b"), lit(false).as("lsh_cand"))
-    val universe = graft.core.CacheRegistry.register(
-      planted.unionByName(cand)
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(max(col("lsh_cand")).as("lsh_cand"))
-        .persist(lvl))
+    val universe = planted.unionByName(cand)
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(max(col("lsh_cand")).as("lsh_cand"))
     val jac = Dedup.ngramJaccard(universe, d, "doc_id", col("text"), k = 8)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("uni"))
     val flagged = universe

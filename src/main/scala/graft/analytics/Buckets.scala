@@ -15,44 +15,33 @@ object Buckets {
     * as one, never as O(n²) pairs. Bounds worst-case expansion to
     * maxBucket²/2 per bucket at any corpus size.
     *
+    * No pin: both sides of the bucket self-join sit above the bucket-size
+    * window's one (band, band_key) exchange, which Spark plans once and
+    * reads twice as a `ReusedExchange`, so the band-key pipeline below it
+    * (the MinHash or SimHash signatures) runs once. The join is a merge
+    * join: the window's output is already partitioned and sorted on the
+    * join key, so it needs no exchange or sort of its own, where a
+    * broadcast join would run the window again for its build side and
+    * ship those rows through the driver. A cached `banded` loses the
+    * reuse: adaptive execution gives each side its own cached scan stage,
+    * and the window exchange above it is planned twice.
+    *
     * @param banded (band, band_key, idCol [, carry...]) rows
     * @param carry  extra columns to carry onto both sides of each pair,
     *               emitted as `<name>_a` / `<name>_b`
     */
-  /** @param pin materialize the capped band rows once before the bucket
-    *             self-join (r19): the join references them twice, and
-    *             Catalyst plans the two sides as two full copies of the
-    *             upstream band-key pipeline (guide §7.2 duplicated
-    *             subtrees) — for the MinHash path that is the whole
-    *             shingle+signature computation executed twice (plan
-    *             audit: q_lsh_recall carried 14 minhashsignature nodes
-    *             before). Callers whose band-key side is CHEAPER than a
-    *             cache round-trip (the hyperplane embedding path: one
-    *             narrow projection per vector — measured 0.9→1.4 s
-    *             SLOWER pinned at sf0.1) pass pin=false and keep the
-    *             recompute.
-    */
   def cappedPairs(banded: DataFrame, idCol: String, maxBucket: Int,
                   outA: String, outB: String,
-                  carry: Seq[String] = Nil, pin: Boolean = true): DataFrame = {
+                  carry: Seq[String] = Nil): DataFrame = {
     val capped = banded
       .withColumn("_n", count(lit(1)).over(
         Window.partitionBy(col("band"), col("band_key"))))
       .filter(col("_n") <= maxBucket)
       .drop("_n")
-    // DISK_ONLY, not heap: band rows are corpus-proportional (numBands
-    // per doc/vector at any SF), and the r15/r17 lessons route
-    // corpus-sized caches to executor disk where they ride the page
-    // cache instead of evicting execution memory (dsirSelect's gram
-    // stream discipline). Registered for harness release per query.
-    val small =
-      if (pin) graft.core.CacheRegistry.register(
-        capped.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      else capped
     def side(suffix: String, outId: String) =
-      small.select((Seq(col("band"), col("band_key"), col(idCol).as(outId)) ++
+      capped.select((Seq(col("band"), col("band_key"), col(idCol).as(outId)) ++
         carry.map(c => col(c).as(s"$c$suffix"))): _*)
-    side("_a", outA).join(side("_b", outB), Seq("band", "band_key"))
+    side("_a", outA).hint("merge").join(side("_b", outB), Seq("band", "band_key"))
       .filter(col(outA) < col(outB))
       .select((Seq(col(outA), col(outB)) ++
         carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b")))): _*)

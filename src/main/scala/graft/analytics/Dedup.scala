@@ -172,7 +172,10 @@ object Dedup {
     * exchange, which Spark plans as a `ReusedExchange`. The bucket sizes
     * come from a window, not a `collect_list` per bucket: a window
     * streams a hot bucket through its partition, where a per-bucket list
-    * would hold all of its members in one aggregation buffer.
+    * would hold all of its members in one aggregation buffer. A
+    * `persist`ed `bandKeys` keeps the result but loses the reuse: adaptive
+    * execution gives each join side its own cached scan stage, so the key
+    * list, its broadcast and the sets are built once per side.
     *
     * Precondition: `docs` holds ONE row per id. Each row's shingle set is
     * built on its own ([[graft.functions.ShingleSet]]), so two rows
@@ -264,43 +267,46 @@ object Dedup {
     * (pair), not all-pairs. Jaccard returned in exact integer form
     * (inter, uni) plus the double ratio.
     *
+    * No pin: the sets are built once, below their own exchange, and both
+    * pair joins read that exchange (a `ReusedExchange`). `pairs` is read
+    * twice, by the candidate ids and by the first join; a `pairs` that ends
+    * in an exchange (the recall universe's pair-keyed aggregate) is built
+    * once and read through it. A cached `pairs` is read from the cache by
+    * each consumer instead (adaptive execution gives each its own cached
+    * scan stage): a second cache read, not a second pair build.
+    *
+    * Each doc's set array rides the joins once per pair it appears in,
+    * which is fine for the LINEAR pair sets this generic entry point
+    * serves (consecutive-id demo pairs, the sampled recall eval) but was
+    * ~600 GB of shuffle at sf100's 78M LSH candidates — the corpus-scale
+    * path is [[lshVerifiedPairs]], where sets move once per BAND instead.
+    *
     * Precondition: `docs` holds ONE row per id (sets are built per row by
     * [[graft.functions.ShingleSet]], not merged across rows that share an
     * id).
     */
   def ngramJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
                    text: Column, k: Int): DataFrame = {
-    // CANDIDATE-BOUNDED since r15: the shingle sets are built only
-    // over docs that appear in `pairs` (broadcast semi join — the id set
-    // is <= 2x|pairs|), so non-candidate docs never leave their scan.
-    // NOTE the per-pair shape that remains: each doc's set array rides
-    // the joins once per pair it appears in, which is fine for the
-    // LINEAR pair sets this generic entry point serves (consecutive-id
-    // demo pairs, the sampled recall eval) but became ~600 GB of shuffle
-    // at sf100's 78M LSH candidates — the corpus-scale pipeline path is
-    // [[lshVerifiedPairs]], where sets move once per BAND instead.
-    // sets hold 8-byte hashes, not shingle strings (64-bit collisions are
-    // ~1e-8 at billions of shingles — acceptable for near-dup detection)
-    val candIds = pairs.select(col("doc_a").as(idCol))
-      .unionByName(pairs.select(col("doc_b").as(idCol)))
-      .distinct()
-    // MATERIALIZED once (r19): the pair join below consumes `docSets`
-    // twice (ss_a and ss_b sides), and unpinned Catalyst plans them as two
-    // independent copies of the whole set build. One DISK_ONLY
-    // materialization halves the shingle work at any scale; set arrays
-    // are candidate-doc-proportional, so they go to executor disk, not the
-    // heap (dsirSelect discipline).
-    val docSets = graft.core.CacheRegistry.register(Spread.byKey(
-        docs.join(broadcast(candIds), Seq(idCol), "left_semi"), col(idCol))
+    // candidate-bounded: only docs that appear in `pairs` build a set (a
+    // broadcast semi join, the id set is <= 2x|pairs|), so non-candidate
+    // docs never leave their scan. Sets hold 8-byte hashes, not shingle
+    // strings (64-bit collisions are ~1e-8 at billions of shingles).
+    val candIds = pairs.select(explode(array(col("doc_a"), col("doc_b"))).as(idCol)).distinct()
+    // spread before the kernel so it runs on every core; the repartition
+    // on the id after it is the exchange both joins read. The spread keys
+    // on a hash of the id, not the id: a spread already partitioned on the
+    // id would let the planner drop that repartition, and a shuffle join
+    // would then run the kernel once per side.
+    val sets = Spread.byKey(docs.join(broadcast(candIds), Seq(idCol), "left_semi"),
+        xxhash64(col(idCol)))
       .select(col(idCol), graft.functions.ShingleSet.column(text, k).as("ss"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val inter = pairs
-      .join(docSets.select(col(idCol).as("doc_a"), col("ss").as("ss_a")), "doc_a")
-      .join(docSets.select(col(idCol).as("doc_b"), col("ss").as("ss_b")), "doc_b")
+      .repartition(col(idCol))
+    pairs
+      .join(sets.select(col(idCol).as("doc_a"), col("ss").as("ss_a")), "doc_a")
+      .join(sets.select(col(idCol).as("doc_b"), col("ss").as("ss_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         graft.functions.SortedIntersectCount.column(col("ss_a"), col("ss_b")).as("inter"),
         size(col("ss_a")).cast("long").as("n_a"), size(col("ss_b")).cast("long").as("n_b"))
-    inter
       .filter(col("inter") > 0) // parity with join-based formulation
       .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
       .withColumn("jaccard", col("inter").cast("double") / col("uni"))
@@ -376,7 +382,7 @@ object Dedup {
     * bounded-driver-work stance as IVF's sampled k-means. The pair rows
     * are pinned once and read back by ONE bounded `take(rowCap + 1)`,
     * where rowCap is the smaller of
-    * `graft.cc.driverEdgeThreshold` (pair rows; bounds driver CPU) and the
+    * [[DriverEdgeThreshold]] (pair rows; bounds driver CPU) and the
     * rows [[graft.core.DriverBudget]] admits (bounds driver MEMORY — a
     * wide-key graph can sit under the count cap and still not fit). At
     * most rowCap rows back: union-find on the driver. More: the
@@ -389,6 +395,9 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
     components(pairs, maxIter).fold(_.labels, identity)
 
+  /** Pair rows at most labelled on the driver (see [[connectedComponents]]). */
+  private val DriverEdgeThreshold = 1000000L
+
   /** Observability for specs: whether the last connectedComponents or
     * dupClusters call took the driver union-find path (true) or the
     * distributed HashMin loop (false).
@@ -397,9 +406,11 @@ object Dedup {
 
   /** Pins `pairs`' (doc_a, doc_b) rows, then labels them on the driver
     * when at most rowCap rows come back (see [[connectedComponents]]),
-    * else with the distributed loop over the same pin.
+    * else with the distributed loop over the same pin. `driverRows`
+    * replaces [[DriverEdgeThreshold]], for specs that force either path.
     */
-  private def components(pairs: DataFrame, maxIter: Int): Either[DriverLabels, DataFrame] = {
+  private[graft] def components(pairs: DataFrame, maxIter: Int = 20,
+                                driverRows: Long = DriverEdgeThreshold): Either[DriverLabels, DataFrame] = {
     val spark = pairs.sparkSession
     val pairRows = pairs.select(col("doc_a"), col("doc_b"))
     // the pin is the pair query's own result RDD, so the bounded take
@@ -407,12 +418,10 @@ object Dedup {
     // take one job to build the cache and another to read it)
     val pin = pairRows.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val thresholdRows = sys.props.get("graft.cc.driverEdgeThreshold")
-        .map(_.toLong).getOrElse(1000000L)
       // each pair row becomes two directed edges on the driver
       val budgetRows = graft.core.DriverBudget.edgesAdmitted(
         spark.createDataFrame(pin, pairRows.schema), "doc_a", "doc_b") / 2
-      val rowCap = math.min(math.min(thresholdRows, budgetRows), Int.MaxValue - 1L).toInt
+      val rowCap = math.min(math.min(driverRows, budgetRows), Int.MaxValue - 1L).toInt
       val rows = pin.take(rowCap + 1)
       lastPathDriver = rows.length <= rowCap
       if (lastPathDriver) Left(new DriverLabels(spark, pairRows.schema("doc_a").dataType, rows))
@@ -566,7 +575,7 @@ object Dedup {
     * key type's natural ordering — bit-identical to what HashMin
     * converges to.
     */
-  private final class DriverLabels(spark: SparkSession, keyType: DataType, rows: Array[Row]) {
+  private[graft] final class DriverLabels(spark: SparkSession, keyType: DataType, rows: Array[Row]) {
     /** Every node → its component's least node. */
     private val component: java.util.HashMap[Any, Any] = {
       val parent = new java.util.HashMap[Any, Any]()
@@ -629,8 +638,10 @@ object Dedup {
     * On the driver path the summary is built where the labels are, with
     * no further job.
     */
-  def dupClusters(pairs: DataFrame): DataFrame =
-    components(pairs, maxIter = 20).fold(_.clusters, _
+  def dupClusters(pairs: DataFrame): DataFrame = clusters(components(pairs))
+
+  private[graft] def clusters(labelled: Either[DriverLabels, DataFrame]): DataFrame =
+    labelled.fold(_.clusters, _
       .groupBy(col("component"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id")))
 }

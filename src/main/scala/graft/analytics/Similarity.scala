@@ -123,13 +123,7 @@ object Similarity {
     */
   def neardupCandidatePairs(bandBuckets: DataFrame, idCol: String,
                             maxBucket: Int): DataFrame =
-    // pin=false: the hyperplane band-key side is one narrow projection
-    // per vector — recomputing it for the self-join's second side is
-    // cheaper than a cache round-trip (r19 A/B at sf0.1: pinned was
-    // 0.9→1.4 s slower on q_embed_neardup; the MinHash path, whose band
-    // side embeds the full shingle+signature pipeline, keeps the pin).
-    Buckets.cappedPairs(bandBuckets, idCol, maxBucket, "vec_a", "vec_b",
-      pin = false)
+    Buckets.cappedPairs(bandBuckets, idCol, maxBucket, "vec_a", "vec_b")
 
   /** ANN search: restrict brute force to the query vector's bucket. */
   def annTopK(embeddings: DataFrame, idCol: String, vec: Column, dims: Int,

@@ -48,6 +48,8 @@ private[functions] final class ShingleWindows(text: UTF8String, k: Int) {
 /** A document's distinct shingle hashes, sorted ascending: the set
   * [[SortedIntersectCount]] intersects in the n-gram Jaccard verify
   * ([[graft.analytics.Dedup.lshVerifiedPairs]], [[graft.analytics.Dedup.ngramJaccard]]).
+  * Both build each candidate document's set once per query, with no pin
+  * (DedupPlanSpec checks for one node evaluating it per plan).
   *
   * Bit-identical to the composed
   * `sort_array(collect_set(xxhash64(shingle)))` over

@@ -36,7 +36,7 @@ object PlansDump {
     "q_kmv_distinct" ->
       "KMV distinct sketch: the bottom-k cap plans as WindowGroupLimit with a PARTIAL stage below the group exchange (each task ships at most k=256 hashes per group), the distinct pre-pass map-side combines to the hash domain, the (k-1)*2^60 decimal estimator numerator constant-folds, and the 3-row exact anchor broadcasts back.",
     "q_ngram_jaccard" ->
-      "Exact set-similarity verify: each candidate doc's shingle set is built SORTED and distinct once, per row, by the shingleset kernel in a Project (no aggregate), and pinned DISK_ONLY so both join sides scan one InMemoryRelation; the per-pair |A∩B| is the codegen'd O(|a|+|b|) two-pointer merge graft_sorted_intersect_count, not an array_intersect hash-set rebuild per candidate pair.",
+      "Exact set-similarity verify: each candidate doc's shingle set is built SORTED and distinct once, per row, by the shingleset kernel in a Project (no aggregate) and with no pin; a repartition on doc_id after the kernel is the one exchange both pair joins read (the plan below is the one before execution, where that exchange still appears twice; the adaptive run reads the second as a ReusedExchange); the per-pair |A∩B| is the codegen'd O(|a|+|b|) two-pointer merge graft_sorted_intersect_count, not an array_intersect hash-set rebuild per candidate pair.",
     "q_optimal_segment" ->
       "Segmentation DP distributed by domain bounding: the bitmask fold (bit_or) and both walk HOFs run on the DISTINCT-WORD aggregate, the word->counts lookup joins back as a BroadcastHashJoin, and the corpus-side plan is exactly two scans (word counts out, doc reassembly back) — the DP itself never appears in a corpus-sized stage.")
 

@@ -87,7 +87,7 @@ class DedupSpec extends SparkSuite {
     // DISTRIBUTED path (threshold 0) — a graph this small would
     // otherwise take the driver union-find and leave the loop untested.
     val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val comp = forceDistributed { Dedup.connectedComponents(pairs).collect() }
+    val comp = forceDistributed(pairs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("component")).toMap
     assert(comp.size == 60)
     assert((1L to 60L).forall(comp(_) == 1L), "one component rooted at the min id")
@@ -107,10 +107,9 @@ class DedupSpec extends SparkSuite {
     assert(Dedup.ccRoundBound(20, 20000000000L) <= 100)
   }
 
-  private def forceDistributed[T](body: => T): T = {
-    System.setProperty("graft.cc.driverEdgeThreshold", "0")
-    try body finally System.clearProperty("graft.cc.driverEdgeThreshold")
-  }
+  /** Labels from the distributed loop: a driver row cap of 0 admits no pair. */
+  private def forceDistributed(pairs: org.apache.spark.sql.DataFrame) =
+    Dedup.components(pairs, driverRows = 0).fold(_.labels, identity)
 
   test("hybrid CC: driver union-find and distributed HashMin label identically") {
     // branchy graph with multiple components, merges arriving in
@@ -121,7 +120,7 @@ class DedupSpec extends SparkSuite {
       (100L, 101L), (5L, 7L), (2L, 9L)).toDF("doc_a", "doc_b")
     val viaDriver = Dedup.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaLoop = forceDistributed { Dedup.connectedComponents(pairs).collect() }
+    val viaLoop = forceDistributed(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaDriver == viaLoop, s"strategies disagree: ${viaDriver.diff(viaLoop)} vs ${viaLoop.diff(viaDriver)}")
     assert(viaDriver.filter(_._1 <= 9L).forall(_._2 == 1L))
@@ -134,7 +133,7 @@ class DedupSpec extends SparkSuite {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
       // the loop's checkpoint discipline is what's under test — force past
       // the driver shortcut
-      val comp = forceDistributed { Dedup.connectedComponents(pairs) }
+      val comp = forceDistributed(pairs)
       val got = comp.collect()
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("component")).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))

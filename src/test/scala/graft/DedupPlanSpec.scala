@@ -8,12 +8,14 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Dedup
-import graft.functions.{MinHashSignature, ShingleSet}
+import graft.functions.{MinHashSignature, ShingleSet, SimHash}
 
 /** The dedup pipeline as one query: `lshVerifiedPairs` references each
   * intermediate once (no pin, one MinHash and one set build, one bucket
   * exchange read by both join sides), and `dupClusters` summarises
-  * driver-path clusters where the labels are.
+  * driver-path clusters where the labels are. The other LSH pair builders
+  * (`lshCandidatePairs`, `simhashCandidatePairs`, `ngramJaccard`,
+  * `q_lsh_recall`) hold no pin either: each shared subtree runs once.
   */
 class DedupPlanSpec extends SparkSuite {
   import spark.implicits._
@@ -32,10 +34,24 @@ class DedupPlanSpec extends SparkSuite {
   private def evaluating(nodes: Seq[SparkPlan], cls: Class[_]): Seq[SparkPlan] =
     nodes.filter(_.expressions.exists(_.find(e => cls.isInstance(e)).isDefined))
 
+  /** Collects `df`, then asserts of its executed adaptive plan: no cached
+    * scan, exactly one node evaluating each of `kernels`, and a reused
+    * exchange (the shared subtree computed once, read by every consumer).
+    */
+  private def assertSharedOnce(df: DataFrame, kernels: Class[_]*): Unit = {
+    df.collect()
+    val nodes = expand(df.queryExecution.executedPlan)
+    val plan = nodes.head.toString.take(6000)
+    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
+    kernels.foreach(k => assert(evaluating(nodes, k).size == 1, s"${k.getSimpleName}: $plan"))
+    assert(nodes.exists(_.isInstanceOf[ReusedExchangeExec]), plan)
+  }
+
+  private def bandKeys(docs: DataFrame): DataFrame =
+    Dedup.lshBandKeys(docs, "doc_id", col("text"), k = 8, numHashes = 8, rowsPerBand = 4)
+
   private def verified(docs: DataFrame): DataFrame =
-    Dedup.lshVerifiedPairs(
-        Dedup.lshBandKeys(docs, "doc_id", col("text"), k = 8, numHashes = 8, rowsPerBand = 4),
-        docs, "doc_id", col("text"), k = 8)
+    Dedup.lshVerifiedPairs(bandKeys(docs), docs, "doc_id", col("text"), k = 8)
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"))
 
@@ -45,16 +61,54 @@ class DedupPlanSpec extends SparkSuite {
     assert(clusters.nonEmpty)
     assert(Dedup.lastPathDriver, "sf0.001's pairs fit the driver")
     assert(jobs <= 9, s"$jobs jobs")
-    // the verify query's executed adaptive plan
-    val v = verified(docs)
-    v.collect()
-    val nodes = expand(v.queryExecution.executedPlan)
-    val plan = nodes.head.toString.take(6000)
-    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
-    assert(evaluating(nodes, classOf[MinHashSignature]).size == 1, plan)
-    assert(evaluating(nodes, classOf[ShingleSet]).size == 1, plan)
     // both sides of the bucket self-join read one exchange
-    assert(nodes.exists(_.isInstanceOf[ReusedExchangeExec]), plan)
+    assertSharedOnce(verified(docs), classOf[MinHashSignature], classOf[ShingleSet])
+  }
+
+  test("lshCandidatePairs: no pin, one MinHash node, both join sides on one reused exchange") {
+    val docs = graft.core.Tables.documents(spark, sf0001)
+    assertSharedOnce(Dedup.lshCandidatePairs(bandKeys(docs), "doc_id"), classOf[MinHashSignature])
+  }
+
+  test("simhashCandidatePairs: no pin, one SimHash node, both join sides on one reused exchange") {
+    val docs = graft.core.Tables.documents(spark, sf0001)
+    val sigs = Dedup.simhashNative(docs, "doc_id", col("text"), bits = 16)
+    assertSharedOnce(Dedup.simhashCandidatePairs(sigs, "doc_id", bits = 16, maxDist = 3),
+      classOf[SimHash])
+  }
+
+  test("ngramJaccard: no pin, one set build, read by both pair joins through a reused exchange") {
+    val docs = graft.core.Tables.documents(spark, sf0001)
+    val pairs = docs.select(col("doc_id").as("doc_a"))
+      .join(docs.select((col("doc_id") - 1).as("doc_a"), col("doc_id").as("doc_b")), "doc_a")
+    assertSharedOnce(Dedup.ngramJaccard(pairs, docs, "doc_id", col("text"), k = 8),
+      classOf[ShingleSet])
+    // the shuffle-join plan of a corpus too large to broadcast
+    graft.core.SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assertSharedOnce(Dedup.ngramJaccard(pairs, docs, "doc_id", col("text"), k = 8),
+        classOf[ShingleSet])
+    }
+  }
+
+  test("q_lsh_recall: no pin, one MinHash and one set build, the universe read through reused exchanges") {
+    assertSharedOnce(QueriesAnalytics.lshRecall(spark, sf0001),
+      classOf[MinHashSignature], classOf[ShingleSet])
+  }
+
+  test("a persisted bandKeys yields the same pairs as the file-input run") {
+    val docs = graft.core.Tables.documents(spark, sf0001)
+    def rows(bk: DataFrame) = Dedup.lshVerifiedPairs(bk, docs, "doc_id", col("text"), k = 8)
+      .select("doc_a", "doc_b", "inter", "n_a", "n_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    def candidates(bk: DataFrame) = Dedup.lshCandidatePairs(bk, "doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val fromFile = rows(bandKeys(docs))
+    assert(fromFile.nonEmpty)
+    val cached = bandKeys(docs).persist()
+    try {
+      assert(rows(cached) == fromFile)
+      assert(candidates(cached) == candidates(bandKeys(docs)))
+    } finally cached.unpersist(blocking = true)
   }
 
   test("bucket edges: sizes 2 and maxBucket pair up, maxBucket + 1 does not, a two-band pair once") {
@@ -101,26 +155,25 @@ class DedupPlanSpec extends SparkSuite {
     assert(rows.sorted.toSeq == ref.sorted.toSeq)
   }
 
-  private def withThreshold[T](rows: Long)(body: => T): T = {
-    System.setProperty("graft.cc.driverEdgeThreshold", rows.toString)
-    try body finally System.clearProperty("graft.cc.driverEdgeThreshold")
-  }
+  /** Components of `pairs` with `rows` as the driver row cap. */
+  private def withThreshold(rows: Long)(pairs: DataFrame) = Dedup.components(pairs, driverRows = rows)
 
   test("CC threshold: rowCap rows take the driver, rowCap + 1 the distributed loop, same labels") {
     val pairs = Seq((7L, 3L), (3L, 9L), (9L, 1L), (50L, 40L), (40L, 60L), (100L, 101L))
       .toDF("doc_a", "doc_b")
     val n = pairs.count()
-    def labels() = Dedup.connectedComponents(pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val atCap = withThreshold(n)(labels())
+    def labels(rows: Long) = withThreshold(rows)(pairs).fold(_.labels, identity)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val atCap = labels(n)
     assert(Dedup.lastPathDriver, s"$n rows at rowCap $n: driver expected")
-    val overCap = withThreshold(n - 1)(labels())
+    val overCap = labels(n - 1)
     assert(!Dedup.lastPathDriver, s"$n rows at rowCap ${n - 1}: distributed expected")
     assert(atCap == overCap)
     assert(atCap == Set((1L, 1L), (3L, 1L), (7L, 1L), (9L, 1L),
       (40L, 40L), (50L, 40L), (60L, 40L), (100L, 100L), (101L, 100L)))
-    val clustersOverCap = withThreshold(n - 1)(Dedup.dupClusters(pairs).collect())
+    val clustersOverCap = Dedup.clusters(withThreshold(n - 1)(pairs)).collect()
     assert(!Dedup.lastPathDriver)
-    val clustersAtCap = withThreshold(n)(Dedup.dupClusters(pairs).collect())
+    val clustersAtCap = Dedup.clusters(withThreshold(n)(pairs)).collect()
     assert(Dedup.lastPathDriver)
     assert(clustersAtCap.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
       clustersOverCap.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)

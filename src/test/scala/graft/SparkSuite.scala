@@ -24,11 +24,12 @@ abstract class SparkSuite extends AnyFunSuite
   lazy val spark: SparkSession = SharedSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
 
-  // Library-level pins (cappedPairs, ngramJaccard, …)
-  // register persisted handles at plan-construction time and rely on the
-  // harness calling releaseAll after each query; test sessions get the
-  // same hygiene here so a long suite run doesn't accumulate dead cached
-  // handles until JVM exit (r19 ADVICE item 4).
+  // Catalog queries that pin an intermediate (the CacheRegistry sites in
+  // QueriesTraining, QueriesExtra and QueriesQuality) register
+  // persisted handles at plan-construction time and rely on the harness
+  // calling releaseAll after each query; test sessions get the same
+  // hygiene here so a long suite run doesn't accumulate dead cached
+  // handles until JVM exit.
   override def afterAll(): Unit = {
     try graft.core.CacheRegistry.releaseAll() finally super.afterAll()
   }

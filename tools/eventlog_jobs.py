@@ -12,6 +12,14 @@ stages and tasks it ran (skipped stages and their tasks are not counted)
 and its call site. A footer sums jobs, tasks, job time and gap time over
 the printed range.
 
+Then one line per SQL execution: its id, its jobs, its duration, the
+number of adaptive plan updates and, in its final plan (the last
+SparkListenerSQLAdaptiveExecutionUpdate, else the plan it started with),
+the InMemoryTableScan nodes (reads of a persisted Dataset) and the
+ReusedExchange nodes (an exchange computed once and read again), then its
+description. A reused exchange's subtree is its original's, so it is not
+counted twice. The job range does not apply to these lines.
+
 Then, for a log with streaming queries, one line per micro-batch from its
 QueryProgressEvent, in the order the batches ended: query run id, batch
 id, input rows over its sources, the sink's output rows (-1 for a sink
@@ -42,11 +50,25 @@ def read(path):
     ran = set()     # stage ids that were submitted
     tasks = {}      # stage id -> finished task count
     batches = []    # micro-batch progress, in the order the batches ended
+    sqls = {}       # SQL execution id -> dict
     for line in lines(path):
         ev = json.loads(line)
         kind = ev.get("Event") or ""
         if kind.endswith("StreamingQueryListener$QueryProgressEvent"):
             batches.append(ev["progress"])
+        elif kind.endswith("SparkListenerSQLExecutionStart"):
+            sqls[ev["executionId"]] = {
+                "start": ev.get("time"), "end": None, "updates": 0,
+                "plan": ev.get("sparkPlanInfo") or {},
+                "desc": (ev.get("description") or "").split("\n")[0][:60],
+            }
+        elif kind.endswith("SparkListenerSQLAdaptiveExecutionUpdate"):
+            if ev["executionId"] in sqls:
+                sqls[ev["executionId"]]["updates"] += 1
+                sqls[ev["executionId"]]["plan"] = ev.get("sparkPlanInfo") or {}
+        elif kind.endswith("SparkListenerSQLExecutionEnd"):
+            if ev["executionId"] in sqls:
+                sqls[ev["executionId"]]["end"] = ev.get("time")
         elif kind == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
             stages = ev.get("Stage Infos") or []
@@ -72,7 +94,38 @@ def read(path):
         elif kind == "SparkListenerTaskEnd":
             s = ev.get("Stage ID")
             tasks[s] = tasks.get(s, 0) + 1
-    return jobs, ran, tasks, batches
+    return jobs, ran, tasks, batches, sqls
+
+
+def count_nodes(plan, names):
+    """Nodes of a sparkPlanInfo tree per name, not descending below a
+    ReusedExchange (its child is the original exchange, counted where it
+    runs)."""
+    counts = dict.fromkeys(names, 0)
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.get("nodeName", "")
+        if name in counts:
+            counts[name] += 1
+        if name != "ReusedExchange":
+            stack.extend(node.get("children") or [])
+    return counts
+
+
+def print_sqls(sqls, jobs):
+    if not sqls:
+        return
+    n_jobs = {}
+    for job in jobs.values():
+        n_jobs[job["sql"]] = n_jobs.get(job["sql"], 0) + 1
+    print(f"\n{'sql':>5} {'jobs':>5} {'dur_ms':>7} {'updates':>7} {'cache_scans':>11} {'reused':>6}  description")
+    for i in sorted(sqls):
+        q = sqls[i]
+        dur = q["end"] - q["start"] if q["end"] is not None and q["start"] is not None else ""
+        c = count_nodes(q["plan"], ("InMemoryTableScan", "ReusedExchange"))
+        print(f"{i:>5} {n_jobs.get(str(i), 0):>5} {dur:>7} {q['updates']:>7} "
+              f"{c['InMemoryTableScan']:>11} {c['ReusedExchange']:>6}  {q['desc']}")
 
 
 def phase_cells(values):
@@ -103,7 +156,7 @@ def print_batches(batches):
 def main(argv):
     if len(argv) < 2:
         sys.exit(__doc__)
-    jobs, ran, tasks, batches = read(argv[1])
+    jobs, ran, tasks, batches, sqls = read(argv[1])
     ids = sorted(jobs)
     lo = int(argv[2]) if len(argv) > 2 else (ids[0] if ids else 0)
     hi = int(argv[3]) if len(argv) > 3 else (ids[-1] if ids else -1)
@@ -127,6 +180,7 @@ def main(argv):
         print(f"{j:>5} {job['sql']:>5} {'' if gap is None else gap:>7} "
               f"{'' if dur is None else dur:>7} {len(stages):>6} {t:>6}  {job['site']}")
     print(f"{n} jobs, {n_tasks} tasks, {busy} ms in jobs, {idle} ms between them")
+    print_sqls(sqls, jobs)
     print_batches(batches)
 
 
